@@ -1,6 +1,93 @@
 package graft
 import org.apache.spark.sql.SparkSession
 object Bench {
+
+  /** One pass over the suite: wall seconds of every entry that completed
+    * and the reason of every entry that threw. */
+  final case class Pass(times: Map[String, Double], failed: Map[String, String])
+
+  /** Time each entry in order. A throwing entry is reported on stderr
+    * and booked as failed, never timed: the elapsed time of a failure
+    * measures how fast it failed, not the entry. */
+  def timePass(entries: Seq[(String, () => Unit)]): Pass = {
+    val times = Map.newBuilder[String, Double]
+    val failed = Map.newBuilder[String, String]
+    entries.foreach { case (name, run) =>
+      // untimed full GC between entries (round-15 de-noise): a query's
+      // measurement must not pay the previous query's garbage — without
+      // this, collection cost MIGRATES between entries as the suite
+      // grows, which is exactly the +27% shared-entry drift mechanism
+      // the r14 suite-length jump exposed (78 untouched entries drifted
+      // together when 25 entries joined the suite)
+      System.gc()
+      val t0 = System.nanoTime()
+      try {
+        run()
+        times += name -> (System.nanoTime() - t0) / 1e9
+      } catch {
+        case e: Throwable =>
+          val why = s"${e.getClass.getName}: ${e.getMessage}"
+            .linesIterator.nextOption().getOrElse("").take(300)
+          System.err.println(s"[bench] FAILED $name: $why")
+          failed += name -> why
+      }
+    }
+    Pass(times.result(), failed.result())
+  }
+
+  private[graft] def fmt(v: Double, dec: Int): String = {
+    // trim trailing zeros ("1.20"→"1.2", "2.00"→"2") — still valid
+    // JSON numbers, and ~35% of entries land on a trimmable value,
+    // which keeps the higher precision tier under the length budget
+    val s = s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
+    if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
+    else s
+  }
+
+  private[graft] def quote(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The JSON report line: the suite total, per-entry seconds and the
+    * names of the entries that failed. */
+  private[graft] def line(dec: Int, total: Double, rs: Map[String, Double],
+      failed: Seq[String], calib: Double, calibMed: Double,
+      sfName: String): String = {
+    val qs = rs.map { case (k, v) => quote(k) + ":" + fmt(v, dec) }
+      .mkString("{", ",", "}")
+    val fs = failed.sorted.map(quote).mkString("[", ",", "]")
+    s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","calib":[${fmt(calib, 2)},${fmt(calibMed, 2)}],"queries":$qs,"failed":$fs,"sf":"$sfName"}"""
+  }
+
+  /** [[line]] under the short-line guard: the driver keeps only a
+    * ~2000-char stdout tail and sbt's trailing "[success] ..." line
+    * (~75 chars) eats into it, so the JSON line must stay well under
+    * ~1900 chars or its head gets clipped and parses as null (round 4
+    * failure mode). 1895 + the ~76-char trailer + newlines stays inside
+    * the 2000-char window with ~25 chars margin. Tiers: 2-dec all, 1-dec
+    * all, then 1-dec of the MOST EXPENSIVE entries that fit — sub-0.2 s
+    * entries carry no comparative signal, so precision on the movers
+    * beats integer seconds on everything. The total always covers every
+    * completed entry; failed names are dropped last. */
+  private[graft] def report(results: Map[String, Double],
+      failed: Seq[String], calib: Double, calibMed: Double,
+      sfName: String): String = {
+    val total = results.values.sum
+    def fit(dec: Int, rs: Map[String, Double], fs: Seq[String]) =
+      Some(line(dec, total, rs, fs, calib, calibMed, sfName))
+        .filter(_.length <= 1895)
+    val byCost = results.toSeq.sortBy { case (k, v) => (-v, k) }
+    Seq(2, 1).view.flatMap(fit(_, results, failed)).headOption
+      .orElse((byCost.length to 0 by -1).view
+        .flatMap(n => fit(1, byCost.take(n).toMap, failed)).headOption)
+      .orElse((failed.length to 0 by -1).view
+        .flatMap(n => fit(1, Map.empty, failed.sorted.take(n))).headOption)
+      .getOrElse(line(1, total, Map.empty, Nil, calib, calibMed, sfName))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -87,18 +174,9 @@ object Bench {
         lm ++ rest
       } else base
     }
-    def pass(): Map[String, Double] = ordered.map { case (name, fn) =>
-      // untimed full GC between entries (round-15 de-noise): a query's
-      // measurement must not pay the previous query's garbage — without
-      // this, collection cost MIGRATES between entries as the suite
-      // grows, which is exactly the +27% shared-entry drift mechanism
-      // the r14 suite-length jump exposed (78 untouched entries drifted
-      // together when 25 entries joined the suite)
-      System.gc()
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      name -> (System.nanoTime() - t0) / 1e9
-    }.toMap
+    val runs = ordered.map { case (name, fn) =>
+      name -> (() => { fn(spark, sfDir).count(); () }) }
+    def pass(): Pass = timePass(runs)
     // host-speed calibration probe (round-15 de-noise; ESTIMATOR AND
     // VALIDITY RULE fixed round 17): a FIXED pure-CPU job — no IO, no
     // shuffle, size-invariant across rounds — timed 3× before and 3×
@@ -163,60 +241,35 @@ object Bench {
     val calibBrackets = (calibPre ++ calibPost).sorted
     val calib = calibBrackets.head
     val calibMed = calibBrackets(calibBrackets.size / 2)
-    val results = passes.reduce((a, b) =>
-      a.map { case (name, t) => name -> math.min(t, b(name)) })
-    // Short-line guard: the driver keeps only a ~2000-char stdout tail and
-    // sbt's trailing "[success] ..." line (~75 chars) eats into it, so the
-    // JSON line must stay well under ~1900 chars or its head gets clipped
-    // and parses as null (round 4 failure mode). 10 ms precision already
-    // exceeds run noise; if the query count grows the line past the budget,
-    // degrade per-query precision to 0.1 s rather than ever exceed it.
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    // an entry that threw in any timed pass is reported as failed, and
+    // none of its passes is timed
+    val failed = passes.flatMap(_.failed).toMap
+    val results = passes.head.times.keys.filterNot(failed.contains)
+      .map(name => name -> passes.map(_.times(name)).min).toMap
     val sfName = new java.io.File(sfDir).getName
-    def fmt(v: Double, dec: Int): String = {
-      // trim trailing zeros ("1.20"→"1.2", "2.00"→"2") — still valid
-      // JSON numbers, and ~35% of entries land on a trimmable value,
-      // which keeps the higher precision tier under the length budget
-      val s = s"%.${dec}f".formatLocal(java.util.Locale.ROOT, v)
-      if (s.contains('.')) s.reverse.dropWhile(_ == '0').stripPrefix(".").reverse
-      else s
-    }
-    def line(dec: Int, rs: Map[String, Double]): String = {
-      val qs = rs.map { case (k, v) => "\"" + k + "\":" + fmt(v, dec) }
-        .mkString("{", ",", "}")
-      s"""{"metric":"total","value":${fmt(total, 2)},"unit":"sec","calib":[${fmt(calib, 2)},${fmt(calibMed, 2)}],"queries":$qs,"sf":"$sfName"}"""
-    }
-    // 1895 + the ~76-char sbt "[success] ..." trailer + newlines stays
-    // inside the 2000-char window with ~25 chars margin. Tiers: 2-dec
-    // all, 1-dec all, then 1-dec of the MOST EXPENSIVE queries that fit
-    // — sub-0.2 s entries carry no comparative signal, so precision on
-    // the movers beats integer seconds on everything.
-    val out = Seq(2, 1).map(line(_, results)).find(_.length <= 1895)
-      .getOrElse {
-        val byCost = results.toSeq.sortBy { case (k, v) => (-v, k) }
-        val keep = (byCost.length to 1 by -1).view
-          .map(n => line(1, byCost.take(n).toMap))
-          .find(_.length <= 1895)
-        keep.getOrElse(line(1, Map.empty))
-      }
+    val out = report(results, failed.keys.toSeq, calib, calibMed, sfName)
     // the driver's stdout-tail window may drop the cheapest per-query
     // entries from the one-line report above — persist the COMPLETE
     // 2-decimal map (plus both raw passes) to disk so no per-query datum
     // is ever lost to the tail budget
     try {
-      val full = line(2, results)
+      val full = line(2, results.values.sum, results, failed.keys.toSeq,
+        calib, calibMed, sfName)
       val passJson = passes.zipWithIndex.map { case (p, i) =>
-        val ps = p.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + fmt(v, 2) }
+        val ps = p.times.toSeq.sortBy(_._1)
+          .map { case (k, v) => quote(k) + ":" + fmt(v, 2) }
           .mkString("{", ",", "}")
         s""""pass${i + 1}":$ps"""
       }.mkString(",")
+      val failedJson = failed.toSeq.sortBy(_._1)
+        .map { case (k, why) => quote(k) + ":" + quote(why) }
+        .mkString("{", ",", "}")
       val calibJson = (calibPre ++ calibPost)
         .map(fmt(_, 3)).mkString("[", ",", "]")
       val dir = java.nio.file.Paths.get("target")
       java.nio.file.Files.createDirectories(dir)
       java.nio.file.Files.write(dir.resolve("bench_full.json"),
-        s"""{"report":$full,"calib":$calibJson,$passJson}\n"""
+        s"""{"report":$full,"calib":$calibJson,"failed":$failedJson,$passJson}\n"""
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case _: Throwable => () }
     // quality artifact for the approximate entries (recall@10 vs exact,

@@ -51,8 +51,10 @@ object Explain {
       if (warm) SparkEntry.queries(name)(spark, sfDir).count()
       val walls = (1 to reps).map { _ =>
         // mirror Bench's timed-pass protocol (round 18): entry-result
-        // caches are released before every timed invocation, so
-        // standalone A/B numbers and suite numbers price the same work
+        // caches are released before every timed invocation. Within one
+        // Bench pass an entry can still hit transient caches an earlier
+        // entry of the same pass built, so a standalone number can price
+        // more work than the same entry's suite number
         graft.core.Caches.clearTransient(spark)
         System.gc()
         val t0 = System.nanoTime()

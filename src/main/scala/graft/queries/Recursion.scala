@@ -86,21 +86,22 @@ object Recursion {
     * 32-core wall at 2.8× its 8-core wall on identical data (pure
     * scheduling cost). At sf0.1 this derives 1; at a 100 TB input
     * bytes/64 MB saturates the cap and the session's cluster-tuned
-    * value wins. */
+    * value wins. An input whose size cannot be read (missing path,
+    * unreadable filesystem) gets the cap: sizing fails safe, never to a
+    * single partition for an input of unknown size. */
   private[queries] def recursionParts(s: SparkSession, dir: String,
       table: String): Int = {
+    val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
     // Hadoop content summary, not Files.size: a production table is a
     // DIRECTORY of part files (so is the 10x scale corpus), and the
     // flat-file size of a directory entry would derive 1 partition for
     // an arbitrarily large input
-    val bytes =
-      try {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-        p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .getContentSummary(p).getLength
-      } catch { case _: Throwable => 0L }
-    val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
-    math.max(1, math.min(cap, (bytes / (64L * 1024 * 1024)).toInt + 1))
+    try {
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
+      val bytes = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+        .getContentSummary(p).getLength
+      math.max(1, math.min(cap, (bytes / (64L * 1024 * 1024)).toInt + 1))
+    } catch { case scala.util.control.NonFatal(_) => cap }
   }
 
   /** Register the tables an entry's SQL references under stable view

@@ -88,13 +88,14 @@ object StreamDedup {
     * bands, sh, fps, post — distinct directories, all derived from the
     * batch's cached kernel frames), and running them as sequential
     * driver actions leaves the cluster idle through each job's tail and
-    * commit. The pool submits them concurrently; nothing reads these
-    * dirs until the NEXT trigger (the admitted write — the only
-    * consumer-ordered action — has already completed when these fire),
-    * and an at-least-once replay overwrites the same batch-keyed dirs
-    * whatever order the writes landed in, so exactly-once semantics are
-    * unchanged. Sized well below the core count: 2-3 jobs in flight
-    * fills the tail without fighting the next trigger. */
+    * commit. The pool submits them concurrently, the admitted write in
+    * the same round as the state writes: nothing reads the admitted
+    * output or any state dir until the NEXT trigger, [[writeAll]] waits
+    * for every write before the trigger commits, and an at-least-once
+    * replay overwrites the same batch-keyed dirs whatever order the
+    * writes landed in, so exactly-once semantics are unchanged. Sized
+    * well below the core count: 2-3 jobs in flight fills the tail
+    * without fighting the next trigger. */
   private lazy val writePool = java.util.concurrent.Executors.newFixedThreadPool(
     4,
     (r: Runnable) => {

@@ -175,6 +175,17 @@ class RecursionSpec extends AnyFunSuite {
       s"expected the UNION-in-recursion rejection, got: ${e.getCondition} / ${e.getMessage}")
   }
 
+  test("recursion sizing: an unreadable input gets the session cap, " +
+      "not 1 partition") {
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(cap > 1, "the check needs a session cap above 1")
+    assert(Recursion.recursionParts(spark, dir, "no_such_table") === cap)
+    assert(Recursion.recursionParts(spark, s"$dir/no_such_dir", "orders") ===
+      cap)
+    // a readable sf0.001 input is far below 64 MB: one partition
+    assert(Recursion.recursionParts(spark, dir, "orders") === 1)
+  }
+
   test("the recursion executes through UnionLoop, one join per level") {
     val plan = Recursion.q_recursive_tree.run(spark, dir)
       .queryExecution.executedPlan.toString
