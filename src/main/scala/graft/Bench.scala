@@ -160,21 +160,7 @@ object Bench {
       n.startsWith("q_fuzzsd_") || n.startsWith("q_fuzzst")
     val benched = SparkEntry.queries.view
       .filterKeys(n => !benchExclude(n) && !fuzzReplay(n)).toMap
-    // measurement knob (round-11 LM suite-ordering experiment): with
-    // SPARK_GRAFT_BENCH_ORDER=lmfirst the LM entry runs FIRST in each
-    // pass (near-empty sf0.1 block manager) instead of at its hash-order
-    // position after ~60 cache-building queries — one bench run each way
-    // attributes the LM entry's standalone-vs-in-suite gap to suite
-    // cache pressure (or rules it out). Default order is unchanged.
-    val ordered: Seq[(String, (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame)] = {
-      val base = benched.toSeq
-      if (sys.env.get("SPARK_GRAFT_BENCH_ORDER").contains("lmfirst")) {
-        val (lm, rest) = base.partition(_._1 == "q_lm_cross_entropy")
-        lm ++ rest
-      } else base
-    }
-    val runs = ordered.map { case (name, fn) =>
+    val runs = benched.toSeq.map { case (name, fn) =>
       name -> (() => { fn(spark, sfDir).count(); () }) }
     def pass(): Pass = timePass(runs)
     // host-speed calibration probe (round-15 de-noise; ESTIMATOR AND

@@ -1,7 +1,7 @@
 package graft
 
 import graft.core.Tables
-import graft.index.{BqIndex, IvfBq, IvfIndex, IvfPq, IvfSq}
+import graft.index.IndexKinds
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -42,15 +42,17 @@ object RecallCurve {
 
     val shortlists = Seq(50, 100, 200, 400, 800)
     val rows = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int, Double)]
+    def build(kind: String, params: IndexKinds.Params) =
+      IndexKinds.kinds(kind).build(e, "vec_id", "embedding", params)
 
-    val bq = BqIndex.build(e, "vec_id", "embedding")
+    val bq = build("bq", Map.empty)
     shortlists.foreach { sl =>
       val r = RecallReport.recallOfDf(
-        bq.searchRerank(queries, "qid", "qv", k, sl, e, "embedding"), exact)
+        bq.searchRerank(queries, "qid", "qv", k, 0, sl, e, "embedding"), exact)
       rows += (("bq", 0, sl, r))
     }
 
-    val ivfbq = IvfBq.build(e, "vec_id", "embedding", kCoarse = 8)
+    val ivfbq = build("ivfbq", Map("kCoarse" -> "8"))
     Seq(4, 6, 7, 8).foreach { np =>
       shortlists.foreach { sl =>
         val r = RecallReport.recallOfDf(
@@ -63,19 +65,20 @@ object RecallCurve {
     // IVF nprobe curve (exact ranks inside probed clusters — recall is
     // governed purely by how many posting lists the probe touches), plus
     // the compressed IVF siblings at their entry shortlists
-    val ivf = IvfIndex.build(e, "vec_id", "embedding", k = 8)
+    val ivf = build("ivf", Map("k" -> "8"))
     (3 to 8).foreach { np =>
       val r = RecallReport.recallOfDf(
-        ivf.search(queries, "qid", "qv", k, nprobe = np), exact)
+        ivf.search(queries, "qid", "qv", k, np), exact)
       rows += (("ivf", np, 0, r))
     }
-    val ivfpq = IvfPq.build(e, "vec_id", "embedding", kCoarse = 8, m = 16, ksub = 16)
+    val ivfpq = build("ivfpq",
+      Map("kCoarse" -> "8", "m" -> "16", "ksub" -> "16"))
     (3 to 8).foreach { np =>
       val r = RecallReport.recallOfDf(
         ivfpq.searchRerank(queries, "qid", "qv", k, np, 100, e, "embedding"), exact)
       rows += (("ivfpq", np, 100, r))
     }
-    val ivfsq = IvfSq.build(e, "vec_id", "embedding", kCoarse = 8)
+    val ivfsq = build("ivfsq", Map("kCoarse" -> "8"))
     (3 to 8).foreach { np =>
       val r = RecallReport.recallOfDf(
         ivfsq.searchRerank(queries, "qid", "qv", k, np, 50, e, "embedding"), exact)

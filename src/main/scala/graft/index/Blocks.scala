@@ -2,8 +2,8 @@ package graft.index
 
 import org.apache.spark.sql.SparkSession
 
-/** Persisted-index metadata + block-append conventions shared by the
-  * six-index tier.
+/** Persisted-index metadata + block-append conventions shared by every
+  * index kind ([[IndexKinds]]).
   *
   * Layout: every saved index is a directory of parquet tables (quantizer
   * metadata coalesced to one file; the codes/assignment table

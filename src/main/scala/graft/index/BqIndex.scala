@@ -1,41 +1,24 @@
 package graft.index
 
+import graft.functions.VectorF
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** BQ (binary-quantization) ANN index — the 1-bit member of the
-  * compression tier (64x): every vector is stored as ceil(dim/64) longs
-  * of per-dimension threshold sign bits, the modern "binary sketch +
-  * exact rerank" serving layout (the SPANN/RaBitQ-family 1-bit tier; the
-  * reference stores raw float32, radient/tasks/sinks/local/gann.py:196-216).
+  * compression tier ([[Quantized]] has the tier table): every vector is
+  * stored as ceil(dim/64) longs of per-dimension threshold sign bits,
+  * the "binary sketch + exact rerank" serving layout (the
+  * SPANN/RaBitQ-family 1-bit tier; the reference stores raw float32,
+  * radient/tasks/sinks/local/gann.py:196-216).
   *
-  * Thresholds are the per-dimension MEANS of a spread fit sample
-  * ([[IvfIndex.hashSample]]) — sign-of-centered-value splits each
-  * dimension near its median mass, where raw sign bits waste whole
-  * dimensions on biased data. Encode is one narrow pass; the codes table
-  * is the only distributed state.
-  *
-  * Search: encode the query once against the broadcast thresholds, rank
-  * by Hamming distance (XOR + popcount over the packed longs — codegen
-  * bit_count; the word fold is over dim/64 elements, e.g. ONE for 64-d)
-  * through the bounded-heap [[graft.functions.TopKAgg]], then exact
-  * rerank of the shortlist against the raw vectors by id equi-join —
-  * the same two-stage shape as [[PqIndex.Model.searchRerank]].
-  *
-  * Scale: thresholds are dim doubles broadcast; codes are 64x smaller
-  * than the vectors; the heap ships ≤k rows per partition per query;
-  * the rerank reads shortlist·|queries| raw rows by id. Inserts append
-  * against FROZEN thresholds through [[Compact.append]] like the other
-  * three indexes.
+  * Thresholds are the per-dimension MEANS of a spread fit sample —
+  * sign-of-centered-value splits each dimension near its median mass,
+  * where raw sign bits waste whole dimensions on biased data. Search
+  * sign-codes the query once and ranks by Hamming distance (the
+  * codegen'd [[graft.functions.HammingWords]] XOR+POPCNT over the
+  * packed words); the shortlist boundary sits in a heavy tie band, so
+  * serve through `searchRerank` with a deep shortlist.
   */
-object BqIndex {
-
-  /** Σ_w popcount(a_w xor b_w) over the packed signature words — the
-    * codegen'd [[graft.functions.HammingWords]] kernel (primitive
-    * XOR+POPCNT loop inside whole-stage codegen; an aggregate∘zip_with
-    * fold would dispatch an interpreted lambda per word). */
-  private def hamming(a: Column, b: Column): Column =
-    graft.functions.VectorF.hammingWords(a, b)
+object BqIndex extends Quantized.Family {
 
   private[index] def encodeOne(v: IndexedSeq[Double],
       thresholds: Array[Double]): Array[Long] = {
@@ -48,116 +31,55 @@ object BqIndex {
     words
   }
 
+  /** Threshold sign codes, queries coded alike, Hamming distance.
+    * `persisted = false` for IVF-BQ, whose zero thresholds are implied. */
+  private[index] final case class Codec(thresholds: Array[Double],
+      persisted: Boolean = true) extends Quantized.Codec[Seq[Long], Seq[Long]] {
+    def codeCol = "sig"
+    def queryCol = "qsig"
+    def encode(v: IndexedSeq[Double]): Seq[Long] = encodeOne(v, thresholds).toSeq
+    def query(v: IndexedSeq[Double]): Seq[Long] = encode(v)
+    def dist(code: Column, q: Column): Column =
+      VectorF.hammingWords(code, q).cast("double")
+    def write(spark: SparkSession, path: String): Unit =
+      if (persisted) {
+        import spark.implicits._
+        Quantized.writeTable(thresholds.toSeq.zipWithIndex
+          .map { case (t, i) => (i, t) }.toDF("dim", "threshold"),
+          s"$path/thresholds")
+      }
+  }
+
+  private[index] object Codec {
+    def read(spark: SparkSession, path: String): Codec =
+      Codec(spark.read.parquet(s"$path/thresholds").collect()
+        .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2))
+  }
+
   final case class Model(thresholds: Array[Double], codes: DataFrame,
-      idCol: String, appends: Int = 0, metric: String = "l2") {
-
-    private def encoded(queries: DataFrame, qid: String, qvec: String) = {
-      val bc = queries.sparkSession.sparkContext.broadcast(thresholds)
-      val encUdf = udf { (v: Seq[Double]) => encodeOne(v.toIndexedSeq, bc.value).toSeq }
-      Search.prepVectors(
-          queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-          qvec, metric)
-        .select(col(qid), encUdf(col(qvec)).as("qsig"))
-    }
-
-    /** Hamming top-k over the packed codes (coarse stage). `allowedIds`
-      * is the pre-filter contract ([[Search.allowedOnly]]). */
-    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      Search.topKOut(
-        Search.selfFilter(
-            Search.allowedOnly(codes, idCol, allowedIds)
-              .crossJoin(broadcast(encoded(queries, qid, qvec))),
-            idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            hamming(col("sig"), col("qsig")).cast("double").as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** Hamming shortlist + exact rerank against the raw vectors (the
-      * serving shape — see PqIndex.Model.searchRerank). The allowed-id
-      * filter applies at the SHORTLIST stage, so the rerank sees only
-      * allowed candidates. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      idCol: String, appends: Int = 0, metric: String = "l2")
+      extends Quantized.Flat[Model] {
+    private[index] def core = new Quantized.Core(Codec(thresholds), None,
+      codes, idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** Incremental insert with FROZEN thresholds (the BQ member of the
-    * insert family): encode the new vectors, append through
-    * [[Compact.append]]. */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** Encode a batch against the FROZEN thresholds into code rows with
-    * the model's column layout — shared by the in-memory insert and the
-    * persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(model.thresholds)
-    val encUdf = udf { (v: Seq[Double]) => encodeOne(v.toIndexedSeq, bc.value).toSeq }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encUdf(col(vecCol)).as("sig"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
-  }
-
-  /** O(batch) persisted insert: encode the batch against the frozen
-    * thresholds and append new parquet files under the saved codes dir —
-    * existing blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append").parquet(s"$path/codes")
-
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    model.thresholds.toSeq.zipWithIndex.map { case (t, i) => (i, t) }
-      .toDF("dim", "threshold")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/thresholds")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val thresholds = spark.read.parquet(s"$path/thresholds").collect()
-      .map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1).map(_._2)
-    Model(thresholds, spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model =
+    Model(Codec.read(spark, path).thresholds, codes, idCol, metric = metric)
 
   /** Fit per-dimension mean thresholds on a spread sample (deterministic:
     * sequential fold over the hash-ordered sample) and encode every
     * vector in one distributed pass. */
-  def build(df0: DataFrame, idCol: String, vecCol: String,
+  def build(df: DataFrame, idCol: String, vecCol: String,
       fitSample: Int = 4096, metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    val df = Search.prepVectors(df0, vecCol, metric)
-    val sample = IvfIndex.hashSample(df, idCol,
-      col(vecCol).cast("array<double>"), fitSample)
-    require(sample.nonEmpty, "BqIndex.build: empty input")
-    val dim = sample(0).length
-    val sums = new Array[Double](dim)
-    sample.foreach { v =>
-      var i = 0; while (i < dim) { sums(i) += v(i); i += 1 }
+    val f = Quantized.fit("BqIndex", df, idCol, vecCol, metric, fitSample)
+    val sums = new Array[Double](f.dim)
+    f.sample.foreach { v =>
+      var i = 0; while (i < sums.length) { sums(i) += v(i); i += 1 }
     }
-    val thresholds = sums.map(_ / sample.length)
-    val bc = df.sparkSession.sparkContext.broadcast(thresholds)
-    val encUdf = udf { (v: Seq[Double]) => encodeOne(v.toIndexedSeq, bc.value).toSeq }
-    val codes = graft.core.Caches.cached(
-      df.select(col(idCol), encUdf(col(vecCol).cast("array<double>")).as("sig")))
-    Model(thresholds, codes, idCol, metric = metric)
+    val thresholds = sums.map(_ / f.sample.length)
+    Model(thresholds, f.codes(Codec(thresholds)), idCol, metric = metric)
   }
 }

@@ -2,9 +2,9 @@ package graft.index
 
 import org.apache.spark.sql.DataFrame
 
-/** Append-with-compaction for the four index insert paths
-  * ([[GannIndex.insert]], [[IvfIndex.insert]], [[PqIndex.insert]],
-  * [[IvfPq.insert]]).
+/** Append-with-compaction for every in-memory index insert path
+  * ([[GannIndex.insert]], [[IvfIndex.insert]], and
+  * [[Quantized.Family.insert]] for the six quantized indexes).
   *
   * A continuous-ingest loop (the StreamingIngestSpec shape) appends a
   * batch per micro-batch; a naive `cached(old.union(new))` grows BOTH the

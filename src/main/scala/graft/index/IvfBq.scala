@@ -1,169 +1,40 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** IVF-BQ: coarse inverted-file pruning over 1-bit residual codes — the
   * binary sibling of [[IvfPq]] (FAISS's `IVFx,...` with a binary fine
-  * quantizer; the cheapest cluster-pruned layout). Composition of two
-  * tested tiers:
-  *
-  *  - IVF coarse quantizer ([[IvfIndex]]): a probe touches nprobe/k of
-  *    the corpus via the cluster-keyed posting lists;
-  *  - BQ residual signatures ([[BqIndex]] kernels): each vector stores
-  *    ceil(dim/64) longs of residual sign bits (threshold 0 per
-  *    dimension — residuals are centered by construction, so the sign
-  *    split lands near the median mass without a fitted threshold).
-  *
-  * Search probes the nprobe nearest clusters, encodes the query's
-  * residual signature per probed cluster (tiny, in the probe UDF over
-  * the broadcast centroids), ranks by the codegen'd
-  * [[graft.functions.HammingWords]] XOR+POPCNT over only the probed
-  * posting lists through the bounded-heap TopKAgg, and exact-reranks
-  * the shortlist by id equi-join — identical serving shape to IVF-PQ at
-  * 1 bit/dimension instead of ~1 byte/subspace.
+  * quantizer; the cheapest cluster-pruned layout). Each vector stores
+  * ceil(dim/64) longs of residual sign bits against threshold 0 —
+  * residuals are centered by construction, so the sign split lands near
+  * the median mass without a fitted threshold. Search, rerank and
+  * persistence are the [[Quantized]] core's IVF layout.
   */
-object IvfBq {
+object IvfBq extends Quantized.Family {
+
+  private def codec(dim: Int) =
+    BqIndex.Codec(new Array[Double](dim), persisted = false)
 
   final case class Model(coarse: Array[(Int, Array[Double])],
       codes: DataFrame, idCol: String, appends: Int = 0,
-      metric: String = "l2") {
-
-    /** (cluster, residual signature) rows per query for the probed
-      * clusters — Coarse.nearestK partial-selects the probes (early
-      * abandon + bounded insertion; no full sort of kCoarse). */
-    private def probed(queries: DataFrame, qid: String, qvec: String,
-        nprobe: Int): DataFrame = {
-      val bc = queries.sparkSession.sparkContext.broadcast(coarse)
-      val np = nprobe
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val arr = v.toArray
-        val cs = bc.value
-        Coarse.nearestK(arr, cs, np).map { pos =>
-          val (cid, cent) = cs(pos)
-          val resid = IndexedSeq.tabulate(arr.length)(i => arr(i) - cent(i))
-          (cid, BqIndex.encodeOne(resid, new Array[Double](arr.length)).toSeq)
-        }.toSeq
-      }
-      Search.prepVectors(
-          queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-          qvec, metric)
-        .select(col(qid), explode(probeUdf(col(qvec))).as("p"))
-        .select(col(qid), col("p._1").as("cluster"), col("p._2").as("qsig"))
-    }
-
-    /** Hamming top-k over the probed clusters' residual signatures.
-      * `allowedIds` is the pre-filter contract ([[Search.allowedOnly]]):
-      * the semi join composes with the cluster-probe pruning — the
-      * distance fold sees only allowed rows of probed clusters. */
-    def search(queries: DataFrame, qid: String, qvec: String,
-        k: Int, nprobe: Int, excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      Search.topKOut(
-        Search.selfFilter(
-            probed(queries, qid, qvec, nprobe).join(
-              Search.allowedOnly(codes, idCol, allowedIds), Seq("cluster")),
-            idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            graft.functions.VectorF.hammingWords(col("sig"), col("qsig"))
-              .cast("double").as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** Hamming shortlist + exact rerank (the serving shape — see
-      * PqIndex.Model.searchRerank). The allowed-id filter applies at
-      * the shortlist stage. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist, nprobe = nprobe,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      metric: String = "l2") extends Quantized.Ivf[Model] {
+    private[index] def core = new Quantized.Core(
+      codec(coarse.headOption.fold(0)(_._2.length)), Some(coarse), codes,
+      idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** One assign+encode pass against the FROZEN centroids
-    * (Coarse.nearest1 early-abandon assign) — shared by the in-memory
-    * insert and the persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(model.coarse)
-    val encUdf = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val cs = bc.value
-      val (cid, cent) = cs(Coarse.nearest1(arr, cs))
-      val resid = IndexedSeq.tabulate(arr.length)(i => arr(i) - cent(i))
-      (cid, BqIndex.encodeOne(resid, new Array[Double](arr.length)).toSeq)
-    }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encUdf(col(vecCol)).as("e"))
-      .select(col(model.idCol), col("e._1").as("cluster"), col("e._2").as("sig"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
-  }
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model =
+    Model(Quantized.readCentroids(spark, path), codes, idCol, metric = metric)
 
-  /** Incremental insert with FROZEN centroids (the IVF-BQ member of the
-    * insert family). */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** O(batch) persisted insert: encode the batch against the frozen
-    * centroids and append new parquet files under the saved codes dir —
-    * existing blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append")
-      .partitionBy("cluster").parquet(s"$path/codes")
-
-  /** Persist centroids + cluster-partitioned signatures (probes prune to
-    * nprobe partitions, like IvfPq.save). */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    model.coarse.toSeq.map { case (cid, c) => (cid, c.toSeq) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val coarse = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    Model(coarse, spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
-
-  /** Coarse-quantize (IvfIndex), then sign-encode the residuals in one
-    * distributed pass off the IVF assignment (the cluster is already
-    * known per row — no second nearest-centroid scan, the IvfPq.build
-    * pattern). */
+  /** Coarse-quantize ([[IvfIndex]]), then sign-encode the residuals in
+    * one distributed pass off the IVF assignment — no fit sample. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, seed: Long = 42L, metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    // metric rides on the IVF build: its assign table holds the
-    // (normalized, for cosine) vectors the residual pass reads
-    val ivf = IvfIndex.build(df, idCol, vecCol, k = kCoarse, seed = seed,
-      metric = metric)
-    val byId = ivf.centroids.toMap
-    val bc = df.sparkSession.sparkContext.broadcast(byId)
-    val sigUdf = udf { (v: Seq[Double], cluster: Int) =>
-      val cent = bc.value(cluster)
-      val resid = IndexedSeq.tabulate(v.length)(i => v(i) - cent(i))
-      BqIndex.encodeOne(resid, new Array[Double](v.length)).toSeq
-    }
-    val codes = graft.core.Caches.cached(
-      ivf.assign.select(col(idCol), col("cluster"),
-        sigUdf(col(vecCol).cast("array<double>"), col("cluster")).as("sig")))
-    Model(ivf.centroids, codes, idCol, metric = metric)
+    val f = Quantized.fit("IvfBq", df, idCol, vecCol, metric, 0,
+      Some((kCoarse, seed)))
+    Model(f.coarse.get, f.codes(codec(f.dim)), idCol, metric = metric)
   }
 }

@@ -1,204 +1,47 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-/** IVF-PQ: the canonical 100 TB ANN layout (Jégou et al. 2011; the
-  * FAISS `IVFx,PQy` default). Composition of the two indexes already in
-  * this package:
-  *
-  *  - IVF coarse quantizer ([[IvfIndex]]): k clusters partition the
-  *    corpus; a probe touches nprobe/k of the data;
-  *  - PQ residual codes ([[PqIndex]] kernels): each vector is stored as
-  *    the m-byte PQ encoding of `x − centroid(cluster)` — residuals
-  *    concentrate near zero, so the same codebook budget quantizes them
-  *    much more finely than raw vectors.
-  *
-  * Search probes the nprobe nearest clusters, builds one ADC table per
-  * (query, probed cluster) from the query's residual against that
-  * cluster's centroid (nprobe tiny tables per query, computed in a UDF
-  * over broadcast codebooks), and folds code lookups in codegen over
-  * only the probed posting lists. The optional rerank stage re-scores
-  * the shortlist against raw vectors via an id equi-join.
-  *
-  * Scale: centroids + codebooks are KBs broadcast; the distributed state
-  * is the cluster-keyed codes table (32x smaller than the vectors; saved
-  * partitioned by cluster so probes prune partitions); the top-k is the
-  * bounded-heap TopKAgg. The reference's GANN/IVF store raw float
-  * vectors (radient/tasks/sinks/local/gann.py:196-216) — this is the
-  * compressed tier those probes would run on at 100 TB.
+/** IVF-PQ: the canonical large-corpus ANN layout (Jégou et al. 2011; the
+  * FAISS `IVFx,PQy` default). Each vector is stored as the m-code
+  * [[PqIndex]] encoding of `x − centroid(cluster)` — residuals
+  * concentrate near zero, so the same codebook budget quantizes them
+  * much more finely than raw vectors. Search builds one ADC table per
+  * (query, probed cluster) from the query's residual and folds code
+  * lookups in codegen over only the probed posting lists; the rest is
+  * the [[Quantized]] core's IVF layout.
   */
-object IvfPq {
+object IvfPq extends Quantized.Family {
 
   final case class Model(coarse: Array[(Int, Array[Double])],
       m: Int, dsub: Int, ksub: Int,
       codebooks: Array[Array[Array[Double]]],
       codes: DataFrame, idCol: String, appends: Int = 0,
-      metric: String = "l2") {
-
-    /** ADC search over the probed clusters' residual codes. `allowedIds`
-      * is the pre-filter contract ([[Search.allowedOnly]]). */
-    def search(queries: DataFrame, qid: String, qvec: String,
-        k: Int, nprobe: Int, excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val spark = queries.sparkSession
-      val bcC = spark.sparkContext.broadcast(coarse)
-      val bcB = spark.sparkContext.broadcast(codebooks)
-      val (mm, dd, kk, np) = (m, dsub, ksub, nprobe)
-      // per query: nprobe (cluster, ADC-table-of-residual) rows —
-      // Coarse.nearestK partial-selects the probed clusters (early
-      // abandon + bounded insertion; no full sort of kCoarse)
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val arr = v.toArray
-        val cs = bcC.value
-        Coarse.nearestK(arr, cs, np).map { pos =>
-          val (cid, cent) = cs(pos)
-          val resid = Array.tabulate(arr.length)(i => arr(i) - cent(i))
-          (cid, PqIndex.distTable(resid.toIndexedSeq, bcB.value, mm, dd, kk).toSeq)
-        }.toSeq
-      }
-      val qn = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-        qvec, metric)
-      val probed = qn.select(col(qid), explode(probeUdf(col(qvec))).as("p"))
-        .select(col(qid), col("p._1").as("cluster"), col("p._2").as("dt"))
-      val adc = graft.functions.VectorF.adc(col("codes"), col("dt"), kk)
-      Search.topKOut(
-        Search.selfFilter(
-            probed.join(Search.allowedOnly(codes, idCol, allowedIds),
-              Seq("cluster")), idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol), adc.as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** ADC shortlist + exact rerank against the raw vectors (the serving
-      * shape — see PqIndex.Model.searchRerank). The allowed-id filter
-      * applies at the shortlist stage. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist, nprobe = nprobe,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      metric: String = "l2") extends Quantized.Ivf[Model] {
+    private[index] def core = new Quantized.Core(
+      PqIndex.Codec(m, dsub, ksub, codebooks), Some(coarse), codes, idCol,
+      metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** Incremental insert with FROZEN coarse centroids and codebooks (the
-    * IVF-PQ member of the insert family — see IvfIndex.insert /
-    * PqIndex.insert): one broadcast-probe pass assigns each new vector
-    * to its nearest cluster and PQ-encodes its residual; codes append. */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** One assign+encode pass against the FROZEN centroids and codebooks
-    * (Coarse.nearest1 early-abandon assign) — shared by the in-memory
-    * insert and the persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val bcC = spark.sparkContext.broadcast(model.coarse)
-    val bcB = spark.sparkContext.broadcast(model.codebooks)
-    val (mm, dd) = (model.m, model.dsub)
-    val encUdf = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val cs = bcC.value
-      val (cid, cent) = cs(Coarse.nearest1(arr, cs))
-      val resid = IndexedSeq.tabulate(arr.length)(i => arr(i) - cent(i))
-      (cid, PqIndex.encodeOne(resid, bcB.value, mm, dd).toSeq)
-    }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encUdf(col(vecCol)).as("e"))
-      .select(col(model.idCol), col("e._1").as("cluster"), col("e._2").as("codes"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model = {
+    val c = PqIndex.Codec.read(spark, path)
+    Model(Quantized.readCentroids(spark, path), c.m, c.dsub, c.ksub,
+      c.codebooks, codes, idCol, metric = metric)
   }
 
-  /** O(batch) persisted insert: encode the batch against the frozen
-    * quantizers and append new parquet files under the saved codes dir —
-    * existing blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append")
-      .partitionBy("cluster").parquet(s"$path/codes")
-
-  /** Persist centroids + codebooks + cluster-partitioned codes (probes
-    * prune to nprobe partitions, like IvfIndex.save). */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    model.coarse.toSeq.map { case (cid, c) => (cid, c.toSeq) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val rows = for {
-      sub <- model.codebooks.indices
-      code <- model.codebooks(sub).indices
-    } yield (sub, code, model.codebooks(sub)(code).toSeq)
-    rows.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val coarse = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val cb = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = cb.map(_._1).max + 1
-    val ksub = cb.map(_._2).max + 1
-    val books = Array.tabulate(m, ksub)((s, c) => cb.find(t => t._1 == s && t._2 == c).get._3)
-    Model(coarse, m, books(0)(0).length, ksub, books,
-      spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
-
-  /** Coarse-quantize (distributed KMeans via IvfIndex), then PQ-encode
-    * the residuals: codebooks train on a bounded residual sample
-    * (driver-side seeded Lloyd); the full table is touched by exactly
-    * one distributed residual+encode pass. */
+  /** Coarse-quantize ([[IvfIndex]]), train the codebooks on a bounded
+    * residual sample, then encode every residual in one pass. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, m: Int = 8, ksub: Int = 16, seed: Long = 42L,
       fitSample: Int = 4096, iters: Int = 10,
       metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    // metric rides on the IVF build: its assign table holds the
-    // (normalized, for cosine) vectors every later pass reads
-    val ivf = IvfIndex.build(df, idCol, vecCol, k = kCoarse, seed = seed,
+    val f = Quantized.fit("IvfPq", df, idCol, vecCol, metric, fitSample,
+      Some((kCoarse, seed)))
+    val c = PqIndex.Codec.train(f.sample, m, ksub, seed, iters)
+    Model(f.coarse.get, m, c.dsub, ksub, c.codebooks, f.codes(c), idCol,
       metric = metric)
-    val spark = df.sparkSession
-    val bcC = spark.sparkContext.broadcast(ivf.centroids)
-    val residUdf = udf { (v: Seq[Double], cluster: Int) =>
-      val cent = bcC.value.find(_._1 == cluster).get._2
-      Seq.tabulate(v.length)(i => v(i) - cent(i))
-    }
-    val resid = ivf.assign.select(col(idCol), col("cluster"),
-      residUdf(col(vecCol).cast("array<double>"), col("cluster")).as("resid"))
-    val first = resid.select("resid").limit(1).collect()
-    require(first.nonEmpty, "IvfPq.build: empty input")
-    val dim = first(0).getSeq[Double](0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val sample = IvfIndex.hashSample(resid, idCol, col("resid"), fitSample)
-    val books = PqIndex.trainBooks(sample, m, dsub, ksub, seed, iters)
-    val bcB = spark.sparkContext.broadcast(books)
-    val (mm, dd) = (m, dsub)
-    val encodeUdf = udf { (v: Seq[Double]) =>
-      PqIndex.encodeOne(v.toIndexedSeq, bcB.value, mm, dd).toSeq
-    }
-    // cached (tracked): build-once / search-many — the IVF assignment
-    // cache from IvfIndex.build stays the scan source; this is the only
-    // distributed state the searches touch
-    val codes = graft.core.Caches.cached(
-      resid.select(col(idCol), col("cluster"), encodeUdf(col("resid")).as("codes")))
-    Model(ivf.centroids, m, dsub, ksub, books, codes, idCol, metric = metric)
   }
 }

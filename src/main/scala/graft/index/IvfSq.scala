@@ -1,199 +1,45 @@
 package graft.index
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** IVF-SQ: coarse inverted-file pruning over SQ8-coded residuals — the
   * scalar-quantization sibling of [[IvfPq]]/[[IvfBq]] and the classic
-  * production serving config (Milvus's `IVF_SQ8`, FAISS's
-  * `IVFx,SQ8` — relevant because the reference's Milvus sink exposes
-  * exactly these index types, radient/tasks/sinks/milvus.py:83-122).
-  * Composition of two tested tiers:
-  *
-  *  - IVF coarse quantizer ([[IvfIndex]]): a probe touches nprobe/k of
-  *    the corpus via the cluster-keyed posting lists;
-  *  - SQ8 residual codes ([[SqIndex]] kernels): each vector stores one
-  *    byte per dimension of its residual on a per-dimension uniform
-  *    grid fit over a spread residual sample — 4x compression with
-  *    near-exact in-cluster ranking (residual spread is much tighter
-  *    than the raw-vector spread, so the grid cells are finer than
-  *    [[SqIndex]]'s for the same 8 bits).
-  *
-  * Search probes the nprobe nearest clusters (Coarse.nearestK partial
-  * selection), computes the query's RAW residual per probed cluster
-  * (asymmetric distance — the query side is never quantized), ranks by
-  * the codegen'd [[graft.functions.SqDistance]] kernel over only the
-  * probed posting lists through the bounded-heap TopKAgg, and
-  * exact-reranks the shortlist by id equi-join — identical serving
-  * shape to IVF-PQ/IVF-BQ at one byte per dimension.
+  * production serving config (Milvus's `IVF_SQ8`, FAISS's `IVFx,SQ8`,
+  * which the reference's Milvus sink exposes,
+  * radient/tasks/sinks/milvus.py:83-122). The [[SqIndex]] grid is fit
+  * over a spread RESIDUAL sample: residual spread is much tighter than
+  * the raw-vector spread, so the grid cells are finer for the same 8
+  * bits. Search probes the nprobe nearest clusters with the query's raw
+  * residual per probed cluster (asymmetric — the query side is never
+  * quantized); the rest is the [[Quantized]] core's IVF layout.
   */
-object IvfSq {
+object IvfSq extends Quantized.Family {
 
   final case class Model(coarse: Array[(Int, Array[Double])],
       mins: Array[Double], scales: Array[Double],
       codes: DataFrame, idCol: String, appends: Int = 0,
-      metric: String = "l2") {
-
-    /** (cluster, raw query residual) rows per query for the probed
-      * clusters — asymmetric: only the corpus side is quantized. */
-    private def probed(queries: DataFrame, qid: String, qvec: String,
-        nprobe: Int): DataFrame = {
-      val bc = queries.sparkSession.sparkContext.broadcast(coarse)
-      val np = nprobe
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val arr = v.toArray
-        val cs = bc.value
-        Coarse.nearestK(arr, cs, np).map { pos =>
-          val (cid, cent) = cs(pos)
-          (cid, Seq.tabulate(arr.length)(i => arr(i) - cent(i)))
-        }.toSeq
-      }
-      Search.prepVectors(
-          queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-          qvec, metric)
-        .select(col(qid), explode(probeUdf(col(qvec))).as("p"))
-        .select(col(qid), col("p._1").as("cluster"), col("p._2").as("qres"))
-    }
-
-    /** SQ asymmetric-distance top-k over the probed clusters' codes.
-      * `allowedIds` is the pre-filter contract ([[Search.allowedOnly]]). */
-    def search(queries: DataFrame, qid: String, qvec: String,
-        k: Int, nprobe: Int, excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      Search.topKOut(
-        Search.selfFilter(
-            probed(queries, qid, qvec, nprobe).join(
-              Search.allowedOnly(codes, idCol, allowedIds), Seq("cluster")),
-            idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            graft.functions.VectorF.sqDist(col("sig"), col("qres"),
-              mins, scales).as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** SQ shortlist + exact rerank (the serving shape — see
-      * PqIndex.Model.searchRerank). The allowed-id filter applies at
-      * the shortlist stage. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist, nprobe = nprobe,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      metric: String = "l2") extends Quantized.Ivf[Model] {
+    private[index] def core = new Quantized.Core(SqIndex.Codec(mins, scales),
+      Some(coarse), codes, idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** One assign+encode pass against the FROZEN centroids and grid
-    * (Coarse.nearest1 early-abandon assign) — shared by the in-memory
-    * insert and the persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(model.coarse)
-    val bcM = df.sparkSession.sparkContext.broadcast(model.mins)
-    val bcS = df.sparkSession.sparkContext.broadcast(model.scales)
-    val encUdf = udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val cs = bc.value
-      val (cid, cent) = cs(Coarse.nearest1(arr, cs))
-      val resid = IndexedSeq.tabulate(arr.length)(i => arr(i) - cent(i))
-      (cid, SqIndex.encodeOne(resid, bcM.value, bcS.value))
-    }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encUdf(col(vecCol)).as("e"))
-      .select(col(model.idCol), col("e._1").as("cluster"), col("e._2").as("sig"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model = {
+    val g = SqIndex.Codec.read(spark, path)
+    Model(Quantized.readCentroids(spark, path), g.mins, g.scales, codes,
+      idCol, metric = metric)
   }
 
-  /** Incremental insert with FROZEN centroids + grid (the IVF-SQ member
-    * of the insert family). */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** O(batch) persisted insert: encode the batch against the frozen
-    * centroids + grid and append new parquet files under the saved codes
-    * dir — existing blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append")
-      .partitionBy("cluster").parquet(s"$path/codes")
-
-  /** Persist centroids + grid + cluster-partitioned codes (probes prune
-    * to nprobe partitions, like IvfPq.save). */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    model.coarse.toSeq.map { case (cid, c) => (cid, c.toSeq) }
-      .toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    model.mins.toSeq.zip(model.scales.toSeq).zipWithIndex
-      .map { case ((mn, sc), i) => (i, mn, sc) }
-      .toDF("dim", "min", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/grid")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val coarse = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    val grid = spark.read.parquet(s"$path/grid").collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    Model(coarse, grid.map(_._2), grid.map(_._3),
-      spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
-
-  /** Coarse-quantize (IvfIndex), fit the residual grid on a spread
-    * sample of residuals, then encode every residual in one distributed
-    * pass off the IVF assignment (the cluster is already known per row —
-    * no second nearest-centroid scan, the IvfPq.build pattern). */
+  /** Coarse-quantize ([[IvfIndex]]), fit the residual grid on a spread
+    * residual sample, then encode every residual in one pass. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, seed: Long = 42L, fitSample: Int = 4096,
       metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    // metric rides on the IVF build: its assign table holds the
-    // (normalized, for cosine) vectors the residual pass reads
-    val ivf = IvfIndex.build(df, idCol, vecCol, k = kCoarse, seed = seed,
-      metric = metric)
-    val byId = ivf.centroids.toMap
-    val bc = df.sparkSession.sparkContext.broadcast(byId)
-    val residUdf = udf { (v: Seq[Double], cluster: Int) =>
-      val cent = bc.value(cluster)
-      Seq.tabulate(v.length)(i => v(i) - cent(i))
-    }
-    val resid = ivf.assign.select(col(idCol), col("cluster"),
-      residUdf(col(vecCol).cast("array<double>"), col("cluster")).as("res"))
-    val sample = IvfIndex.hashSample(resid, idCol, col("res"), fitSample)
-    require(sample.nonEmpty, "IvfSq.build: empty input")
-    val dim = sample(0).length
-    val mins = Array.fill(dim)(Double.MaxValue)
-    val maxs = Array.fill(dim)(Double.MinValue)
-    sample.foreach { v =>
-      var i = 0
-      while (i < dim) {
-        if (v(i) < mins(i)) mins(i) = v(i)
-        if (v(i) > maxs(i)) maxs(i) = v(i)
-        i += 1
-      }
-    }
-    val scales = Array.tabulate(dim)(i => (maxs(i) - mins(i)) / 255.0)
-    val bcM = df.sparkSession.sparkContext.broadcast(mins)
-    val bcS = df.sparkSession.sparkContext.broadcast(scales)
-    val encUdf = udf { (res: Seq[Double]) =>
-      SqIndex.encodeOne(res.toIndexedSeq, bcM.value, bcS.value)
-    }
-    val codes = graft.core.Caches.cached(
-      resid.select(col(idCol), col("cluster"), encUdf(col("res")).as("sig")))
-    Model(ivf.centroids, mins, scales, codes, idCol, metric = metric)
+    val f = Quantized.fit("IvfSq", df, idCol, vecCol, metric, fitSample,
+      Some((kCoarse, seed)))
+    val g = SqIndex.Codec.fit(f.sample)
+    Model(f.coarse.get, g.mins, g.scales, f.codes(g), idCol, metric = metric)
   }
 }

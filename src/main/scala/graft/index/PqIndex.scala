@@ -1,177 +1,93 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.functions.VectorF
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** PQ (product-quantization) ANN index: the vector space is split into
   * `m` subspaces, each subspace gets its own small codebook (`ksub`
   * centroids, trained by seeded Lloyd iterations on a bounded driver-side
   * sample), and every vector is stored as `m` small codes — 64 float32
-  * lanes become 8 bytes, a 32x compression of the stored index.
+  * lanes become 8 bytes, a 32x compression ([[Quantized]] has the tier
+  * table).
   *
   * Search is ADC (asymmetric distance computation, Jégou et al., "Product
   * Quantization for Nearest Neighbor Search", TPAMI 2011): per query, one
   * `m x ksub` table of exact subspace distances is computed once, and
   * every candidate's approximate distance is `m` table lookups over its
-  * codes — no float vector is ever read at search time.
-  *
-  * Scale shape: the codebooks are a few KB broadcast to every executor;
-  * the codes table is the only distributed state (32x smaller than the
-  * raw vectors, so at 100 TB of embeddings the index is ~3 TB); the
-  * per-query top-k runs through the bounded-heap TopKAgg, shipping ≤k
-  * rows per partition per query into the final shuffle. The reference
-  * stores raw float vectors (radient/tasks/sinks/local/gann.py:196-216)
-  * — PQ is the compression tier its GANN/IVF probes would sit on top of
-  * at this data size.
+  * codes (the codegen'd [[graft.functions.AdcLookup]]) — no float vector
+  * is read at search time. The reference stores raw float vectors
+  * (radient/tasks/sinks/local/gann.py:196-216) — PQ is the compression
+  * tier its GANN/IVF probes would sit on top of at scale.
   */
-object PqIndex {
+object PqIndex extends Quantized.Family {
+
+  /** Subspace codes; the query becomes its flat ADC table. */
+  private[index] final case class Codec(m: Int, dsub: Int, ksub: Int,
+      codebooks: Array[Array[Array[Double]]])
+      extends Quantized.Codec[Seq[Int], Seq[Double]] {
+    def codeCol = "codes"
+    def queryCol = "dt"
+    def encode(v: IndexedSeq[Double]): Seq[Int] =
+      encodeOne(v, codebooks, m, dsub).toSeq
+    def query(v: IndexedSeq[Double]): Seq[Double] =
+      distTable(v, codebooks, m, dsub, ksub).toSeq
+    def dist(code: Column, q: Column): Column = VectorF.adc(code, q, ksub)
+    def write(spark: SparkSession, path: String): Unit = {
+      import spark.implicits._
+      val rows = for {
+        sub <- codebooks.indices
+        code <- codebooks(sub).indices
+      } yield (sub, code, codebooks(sub)(code).toSeq)
+      Quantized.writeTable(rows.toDF("sub", "code", "centroid"),
+        s"$path/codebooks")
+    }
+  }
+
+  private[index] object Codec {
+    def read(spark: SparkSession, path: String): Codec = {
+      val cb = spark.read.parquet(s"$path/codebooks").collect()
+        .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
+      val books = Array.ofDim[Array[Double]](cb.map(_._1).max + 1,
+        cb.map(_._2).max + 1)
+      cb.foreach { case (sub, code, c) => books(sub)(code) = c }
+      Codec(books.length, books(0)(0).length, books(0).length, books)
+    }
+
+    /** Per-subspace codebooks trained on a sample — vectors for PQ,
+      * residuals for IVF-PQ; `dim` comes from the sample. */
+    def train(sample: Array[Array[Double]], m: Int, ksub: Int, seed: Long,
+        iters: Int): Codec = {
+      val dim = sample(0).length
+      require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
+      Codec(m, dim / m, ksub, trainBooks(sample, m, dim / m, ksub, seed, iters))
+    }
+  }
 
   /** codebooks(sub)(code) = centroid of length dsub. */
   final case class Model(m: Int, dsub: Int, ksub: Int,
       codebooks: Array[Array[Array[Double]]],
       codes: DataFrame, idCol: String, appends: Int = 0,
-      metric: String = "l2") {
-
-    /** ADC batch search: per-query distance table (UDF over the tiny
-      * broadcast codebooks), then a codegen'd lookup-sum over the codes
-      * table and a bounded-heap top-k. */
-    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast(codebooks)
-      val (mm, dd, kk) = (m, dsub, ksub)
-      // flat dist table: dt(sub*ksub + code) = ||q_sub - centroid||^2
-      val dtUdf = udf { (v: Seq[Double]) =>
-        PqIndex.distTable(v.toIndexedSeq, bc.value, mm, dd, kk).toSeq
-      }
-      val qn = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-        qvec, metric)
-      val probes = qn.select(col(qid), dtUdf(col(qvec)).as("dt"))
-      // approx dist = sum of m table lookups via the codegen'd AdcLookup
-      // kernel — the distributed twin of the reference's per-candidate
-      // distance kernel (gann.c:944-1007), reading 8 bytes of codes
-      // instead of 256 of floats
-      val adc = graft.functions.VectorF.adc(col("codes"), col("dt"), kk)
-      Search.topKOut(
-        Search.selfFilter(
-            Search.allowedOnly(codes, idCol, allowedIds)
-              .crossJoin(broadcast(probes)), idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol), adc.as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** Two-stage search: ADC shortlist of `shortlist` candidates per
-      * query over the compressed codes, then an exact re-rank of just
-      * the shortlist against the raw vectors — the standard PQ serving
-      * shape (ADC absorbs the 32x scan compression, the exact stage
-      * absorbs the quantization error). `vectors` is the raw
-      * (idCol, vecCol) table; only shortlist·|queries| rows of it are
-      * ever read, via an id equi-join. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      metric: String = "l2") extends Quantized.Flat[Model] {
+    private[index] def core = new Quantized.Core(
+      Codec(m, dsub, ksub, codebooks), None, codes, idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** Incremental insert with FROZEN codebooks (the PQ twin of
-    * IvfIndex.insert): encode the new vectors and append their codes.
-    * Codebooks are fit statistics — inserts never retrain them. */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** Encode a batch against the FROZEN codebooks into code rows with the
-    * model's column layout — shared by the in-memory insert and the
-    * persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(model.codebooks)
-    val (mm, dd) = (model.m, model.dsub)
-    val encodeUdf = udf { (v: Seq[Double]) =>
-      encodeOne(v.toIndexedSeq, bc.value, mm, dd).toSeq
-    }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encodeUdf(col(vecCol)).as("codes"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model = {
+    val c = Codec.read(spark, path)
+    Model(c.m, c.dsub, c.ksub, c.codebooks, codes, idCol, metric = metric)
   }
 
-  /** O(batch) persisted insert: encode the batch against the frozen
-    * codebooks and append new parquet files under the saved codes dir —
-    * existing blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append").parquet(s"$path/codes")
-
-  /** Persist codebooks + the compact codes table. */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    val rows = for {
-      sub <- model.codebooks.indices
-      code <- model.codebooks(sub).indices
-    } yield (sub, code, model.codebooks(sub)(code).toSeq)
-    rows.toDF("sub", "code", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val cb = spark.read.parquet(s"$path/codebooks").collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
-    val m = cb.map(_._1).max + 1
-    val ksub = cb.map(_._2).max + 1
-    val books = Array.tabulate(m, ksub)((s, c) => cb.find(t => t._1 == s && t._2 == c).get._3)
-    Model(m, books(0)(0).length, ksub, books,
-      spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
-
-  /** Seeded Lloyd iterations over one subspace's sample slice; empty
-    * clusters keep their previous centroid (deterministic). Shared with
-    * the IVF-PQ composition (IvfPq trains its residual codebooks with
-    * the same kernel). */
+  /** Seeded Lloyd iterations over one subspace's sample slice from a
+    * seeded random init ([[IvfIndex.lloyd]]: empty clusters keep their
+    * previous centroid — deterministic). */
   private[index] def lloyd(pts: Array[Array[Double]], k: Int, iters: Int,
       seed: Long): Array[Array[Double]] = {
-    val dsub = pts(0).length
     val rnd = new scala.util.Random(seed)
     val init = rnd.shuffle(pts.indices.toVector).take(math.min(k, pts.length))
-    var cents = init.map(i => pts(i).clone()).toArray
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(cents.length)(new Array[Double](dsub))
-      val cnts = new Array[Long](cents.length)
-      pts.foreach { p =>
-        var best = 0; var bd = Double.MaxValue; var c = 0
-        while (c < cents.length) {
-          var s = 0.0; var j = 0
-          while (j < dsub) { val d = p(j) - cents(c)(j); s += d * d; j += 1 }
-          if (s < bd) { bd = s; best = c }
-          c += 1
-        }
-        var j = 0
-        while (j < dsub) { sums(best)(j) += p(j); j += 1 }
-        cnts(best) += 1
-      }
-      cents = cents.indices.map { c =>
-        if (cnts(c) == 0) cents(c)
-        else sums(c).map(_ / cnts(c))
-      }.toArray
-      it += 1
-    }
-    cents
+    IvfIndex.lloyd(pts, init.map(i => pts(i).clone()).toArray, iters)
   }
 
   /** Per-subspace codebooks over a sample (shared with IvfPq). */
@@ -227,30 +143,12 @@ object PqIndex {
     * — the sample is index-build statistics, like IvfIndex's fitSample;
     * the full table is only touched by the single distributed encode
     * pass) and encode every vector to its m nearest-centroid codes. */
-  def build(df0: DataFrame, idCol: String, vecCol: String,
+  def build(df: DataFrame, idCol: String, vecCol: String,
       m: Int = 8, ksub: Int = 16, seed: Long = 42L,
       fitSample: Int = 4096, iters: Int = 10,
       metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    val df = Search.prepVectors(df0, vecCol, metric)
-    val first = df.select(vecCol).limit(1).collect()
-    require(first.nonEmpty, "PqIndex.build: empty input")
-    val dim = first(0).getSeq[Any](0).length
-    require(dim % m == 0, s"dim $dim not divisible by m=$m subspaces")
-    val dsub = dim / m
-    val sample = IvfIndex.hashSample(df, idCol,
-      col(vecCol).cast("array<double>"), fitSample)
-    val books = trainBooks(sample, m, dsub, ksub, seed, iters)
-    val bc = df.sparkSession.sparkContext.broadcast(books)
-    val (mm, dd) = (m, dsub)
-    val encodeUdf = udf { (v: Seq[Double]) =>
-      encodeOne(v.toIndexedSeq, bc.value, mm, dd).toSeq
-    }
-    // cached (tracked): build-once / search-many — every ADC search scans
-    // the codes; at 100 TB the same role is played by save()'s parquet
-    val codes = graft.core.Caches.cached(
-      df.select(col(idCol),
-        encodeUdf(col(vecCol).cast("array<double>")).as("codes")))
-    Model(m, dsub, ksub, books, codes, idCol, metric = metric)
+    val f = Quantized.fit("PqIndex", df, idCol, vecCol, metric, fitSample)
+    val c = Codec.train(f.sample, m, ksub, seed, iters)
+    Model(m, c.dsub, ksub, c.codebooks, f.codes(c), idCol, metric = metric)
   }
 }

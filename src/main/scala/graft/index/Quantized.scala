@@ -1,0 +1,317 @@
+package graft.index
+
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
+
+/** The quantized-index core: a fine-quantizer [[Quantized.Codec]] over
+  * an optional IVF coarse layer. Six index objects are its instances —
+  * [[BqIndex]], [[SqIndex]], [[PqIndex]] (flat) and [[IvfBq]],
+  * [[IvfSq]], [[IvfPq]] (coarse layer on, codes of the residual
+  * `x − centroid(cluster)`) — the parameterized IVF_FLAT / IVF_SQ8 /
+  * IVF_PQ family of the reference's Milvus sink
+  * (radient/tasks/sinks/milvus.py:83-122). Each object keeps only its
+  * fit step; search, rerank, encode, insert, append, save and load are
+  * written once here.
+  *
+  * | codec | bits/dim | vs float32       | code column                     | param dir     |
+  * |-------|----------|------------------|---------------------------------|---------------|
+  * | SQ8   | 8        | 4x               | `sig` binary, a byte per dim    | `grid/`       |
+  * | PQ    | 8·m/dim  | 32x at 64-d, m=8 | `codes` array<int>, m codes     | `codebooks/`  |
+  * | BQ    | 1        | 32x              | `sig` array<long>, ⌈dim/64⌉ words | `thresholds/` |
+  *
+  * IVF-BQ persists no thresholds: its residuals are centred, so they
+  * are all 0. Every saved index also has `meta/` (the metric,
+  * [[Blocks]]) and `codes/`; the IVF kinds add `centroids/` and
+  * partition `codes/` by `cluster`, so a probe reads nprobe of the
+  * posting lists.
+  *
+  * Search prepares each query once (SQ: the raw vector; BQ: its sign
+  * code; PQ: its ADC distance table — per probed cluster, from the
+  * query's residual, on the IVF kinds), ranks by the codec's codegen'd
+  * distance kernel ([[graft.functions.SqDistance]],
+  * [[graft.functions.HammingWords]], [[graft.functions.AdcLookup]])
+  * through the bounded-heap TopKAgg, and `searchRerank` re-ranks the
+  * shortlist exactly against the raw vectors by id equi-join
+  * ([[Search.rerank]]). The IVF probe and assign-on-encode are the
+  * [[Coarse]] scans. Fits are driver-side over a deterministic spread
+  * sample ([[IvfIndex.hashSample]]) and the full table is touched by one
+  * distributed encode pass; inserts encode against the FROZEN fit. */
+object Quantized {
+
+  type Centroids = Array[(Int, Array[Double])]
+
+  /** A fine quantizer: its fitted params, the per-vector encode into a
+    * `C` code, the query-side prep into a `Q`, and the distance kernel
+    * between the two columns. Broadcast to executors whole. */
+  private[index] abstract class Codec[C, Q] extends Serializable {
+    def codeCol: String
+    def queryCol: String
+    def encode(v: IndexedSeq[Double]): C
+    def query(v: IndexedSeq[Double]): Q
+    /** The query side is the vector itself: flat search needs no UDF. */
+    def rawQuery: Boolean = false
+    def dist(code: Column, q: Column): Column
+    /** Persist the fitted params under `path`. */
+    def write(spark: SparkSession, path: String): Unit
+  }
+
+  /** One-file overwrite of a small param table. */
+  private[index] def writeTable(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
+  private def residual(v: Array[Double], cent: Array[Double]): IndexedSeq[Double] =
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(
+      Array.tabulate(v.length)(i => v(i) - cent(i)))
+
+  private def encodeUdf[C: TypeTag, Q](spark: SparkSession, codec: Codec[C, Q]) = {
+    val bc = spark.sparkContext.broadcast(codec)
+    udf { (v: Seq[Double]) => bc.value.encode(v.toIndexedSeq) }
+  }
+
+  /** Search, encode and persistence of one model, for either layout. */
+  private[index] final class Core[C, Q](codec: Codec[C, Q],
+      coarse: Option[Centroids], codes: DataFrame, idCol: String,
+      metric: String)(implicit ct: TypeTag[C], qt: TypeTag[Q]) {
+
+    /** (qid, q) per query, or (qid, cluster, q) per probed cluster with
+      * q prepared from the query's residual — Coarse.nearestK
+      * partial-selects the probes (no full sort of kCoarse). */
+    private def prepared(queries: DataFrame, qid: String, qvec: String,
+        nprobe: Int): DataFrame = {
+      val sc = queries.sparkSession.sparkContext
+      val q = Search.prepVectors(
+        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
+        qvec, metric)
+      coarse match {
+        case None if codec.rawQuery =>
+          q.select(col(qid), col(qvec).as(codec.queryCol))
+        case None =>
+          val bc = sc.broadcast(codec)
+          val prepUdf = udf { (v: Seq[Double]) => bc.value.query(v.toIndexedSeq) }
+          q.select(col(qid), prepUdf(col(qvec)).as(codec.queryCol))
+        case Some(cents) =>
+          val bc = sc.broadcast((cents, codec))
+          val np = nprobe
+          val probeUdf = udf { (v: Seq[Double]) =>
+            val arr = v.toArray
+            val (cs, cd) = bc.value
+            Coarse.nearestK(arr, cs, np).map { pos =>
+              val (cid, cent) = cs(pos)
+              (cid, cd.query(residual(arr, cent)))
+            }.toSeq
+          }
+          q.select(col(qid), explode(probeUdf(col(qvec))).as("p"))
+            .select(col(qid), col("p._1").as("cluster"),
+              col("p._2").as(codec.queryCol))
+      }
+    }
+
+    /** Top-k by the codec distance over the codes (coarse stage), only
+      * the probed clusters' posting lists on the IVF layout. `allowedIds`
+      * is the pre-filter contract ([[Search.allowedOnly]]): the semi join
+      * composes with the cluster pruning. */
+    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
+        nprobe: Int, excludeSelf: Boolean,
+        allowedIds: Option[DataFrame]): DataFrame = {
+      val idType = GannIndex.requireIntegralId(codes, idCol)
+      val q = prepared(queries, qid, qvec, nprobe)
+      val table = Search.allowedOnly(codes, idCol, allowedIds)
+      val cand =
+        if (coarse.isEmpty) table.crossJoin(broadcast(q))
+        else q.join(table, Seq("cluster"))
+      Search.topKOut(
+        Search.selfFilter(cand, idCol, qid, excludeSelf)
+          .select(col(qid), col(idCol),
+            codec.dist(col(codec.codeCol), col(codec.queryCol)).as("dist")),
+        qid, idCol, idType, k)
+    }
+
+    /** Shortlist of `shortlist` by [[search]], then exact rerank against
+      * the raw (idCol, vecCol) vectors — only shortlist·|queries| of them
+      * are read. The allowed-id filter applies at the shortlist stage. */
+    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
+        nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
+        excludeSelf: Boolean, allowedIds: Option[DataFrame]): DataFrame = {
+      val idType = GannIndex.requireIntegralId(codes, idCol)
+      val cand = search(queries, qid, qvec, shortlist, nprobe, excludeSelf,
+        allowedIds)
+      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
+        idType, metric)
+    }
+
+    /** Encode a batch against the FROZEN fit (Coarse.nearest1 assign on
+      * the IVF layout) into code rows with the model's column layout —
+      * shared by the in-memory insert and the persisted block append. */
+    def encodeWith(df: DataFrame, vecCol: String): DataFrame = {
+      val v = Search.prepVectors(
+        df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol)),
+        vecCol, metric)
+      val rows = coarse match {
+        case None =>
+          v.select(col(idCol),
+            encodeUdf(df.sparkSession, codec).apply(col(vecCol)).as(codec.codeCol))
+        case Some(cents) =>
+          val bc = df.sparkSession.sparkContext.broadcast((cents, codec))
+          val encUdf = udf { (x: Seq[Double]) =>
+            val arr = x.toArray
+            val (cs, cd) = bc.value
+            val (cid, cent) = cs(Coarse.nearest1(arr, cs))
+            (cid, cd.encode(residual(arr, cent)))
+          }
+          v.select(col(idCol), encUdf(col(vecCol)).as("e"))
+            .select(col(idCol), col("e._1").as("cluster"),
+              col("e._2").as(codec.codeCol))
+      }
+      rows.select(codes.columns.map(col).toIndexedSeq: _*)
+    }
+
+    /** O(batch) persisted insert: new parquet files under the saved codes
+      * dir — existing blocks are never read or rewritten ([[Blocks]]). */
+    def appendToSaved(path: String, df: DataFrame, vecCol: String): Unit =
+      writeCodes(encodeWith(df, vecCol), "append", path)
+
+    def save(path: String): Unit = {
+      val spark = codes.sparkSession
+      import spark.implicits._
+      coarse.foreach(cs => writeTable(
+        cs.toSeq.map { case (cid, c) => (cid, c.toSeq) }.toDF("cluster", "centroid"),
+        s"$path/centroids"))
+      codec.write(spark, path)
+      Blocks.writeMeta(spark, path, metric)
+      writeCodes(codes, "overwrite", path)
+    }
+
+    /** `codes/`, partitioned by cluster on the IVF layout. */
+    private def writeCodes(df: DataFrame, mode: String, path: String): Unit = {
+      val w = df.write.mode(mode)
+      (if (coarse.isEmpty) w else w.partitionBy("cluster")).parquet(s"$path/codes")
+    }
+  }
+
+  /** What the core needs of a model: its codes, insert count and core. */
+  trait Indexed[M] {
+    def codes: DataFrame
+    def appends: Int
+    private[index] def core: Core[_, _]
+    private[index] def withCodes(codes: DataFrame, appends: Int): M
+  }
+
+  /** Search verbs of a flat (no coarse layer) model. */
+  trait Flat[M] extends Indexed[M] {
+    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
+        excludeSelf: Boolean = true,
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      core.search(queries, qid, qvec, k, 0, excludeSelf, allowedIds)
+
+    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
+        shortlist: Int, vectors: DataFrame, vecCol: String,
+        excludeSelf: Boolean = true,
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      core.searchRerank(queries, qid, qvec, k, 0, shortlist, vectors, vecCol,
+        excludeSelf, allowedIds)
+  }
+
+  /** Search verbs of an IVF model: probe the `nprobe` nearest clusters. */
+  trait Ivf[M] extends Indexed[M] {
+    def coarse: Centroids
+
+    def search(queries: DataFrame, qid: String, qvec: String,
+        k: Int, nprobe: Int, excludeSelf: Boolean = true,
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      core.search(queries, qid, qvec, k, nprobe, excludeSelf, allowedIds)
+
+    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
+        nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
+        excludeSelf: Boolean = true,
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      core.searchRerank(queries, qid, qvec, k, nprobe, shortlist, vectors,
+        vecCol, excludeSelf, allowedIds)
+  }
+
+  /** The insert and persistence verbs of an index object; the object
+    * supplies its `Model` and how a saved one is restored. */
+  abstract class Family {
+    type Model <: Indexed[Model]
+
+    /** The model of the index saved at `path`, given its codes and metric. */
+    protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+        idCol: String, metric: String): Model
+
+    /** Incremental insert against the FROZEN fit: encode the batch and
+      * append through [[Compact.append]]. */
+    def insert(model: Model, df: DataFrame, vecCol: String): Model =
+      model.withCodes(
+        Compact.append(model.codes, model.core.encodeWith(df, vecCol),
+          model.appends),
+        model.appends + 1)
+
+    /** O(batch) persisted insert (see [[Blocks]]). */
+    def appendToSaved(model: Model, path: String, df: DataFrame,
+        vecCol: String): Unit =
+      model.core.appendToSaved(path, df, vecCol)
+
+    def save(model: Model, path: String): Unit = model.core.save(path)
+
+    def load(spark: SparkSession, path: String, idCol: String): Model =
+      restore(spark, path, spark.read.parquet(s"$path/codes"), idCol,
+        Blocks.readMetric(spark, path))
+  }
+
+  private[index] def readCentroids(spark: SparkSession, path: String): Centroids =
+    spark.read.parquet(s"$path/centroids").collect()
+      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
+      .sortBy(_._1)
+
+  /** The frame a build encodes: (idCol, v) over the metric-prepped
+    * vectors, or (idCol, cluster, v) over their residuals to the IVF
+    * assignment. */
+  private[index] final class Fit(name: String, rows: DataFrame,
+      keys: Seq[String], v: Column, idCol: String, fitSample: Int,
+      val coarse: Option[Centroids]) {
+
+    /** Spread fit sample of the rows' v (flat: vectors; IVF: residuals). */
+    lazy val sample: Array[Array[Double]] =
+      IvfIndex.hashSample(rows, idCol, v, fitSample)
+
+    require(coarse.fold(sample.nonEmpty)(_.nonEmpty), s"$name.build: empty input")
+
+    def dim: Int = coarse.fold(sample(0).length)(_(0)._2.length)
+
+    /** Every row's code in one distributed pass; cached (tracked):
+      * build-once / search-many, every search scans the codes. */
+    def codes[C: TypeTag, Q](codec: Codec[C, Q]): DataFrame =
+      graft.core.Caches.cached(rows.select(
+        keys.map(col) :+ encodeUdf(rows.sparkSession, codec).apply(v).as(codec.codeCol): _*))
+  }
+
+  /** The shared fit path of the six builds. With `ivf = Some((kCoarse,
+    * seed))` the vectors are coarse-quantized first ([[IvfIndex.build]])
+    * and the rows become residuals off the IVF assignment — the cluster
+    * is already known per row, so there is no second nearest-centroid
+    * scan. */
+  private[index] def fit(name: String, df: DataFrame, idCol: String,
+      vecCol: String, metric: String, fitSample: Int,
+      ivf: Option[(Int, Long)] = None): Fit = {
+    Search.checkMetric(metric)
+    ivf match {
+      case None =>
+        new Fit(name, Search.prepVectors(df, vecCol, metric), Seq(idCol),
+          col(vecCol).cast("array<double>"), idCol, fitSample, None)
+      case Some((kCoarse, seed)) =>
+        // metric rides on the IVF build: its assign table holds the
+        // (normalized, for cosine) vectors the residual pass reads
+        val m = IvfIndex.build(df, idCol, vecCol, k = kCoarse, seed = seed,
+          metric = metric)
+        val bc = df.sparkSession.sparkContext.broadcast(m.centroids.toMap)
+        val residUdf = udf { (v: Seq[Double], cluster: Int) =>
+          val cent = bc.value(cluster)
+          Seq.tabulate(v.length)(i => v(i) - cent(i))
+        }
+        val rows = m.assign.select(col(idCol), col("cluster"),
+          residUdf(col(vecCol).cast("array<double>"), col("cluster")).as("res"))
+        new Fit(name, rows, Seq(idCol, "cluster"), col("res"), idCol,
+          fitSample, Some(m.centroids))
+    }
+  }
+}

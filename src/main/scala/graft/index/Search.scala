@@ -6,8 +6,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 
-/** Shared search-side plumbing for the six-index compression tier
-  * (GANN / IVF / PQ / IVF-PQ / BQ / IVF-BQ): the bounded-heap top-k
+/** Shared search-side plumbing for the eight index kinds
+  * ([[IndexKinds]]: GANN, IVF, and the [[Quantized]] SQ / PQ / BQ
+  * codecs flat and over IVF): the bounded-heap top-k
   * output shape, the exact-rerank stage, the optional self-exclusion
   * filter, and the l2/cosine metric prep.
   *
@@ -105,7 +106,8 @@ private[index] object Search {
 }
 
 /** Driver/executor-side coarse-quantizer scans shared by the IVF family
-  * (IvfIndex assign + probe, IvfPq / IvfBq probe + encode): bounded
+  * (IvfIndex assign + probe and fit scoring; the [[Quantized]] core's
+  * IVF-SQ / IVF-PQ / IVF-BQ probe + assign-on-encode): bounded
   * partial selection of the nprobe nearest centroids instead of a full
   * sort, and early-abandon partial distances — O(kCoarse·dim) worst
   * case like the naive scan, but the abandon check skips most of each

@@ -1,41 +1,26 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.functions.VectorF
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** SQ8 (8-bit scalar quantization) ANN index — the 4x rung of the
-  * compression tier, between the raw-vector indexes (GANN/IVF) and the
-  * sub-byte codes (PQ 32x, BQ 64x): every vector is stored as one byte
-  * per dimension on a per-dimension uniform grid, the classic
-  * FAISS-family `SQ8` layout (the reference stores raw float32,
-  * radient/tasks/sinks/local/gann.py:196-216 — this rung has no
+  * compression tier ([[Quantized]] has the tier table): every vector is
+  * stored as one byte per dimension on a per-dimension uniform grid,
+  * the classic FAISS-family `SQ8` layout (the reference stores raw
+  * float32, radient/tasks/sinks/local/gann.py:196-216 — this rung has no
   * reference counterpart, like BQ/IVF-BQ).
   *
-  * The quantizer is per-dimension `(min, scale)` fit on a spread sample
-  * ([[IvfIndex.hashSample]]): `code = round((v − min)/scale)` clamped to
-  * [0, 255], `scale = (max − min)/255`. Unlike PQ there is no codebook
-  * training loop and no subspace structure — encode/decode are pure
-  * per-dimension affine maps, so build cost is one narrow pass and the
-  * quantization error is bounded by scale/2 per dimension, giving
-  * near-exact shortlists at 4x compression.
-  *
-  * Search: rank by the ASYMMETRIC distance (raw query against the
-  * dequantized candidate — the codegen'd
-  * [[graft.functions.SqDistance]] kernel, whose KB-scale grid rides into
-  * the generated code as a reference object, not per-row data) through
-  * the bounded-heap [[graft.functions.TopKAgg]], then exact rerank of
-  * the shortlist against the raw vectors by id equi-join — the same
-  * two-stage shape as [[PqIndex]]/[[BqIndex]].
-  *
-  * Scale: the grid is 2·dim doubles of plan-time state; codes are 4x
-  * smaller than float32 vectors (byte-packed `binary`, no array
-  * headers); the heap ships ≤k rows per partition per query; the rerank
-  * reads shortlist·|queries| raw rows by id. Inserts append against the
-  * FROZEN grid through [[Compact.append]] (in-memory) or
-  * [[appendToSaved]] (O(batch) persisted blocks), like the other
-  * indexes.
+  * The grid is per-dimension `(min, scale)` fit on a spread sample:
+  * `code = round((v − min)/scale)` clamped to [0, 255],
+  * `scale = (max − min)/255`. No codebook training and no subspaces —
+  * encode/decode are per-dimension affine maps, and the quantization
+  * error is bounded by scale/2 per dimension, giving near-exact
+  * shortlists. Search ranks by the ASYMMETRIC distance (raw query
+  * against the dequantized code — the codegen'd
+  * [[graft.functions.SqDistance]], whose grid rides into the generated
+  * code as a reference object, not per-row data).
   */
-object SqIndex {
+object SqIndex extends Quantized.Family {
 
   private[index] def encodeOne(v: IndexedSeq[Double], mins: Array[Double],
       scales: Array[Double]): Array[Byte] = {
@@ -50,123 +35,70 @@ object SqIndex {
     out
   }
 
+  /** Byte codes on the (min, scale) grid; the query stays raw. */
+  private[index] final case class Codec(mins: Array[Double],
+      scales: Array[Double]) extends Quantized.Codec[Array[Byte], Seq[Double]] {
+    def codeCol = "sig"
+    def queryCol = "qres"
+    def encode(v: IndexedSeq[Double]): Array[Byte] = encodeOne(v, mins, scales)
+    def query(v: IndexedSeq[Double]): Seq[Double] = v
+    override def rawQuery = true
+    def dist(code: Column, q: Column): Column =
+      VectorF.sqDist(code, q, mins, scales)
+    def write(spark: SparkSession, path: String): Unit = {
+      import spark.implicits._
+      Quantized.writeTable(mins.toSeq.zip(scales.toSeq).zipWithIndex
+        .map { case ((mn, sc), i) => (i, mn, sc) }.toDF("dim", "min", "scale"),
+        s"$path/grid")
+    }
+  }
+
+  private[index] object Codec {
+    def read(spark: SparkSession, path: String): Codec = {
+      val grid = spark.read.parquet(s"$path/grid").collect()
+        .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
+      Codec(grid.map(_._2), grid.map(_._3))
+    }
+
+    /** The per-dimension (min, scale) grid of a sample (deterministic:
+      * sequential fold) — vectors for SQ, residuals for IVF-SQ. */
+    def fit(sample: Array[Array[Double]]): Codec = {
+      val dim = sample(0).length
+      val mins = Array.fill(dim)(Double.MaxValue)
+      val maxs = Array.fill(dim)(Double.MinValue)
+      sample.foreach { v =>
+        var i = 0
+        while (i < dim) {
+          if (v(i) < mins(i)) mins(i) = v(i)
+          if (v(i) > maxs(i)) maxs(i) = v(i)
+          i += 1
+        }
+      }
+      Codec(mins, Array.tabulate(dim)(i => (maxs(i) - mins(i)) / 255.0))
+    }
+  }
+
   final case class Model(mins: Array[Double], scales: Array[Double],
       codes: DataFrame, idCol: String, appends: Int = 0,
-      metric: String = "l2") {
-
-    /** Asymmetric-distance top-k over the byte codes (coarse stage).
-      * `allowedIds` is the pre-filter contract ([[Search.allowedOnly]]). */
-    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val q = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as("__graft_qv")),
-        "__graft_qv", metric)
-      Search.topKOut(
-        Search.selfFilter(
-            Search.allowedOnly(codes, idCol, allowedIds)
-              .crossJoin(broadcast(q)), idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            graft.functions.VectorF.sqDist(col("sig"), col("__graft_qv"),
-              mins, scales).as("dist")),
-        qid, idCol, idType, k)
-    }
-
-    /** SQ shortlist + exact rerank against the raw vectors (the serving
-      * shape — see PqIndex.Model.searchRerank). The allowed-id filter
-      * applies at the shortlist stage. */
-    def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
-        shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, k = shortlist,
-        excludeSelf = excludeSelf, allowedIds = allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
+      metric: String = "l2") extends Quantized.Flat[Model] {
+    private[index] def core = new Quantized.Core(Codec(mins, scales), None,
+      codes, idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(codes = codes, appends = appends)
   }
 
-  /** Incremental insert with a FROZEN grid (the SQ member of the insert
-    * family): encode the new vectors, append through [[Compact.append]]. */
-  def insert(model: Model, df: DataFrame, vecCol: String): Model =
-    model.copy(
-      codes = Compact.append(model.codes, encodeWith(model, df, vecCol),
-        model.appends),
-      appends = model.appends + 1)
-
-  /** Encode a batch against the FROZEN grid into code rows with the
-    * model's column layout — shared by the in-memory insert and the
-    * persisted block append ([[Blocks]]). */
-  private def encodeWith(model: Model, df: DataFrame, vecCol: String): DataFrame = {
-    val bcM = df.sparkSession.sparkContext.broadcast(model.mins)
-    val bcS = df.sparkSession.sparkContext.broadcast(model.scales)
-    val encUdf = udf { (v: Seq[Double]) =>
-      encodeOne(v.toIndexedSeq, bcM.value, bcS.value)
-    }
-    Search.prepVectors(
-        df.select(col(model.idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, model.metric)
-      .select(col(model.idCol), encUdf(col(vecCol)).as("sig"))
-      .select(model.codes.columns.map(col).toIndexedSeq: _*)
+  protected def restore(spark: SparkSession, path: String, codes: DataFrame,
+      idCol: String, metric: String): Model = {
+    val g = Codec.read(spark, path)
+    Model(g.mins, g.scales, codes, idCol, metric = metric)
   }
 
-  /** O(batch) persisted insert: encode the batch against the frozen grid
-    * and append new parquet files under the saved codes dir — existing
-    * blocks are never read or rewritten (see [[Blocks]]). */
-  def appendToSaved(model: Model, path: String, df: DataFrame,
-      vecCol: String): Unit =
-    encodeWith(model, df, vecCol).write.mode("append").parquet(s"$path/codes")
-
-  def save(model: Model, path: String): Unit = {
-    val spark = model.codes.sparkSession
-    import spark.implicits._
-    model.mins.toSeq.zip(model.scales.toSeq).zipWithIndex
-      .map { case ((mn, sc), i) => (i, mn, sc) }
-      .toDF("dim", "min", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/grid")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.codes.write.mode("overwrite").parquet(s"$path/codes")
-  }
-
-  def load(spark: SparkSession, path: String, idCol: String): Model = {
-    val grid = spark.read.parquet(s"$path/grid").collect()
-      .map(r => (r.getInt(0), r.getDouble(1), r.getDouble(2))).sortBy(_._1)
-    Model(grid.map(_._2), grid.map(_._3),
-      spark.read.parquet(s"$path/codes"), idCol,
-      metric = Blocks.readMetric(spark, path))
-  }
-
-  /** Fit the per-dimension (min, scale) grid on a spread sample
-    * (deterministic: sequential fold over the hash-ordered sample) and
-    * encode every vector in one distributed pass. */
-  def build(df0: DataFrame, idCol: String, vecCol: String,
+  /** Fit the grid on a spread sample and encode every vector in one
+    * distributed pass. */
+  def build(df: DataFrame, idCol: String, vecCol: String,
       fitSample: Int = 4096, metric: String = "l2"): Model = {
-    Search.checkMetric(metric)
-    val df = Search.prepVectors(df0, vecCol, metric)
-    val sample = IvfIndex.hashSample(df, idCol,
-      col(vecCol).cast("array<double>"), fitSample)
-    require(sample.nonEmpty, "SqIndex.build: empty input")
-    val dim = sample(0).length
-    val mins = Array.fill(dim)(Double.MaxValue)
-    val maxs = Array.fill(dim)(Double.MinValue)
-    sample.foreach { v =>
-      var i = 0
-      while (i < dim) {
-        if (v(i) < mins(i)) mins(i) = v(i)
-        if (v(i) > maxs(i)) maxs(i) = v(i)
-        i += 1
-      }
-    }
-    val scales = Array.tabulate(dim)(i => (maxs(i) - mins(i)) / 255.0)
-    val bcM = df.sparkSession.sparkContext.broadcast(mins)
-    val bcS = df.sparkSession.sparkContext.broadcast(scales)
-    val encUdf = udf { (v: Seq[Double]) =>
-      encodeOne(v.toIndexedSeq, bcM.value, bcS.value)
-    }
-    val codes = graft.core.Caches.cached(
-      df.select(col(idCol), encUdf(col(vecCol).cast("array<double>")).as("sig")))
-    Model(mins, scales, codes, idCol, metric = metric)
+    val f = Quantized.fit("SqIndex", df, idCol, vecCol, metric, fitSample)
+    val g = Codec.fit(f.sample)
+    Model(g.mins, g.scales, f.codes(g), idCol, metric = metric)
   }
 }

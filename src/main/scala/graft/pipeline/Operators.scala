@@ -2,7 +2,7 @@ package graft.pipeline
 
 import graft.functions.TextF
 import graft.functions.VectorF
-import graft.index.{BqIndex, GannIndex, IvfBq, IvfIndex, IvfPq, IvfSq, PqIndex, SignLsh, SqIndex}
+import graft.index.{IndexKinds, SignLsh}
 import graft.sink.VectorTable
 import graft.sources.Sources
 import graft.vectorize.{HashEmbed, Multimodal, TfIdf}
@@ -402,34 +402,10 @@ object Operators {
       // family takes it (round 14; the compressed tiers semi-join their
       // code tables through Search.allowedOnly)
       val allowed = ins.drop(1).headOption.map(_.select(col(idCol)))
-      kind match {
-        case "gann" =>
-          GannIndex.load(spark, path, idCol, vecCol)
-            .search(ins.head, qid, qvec, k, allowedIds = allowed)
-        case "ivf" =>
-          IvfIndex.load(spark, path, idCol, vecCol)
-            .search(ins.head, qid, qvec, k, nprobe, allowedIds = allowed)
-        case "pq" =>
-          PqIndex.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, allowedIds = allowed)
-        case "ivfpq" =>
-          IvfPq.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, nprobe, allowedIds = allowed)
-        case "bq" =>
-          BqIndex.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, allowedIds = allowed)
-        case "ivfbq" =>
-          IvfBq.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, nprobe, allowedIds = allowed)
-        case "sq" =>
-          SqIndex.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, allowedIds = allowed)
-        case "ivfsq" =>
-          IvfSq.load(spark, path, idCol)
-            .search(ins.head, qid, qvec, k, nprobe, allowedIds = allowed)
-        case other => throw new IllegalArgumentException(
-          s"unknown ann_search index '$other' (have: bq, gann, ivf, ivfbq, ivfpq, ivfsq, pq, sq)")
-      }
+      val idx = IndexKinds.kinds.getOrElse(kind, throw new IllegalArgumentException(
+        s"unknown ann_search index '$kind' (have: ${IndexKinds.kinds.keys.toSeq.sorted.mkString(", ")})"))
+      idx.load(spark, path, idCol, vecCol)
+        .search(ins.head, qid, qvec, k, nprobe, allowed)
     },
     // deterministic stratified sampling: keep iff
     // h32(stratum#id) mod 1000 < quota‰ — a pure scan predicate, no RNG
@@ -623,7 +599,7 @@ object Operators {
   /** Sinks — write, then return the re-read table so downstream stages
     * (and tests) observe what actually landed, the way reference sinks
     * hand back their store handle. */
-  private val sinks: Map[String, Make] = Map(
+  private val sinks: Map[String, Make] = Map[String, Make](
     "vector_table" -> { (spark, cp) => (ins, rp) =>
       val params = cp ++ rp
       val path = req(params, "path", "sink/vector_table")
@@ -753,76 +729,24 @@ object Operators {
         balance = p(params, "balance", "false").toBoolean)
       spark.read.parquet(s"$path/assign")
     },
-    // index-tier sinks — the reference's make_operator("sink", "local")
-    // → GANN insert/index/search lifecycle (factory.py:29-64 routes to
-    // tasks/sinks/local/__init__.py:8, whose real engine is
-    // tasks/sinks/local/gann.py:196-259): build the index over the input
-    // (idCol, vecCol), persist its partition-pruned layout at `path`
-    // (see each index's save), and hand back the landed distributed
-    // state — the posting/codes table actually on disk — so downstream
-    // stages observe what was indexed. Search composes back in through
-    // the ann_search transform over the same `path`.
-    "gann" -> indexSink("gann"),
-    "ivf" -> indexSink("ivf"),
-    "pq" -> indexSink("pq"),
-    "ivfpq" -> indexSink("ivfpq"),
-    "bq" -> indexSink("bq"),
-    "ivfbq" -> indexSink("ivfbq"),
-    "sq" -> indexSink("sq"),
-    "ivfsq" -> indexSink("ivfsq"))
-
-  private def indexSink(kind: String): Make = { (spark, cp) => (ins, rp) =>
-    val params = cp ++ rp
-    val path = req(params, "path", s"sink/$kind")
-    val idCol = p(params, "idCol", "id")
-    val vecCol = p(params, "vecCol", "embedding")
-    kind match {
-      case "gann" =>
-        val m = GannIndex.build(ins.head, idCol, vecCol,
-          leafSize = p(params, "leafSize", "200").toInt,
-          spill = p(params, "spill", "0.15").toDouble,
-          nTrees = p(params, "nTrees", "1").toInt)
-        GannIndex.save(m, path)
-        spark.read.parquet(s"$path/assign")
-      case "ivf" =>
-        val m = IvfIndex.build(ins.head, idCol, vecCol,
-          k = p(params, "k", "16").toInt)
-        IvfIndex.save(m, path)
-        spark.read.parquet(s"$path/assign")
-      case "pq" =>
-        val m = PqIndex.build(ins.head, idCol, vecCol,
-          m = p(params, "m", "8").toInt,
-          ksub = p(params, "ksub", "16").toInt)
-        PqIndex.save(m, path)
-        spark.read.parquet(s"$path/codes")
-      case "ivfpq" =>
-        val m = IvfPq.build(ins.head, idCol, vecCol,
-          kCoarse = p(params, "kCoarse", "8").toInt,
-          m = p(params, "m", "8").toInt,
-          ksub = p(params, "ksub", "16").toInt)
-        IvfPq.save(m, path)
-        spark.read.parquet(s"$path/codes")
-      case "bq" =>
-        val m = BqIndex.build(ins.head, idCol, vecCol,
-          fitSample = p(params, "fitSample", "4096").toInt)
-        BqIndex.save(m, path)
-        spark.read.parquet(s"$path/codes")
-      case "ivfbq" =>
-        val m = IvfBq.build(ins.head, idCol, vecCol,
-          kCoarse = p(params, "kCoarse", "8").toInt)
-        IvfBq.save(m, path)
-        spark.read.parquet(s"$path/codes")
-      case "sq" =>
-        val m = SqIndex.build(ins.head, idCol, vecCol,
-          fitSample = p(params, "fitSample", "4096").toInt)
-        SqIndex.save(m, path)
-        spark.read.parquet(s"$path/codes")
-      case "ivfsq" =>
-        val m = IvfSq.build(ins.head, idCol, vecCol,
-          kCoarse = p(params, "kCoarse", "8").toInt)
-        IvfSq.save(m, path)
-        spark.read.parquet(s"$path/codes")
-    }
+  ) ++
+  // index-tier sinks — the reference's make_operator("sink", "local")
+  // → GANN insert/index/search lifecycle (factory.py:29-64 routes to
+  // tasks/sinks/local/__init__.py:8, whose real engine is
+  // tasks/sinks/local/gann.py:196-259): build the index over the input
+  // (idCol, vecCol), persist its partition-pruned layout at `path`
+  // (see IndexKinds), and hand back the landed distributed
+  // state — the posting/codes table actually on disk — so downstream
+  // stages observe what was indexed. Search composes back in through
+  // the ann_search transform over the same `path`.
+  IndexKinds.kinds.map { case (kind, idx) =>
+    kind -> ({ (spark, cp) => (ins, rp) =>
+      val params = cp ++ rp
+      val path = req(params, "path", s"sink/$kind")
+      val landed = idx.build(ins.head, p(params, "idCol", "id"),
+        p(params, "vecCol", "embedding"), params).save(path)
+      spark.read.parquet(s"$path/$landed")
+    }: Make)
   }
 
   val families: Map[String, Map[String, Make]] = Map(

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.core.Tables
-import graft.index.{BqIndex, GannIndex, IvfBq, IvfIndex, IvfPq, IvfSq, PqIndex, SqIndex}
+import graft.index.IndexKinds
 import org.apache.spark.sql.functions._
 
 /** Approximate-nearest-neighbour query entries. Approximate by design →
@@ -13,54 +13,51 @@ import org.apache.spark.sql.functions._
   */
 object Ann {
 
-  // Index models are memoized per (application, dataset): an index is a
+  // Index models are memoized per (application, kind, dataset): an index is a
   // build-once / search-many sink (the reference's GANN.index() →
   // search() lifecycle, radient/tasks/sinks/local/gann.py:196-259), so
   // repeated query invocations measure the steady-state search, not a
   // rebuild — and the build's cached assignment table is created once
   // instead of leaking one copy per call.
-  private val ivfMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfIndex.Model]()
-  private val gannMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, GannIndex.Model]()
-  private val pqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, PqIndex.Model]()
-  private val ivfPqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPq.Model]()
-  private val bqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, BqIndex.Model]()
-  private val ivfBqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfBq.Model]()
-  private val sqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, SqIndex.Model]()
-  private val ivfSqMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfSq.Model]()
-  /** Memoize an index build via [[graft.core.Caches.memoized]]:
-    * `Caches.clear` drops the map entry along with the model's cached
-    * assignment frame, or the stale model would silently recompute its
-    * assignment per search. */
-  private def memoized[M](s: org.apache.spark.sql.SparkSession, dir: String,
-      memo: java.util.concurrent.ConcurrentHashMap[String, M])(build: => M): M =
-    graft.core.Caches.memoized(s, dir, memo)(build)
+  private val models =
+    new java.util.concurrent.ConcurrentHashMap[String, IndexKinds.Handle]()
 
-  val q_ann_ivf = Q(
-    "q_ann_ivf",
+  /** PQ and IVF-PQ entries: 16 subspaces of 16 codes. */
+  private val PqParams = Map("m" -> "16", "ksub" -> "16")
+
+  /** An entry searching the `kind` index ([[IndexKinds]], built once per
+    * (application, kind, dataset) — [[graft.core.Caches.clear]] drops
+    * the memo entry along with the model's cached frame) with the
+    * 100-query batch at k = 10: `nprobe` probed clusters on the IVF
+    * kinds, an exact rerank of a `shortlist`-deep candidate list when
+    * nonzero, and the allowed set label < 3 when `filtered`. */
+  private def annQ(name: String, kind: String,
+      params: IndexKinds.Params = Map.empty, nprobe: Int = 0,
+      shortlist: Int = 0, filtered: Boolean = false): Q = Q(
+    name,
     (s, dir) => {
       val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfMemo)(
-        IvfIndex.build(e, "vec_id", "embedding", k = 8))
+      val model = graft.core.Caches.memoized(s, s"$kind#$dir", models)(
+        IndexKinds.kinds(kind).build(e, "vec_id", "embedding", params))
       val queries = e.filter(col("vec_id") < 100)
         .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      // nprobe=6 of 8 (round 12 recall-headroom ratchet): the measured
-      // nprobe curve (SCALE.md; graft.RecallCurve) is 0.67/0.78/0.85/0.93
-      // at nprobe 3/4/5/6 — r11 served at 5 (first rung over 0.8); the
-      // sixth posting list buys 0.85 → 0.93 recall@10 for ~20% more
-      // probed codes, well inside the 1.5x entry-time budget
-      model.search(queries, "qid", "qv", k = 10, nprobe = 6)
+      val allowed =
+        if (filtered) Some(e.filter(col("label") < 3).select(col("vec_id")))
+        else None
+      (if (shortlist == 0) model.search(queries, "qid", "qv", 10, nprobe, allowed)
+       else model.searchRerank(queries, "qid", "qv", 10, nprobe, shortlist,
+         e, "embedding", allowed))
         .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
         .orderBy(col("qid"), col("rnk"))
     },
     None)
+
+  // nprobe=6 of 8 (round 12 recall-headroom ratchet): the measured
+  // nprobe curve (SCALE.md; graft.RecallCurve) is 0.67/0.78/0.85/0.93
+  // at nprobe 3/4/5/6 — r11 served at 5 (first rung over 0.8); the
+  // sixth posting list buys 0.85 → 0.93 recall@10 for ~20% more
+  // probed codes, well inside the 1.5x entry-time budget
+  val q_ann_ivf = annQ("q_ann_ivf", "ivf", Map("k" -> "8"), nprobe = 6)
 
   /** Filtered ANN — the reference's Milvus `filter=` search kwarg
     * (radient/tasks/sinks/milvus.py:122) composed with the IVF index:
@@ -74,64 +71,25 @@ object Ann {
     * memo — filtering is a search-time verb, never a rebuild. rows-only
     * + recall-gated against the exact FILTERED brute force
     * (RecallReport). */
-  val q_ann_ivf_filtered = Q(
-    "q_ann_ivf_filtered",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfMemo)(
-        IvfIndex.build(e, "vec_id", "embedding", k = 8))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val allowed = e.filter(col("label") < 3).select(col("vec_id"))
-      model.search(queries, "qid", "qv", k = 10, nprobe = 6,
-          allowedIds = Some(allowed))
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_ivf_filtered = annQ("q_ann_ivf_filtered", "ivf", Map("k" -> "8"),
+    nprobe = 6, filtered = true)
 
-  val q_ann_gann = Q(
-    "q_ann_gann",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      // leafSize 200 = the reference's MAX_LEAF_SIZE build termination
-      // (radient/tasks/sinks/local/gann.py:15); nTrees = the n_trees
-      // recall knob (gann.py:201) — search probes every tree and
-      // dedupes candidates across trees before the exact re-rank.
-      // Measured recall@10 at sf0.1: 2 trees 0.754, 3 trees 0.891,
-      // 4 trees 0.943 (round-14 ratchet; 1.1 s warm in-entry). Tree
-      // DIVERSITY is the lever — beam=2 on 3 trees measured only
-      // 0.896 at ~2x probe cost, so the 4th tree wins. Trees build
-      // concurrently: the 4th costs scheduling overlap, not wall-clock
-      val model = memoized(s, dir, gannMemo)(
-        GannIndex.build(e, "vec_id", "embedding",
-          leafSize = 200, spill = 0.15, nTrees = 4))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.search(queries, "qid", "qv", k = 10)
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  // leafSize 200 = the reference's MAX_LEAF_SIZE build termination
+  // (radient/tasks/sinks/local/gann.py:15); nTrees = the n_trees
+  // recall knob (gann.py:201) — search probes every tree and
+  // dedupes candidates across trees before the exact re-rank.
+  // Measured recall@10 at sf0.1: 2 trees 0.754, 3 trees 0.891,
+  // 4 trees 0.943 (round-14 ratchet; 1.1 s warm in-entry). Tree
+  // DIVERSITY is the lever — beam=2 on 3 trees measured only
+  // 0.896 at ~2x probe cost, so the 4th tree wins. Trees build
+  // concurrently: the 4th costs scheduling overlap, not wall-clock
+  val q_ann_gann = annQ("q_ann_gann", "gann", Map("nTrees" -> "4"))
 
   /** PQ/ADC search over the 32x-compressed codes table — the memory-
     * compression tier for 100 TB-scale embedding search (codebooks
     * broadcast, 8-byte codes instead of 256-byte vectors; recall vs the
     * exact path pinned in PqRecallSpec). */
-  val q_ann_pq = Q(
-    "q_ann_pq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, pqMemo)(
-        PqIndex.build(e, "vec_id", "embedding", m = 16, ksub = 16))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 200, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_pq = annQ("q_ann_pq", "pq", PqParams, shortlist = 200)
 
   /** IVF-PQ (the canonical 100 TB layout: coarse clusters + PQ-coded
     * residuals): probe 7 of 8 clusters, ADC over the probed posting
@@ -141,20 +99,8 @@ object Ann {
     * 0.70/0.76/0.82/0.85 at nprobe 4/5/6/7 with shortlist 100 (SCALE.md;
     * graft.RecallCurve); the deeper exact-reranked shortlist recovers
     * the ADC misrankings probe widening alone cannot. */
-  val q_ann_ivfpq = Q(
-    "q_ann_ivfpq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfPqMemo)(
-        IvfPq.build(e, "vec_id", "embedding", kCoarse = 8, m = 16, ksub = 16))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          nprobe = 7, shortlist = 200, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_ivfpq = annQ("q_ann_ivfpq", "ivfpq", PqParams, nprobe = 7,
+    shortlist = 200)
 
   /** BQ (1-bit binary quantization, 64x compression): Hamming shortlist
     * over the packed sign-bit codes, exact rerank — the cheapest member
@@ -168,20 +114,7 @@ object Ann {
     * sf0.1, and the Hamming pass reads the same 100% of codes at any
     * shortlist: only the k-bounded broadcast rerank deepens, so the
     * 0.90 → 0.98 rung is nearly free (entry re-timed flat). */
-  val q_ann_bq = Q(
-    "q_ann_bq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, bqMemo)(
-        BqIndex.build(e, "vec_id", "embedding"))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 800, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_bq = annQ("q_ann_bq", "bq", shortlist = 800)
 
   /** IVF-BQ (cluster-pruned 1-bit residual codes): probe 7 of 8
     * clusters, Hamming over the probed posting lists via the codegen
@@ -197,20 +130,7 @@ object Ann {
     * rerank-widening knob that lifted ivf/pq in round 12, and 1-bit
     * codes are cheap enough that probing 7/8 posting lists still
     * touches 64× less data than the raw vectors. */
-  val q_ann_ivfbq = Q(
-    "q_ann_ivfbq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfBqMemo)(
-        IvfBq.build(e, "vec_id", "embedding", kCoarse = 8))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          nprobe = 7, shortlist = 800, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_ivfbq = annQ("q_ann_ivfbq", "ivfbq", nprobe = 7, shortlist = 800)
 
   /** Filtered ANN on the COMPRESSED tier (round 14 — the reference's
     * `filter=` kwarg, radient/tasks/sinks/milvus.py:122, now on every
@@ -223,22 +143,8 @@ object Ann {
     * never a rebuild); same nprobe/shortlist knobs. rows-only +
     * recall-gated vs the exact FILTERED brute force (RecallReport);
     * full-probe equivalence pinned in AnnRecallSpec. */
-  val q_ann_ivfbq_filtered = Q(
-    "q_ann_ivfbq_filtered",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfBqMemo)(
-        IvfBq.build(e, "vec_id", "embedding", kCoarse = 8))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val allowed = e.filter(col("label") < 3).select(col("vec_id"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          nprobe = 7, shortlist = 800, vectors = e, vecCol = "embedding",
-          allowedIds = Some(allowed))
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_ivfbq_filtered = annQ("q_ann_ivfbq_filtered", "ivfbq", nprobe = 7,
+    shortlist = 800, filtered = true)
 
   /** Filtered flat-BQ search (round 15 — the last un-gated filtered
     * tiers get recall floors like their unfiltered twins): allowed set
@@ -246,83 +152,28 @@ object Ann {
     * Hamming fold, so shortlist and rerank see only allowed candidates.
     * Model shared with [[q_ann_bq]] via the memo; same shortlist knob.
     * rows-only + recall-gated vs the exact FILTERED brute force. */
-  val q_ann_bq_filtered = Q(
-    "q_ann_bq_filtered",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, bqMemo)(
-        BqIndex.build(e, "vec_id", "embedding"))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val allowed = e.filter(col("label") < 3).select(col("vec_id"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 800, vectors = e, vecCol = "embedding",
-          allowedIds = Some(allowed))
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_bq_filtered = annQ("q_ann_bq_filtered", "bq", shortlist = 800,
+    filtered = true)
 
   /** Filtered flat-PQ search — [[q_ann_bq_filtered]]'s ADC sibling:
     * the allowed semi-join precedes the ADC fold, same m/ksub/shortlist
     * as [[q_ann_pq]], model shared via the memo. rows-only +
     * recall-gated vs the exact FILTERED brute force. */
-  val q_ann_pq_filtered = Q(
-    "q_ann_pq_filtered",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, pqMemo)(
-        PqIndex.build(e, "vec_id", "embedding", m = 16, ksub = 16))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val allowed = e.filter(col("label") < 3).select(col("vec_id"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 200, vectors = e, vecCol = "embedding",
-          allowedIds = Some(allowed))
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_pq_filtered = annQ("q_ann_pq_filtered", "pq", PqParams,
+    shortlist = 200, filtered = true)
 
   /** Filtered SQ8 search — the near-exact rung under the filter verb:
     * allowed semi-join before the asymmetric SqDistance fold, same
     * shortlist as [[q_ann_sq]], model shared via the memo. rows-only +
     * recall-gated vs the exact FILTERED brute force. */
-  val q_ann_sq_filtered = Q(
-    "q_ann_sq_filtered",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, sqMemo)(
-        SqIndex.build(e, "vec_id", "embedding"))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      val allowed = e.filter(col("label") < 3).select(col("vec_id"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 30, vectors = e, vecCol = "embedding",
-          allowedIds = Some(allowed))
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_sq_filtered = annQ("q_ann_sq_filtered", "sq", shortlist = 30,
+    filtered = true)
 
   /** SQ8 (8-bit scalar quantization, 4x compression): asymmetric-distance
     * shortlist over the byte codes via the codegen SqDistance kernel,
     * exact rerank — the near-exact rung of the compression tier
     * (recall/monotonicity/roundtrip/insert pinned in SqSpec). */
-  val q_ann_sq = Q(
-    "q_ann_sq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, sqMemo)(
-        SqIndex.build(e, "vec_id", "embedding"))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          shortlist = 30, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_sq = annQ("q_ann_sq", "sq", shortlist = 30)
 
   /** IVF-SQ (cluster-pruned SQ8 residual codes — the Milvus IVF_SQ8 /
     * FAISS IVFx,SQ8 production config): probe 5 of 8 clusters, codegen
@@ -332,20 +183,7 @@ object Ann {
     * recall 1.0), so the curve tracks plain IVF — 0.78/0.85/0.93 at
     * nprobe 4/5/6 (SCALE.md; graft.RecallCurve); the sixth posting list
     * buys 0.85 → 0.93 for ~20% more probed codes. */
-  val q_ann_ivfsq = Q(
-    "q_ann_ivfsq",
-    (s, dir) => {
-      val e = Tables.spread(Tables(s, dir, "embeddings"))
-      val model = memoized(s, dir, ivfSqMemo)(
-        IvfSq.build(e, "vec_id", "embedding", kCoarse = 8))
-      val queries = e.filter(col("vec_id") < 100)
-        .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-      model.searchRerank(queries, "qid", "qv", k = 10,
-          nprobe = 6, shortlist = 50, vectors = e, vecCol = "embedding")
-        .select(col("qid"), col("vec_id"), round(col("dist"), 6).as("dist"), col("rnk"))
-        .orderBy(col("qid"), col("rnk"))
-    },
-    None)
+  val q_ann_ivfsq = annQ("q_ann_ivfsq", "ivfsq", nprobe = 6, shortlist = 50)
 
   /** MLlib BucketedRandomProjectionLSH approxSimilarityJoin — the stock
     * scaled ANN-join operator (SURVEY.md §7.1 item 9). Approximate →

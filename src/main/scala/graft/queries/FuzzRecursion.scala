@@ -197,7 +197,7 @@ object FuzzRecursion {
           Tables(s, dir, "orders").createOrReplaceTempView("orders")
           Recursion.runScoped(s,
             Recursion.recursionParts(s, dir, "orders")) {
-            val nxt = graft.core.Caches.cached(s.sql(nxtSql("orders")))
+            val nxt = graft.core.Caches.cachedTransient(s.sql(nxtSql("orders")))
             val view = s"nxt_fuzzr_$seed"
             nxt.createOrReplaceTempView(view)
             s.sql(chainWalkSql(view))

@@ -376,7 +376,7 @@ object Recursion {
       // derived partition count instead of the session's scan
       // parallelism
       runScoped(s, recursionParts(s, dir, "orders")) {
-        val nxt = graft.core.Caches.cached(s.sql(nxtSql))
+        val nxt = graft.core.Caches.cachedTransient(s.sql(nxtSql))
         nxt.createOrReplaceTempView("nxt_chain")
         s.sql(walkOverNxtSql)
       }

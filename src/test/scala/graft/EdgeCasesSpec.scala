@@ -105,11 +105,19 @@ class EdgeCasesSpec extends AnyFunSuite {
   }
 
   test("PQ build rejects an empty input with a clear error") {
+    import graft.index._
     val empty = Seq.empty[(Long, Seq[Double])].toDF("vec_id", "embedding")
-    val e = intercept[IllegalArgumentException] {
-      graft.index.PqIndex.build(empty, "vec_id", "embedding")
+    val builds = Seq[(String, () => Any)](
+      "PqIndex" -> (() => PqIndex.build(empty, "vec_id", "embedding")),
+      "IvfPq" -> (() => IvfPq.build(empty, "vec_id", "embedding")),
+      "SqIndex" -> (() => SqIndex.build(empty, "vec_id", "embedding")),
+      "IvfSq" -> (() => IvfSq.build(empty, "vec_id", "embedding")),
+      "BqIndex" -> (() => BqIndex.build(empty, "vec_id", "embedding")),
+      "IvfBq" -> (() => IvfBq.build(empty, "vec_id", "embedding")))
+    for ((name, build) <- builds) {
+      val e = intercept[IllegalArgumentException](build())
+      assert(e.getMessage.contains(s"$name.build: empty input"))
     }
-    assert(e.getMessage.contains("empty input"))
   }
 
   test("lm_score on empty and sub-bigram docs yields zero rows") {
