@@ -450,8 +450,7 @@ object Scale {
       val cells = Seq(0.0, 0.3, 0.6, 1.2).map { delta =>
         val arr = driftedBy(delta).localCheckpoint()
         val model = IvfIndex.build(resident, "vec_id", "embedding", k = 8)
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_ivf_drift").toString
+        val path = graft.core.Scratch.tempDir("graft_ivf_drift").toString
         IvfIndex.save(model, path)
         (0 until 4).foreach { b =>
           IvfIndex.appendStreamBlock(model, path,
@@ -469,12 +468,7 @@ object Scale {
         val refit = IvfIndex.refitCompact(spark, path, "vec_id", "embedding")
         val (a6, a2) = (recallOf(refit, 6), recallOf(refit, 2))
         graft.core.Caches.clear(spark)
-        try {
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
+        graft.core.Scratch.rmTree(java.nio.file.Paths.get(path))
         f""""d$delta%.1f":{"drift_ratio":${strD / resD}%.3f,""" +
           f""""recall_frozen_np6":$b6%.3f,"recall_refit_np6":$a6%.3f,""" +
           f""""recall_frozen_np2":$b2%.3f,"recall_refit_np2":$a2%.3f}"""

@@ -32,11 +32,8 @@ import scala.jdk.CollectionConverters._
   */
 object ScaleStream {
 
-  private def tmpDir(tag: String): java.nio.file.Path = {
-    val d = java.nio.file.Files.createTempDirectory(s"graft_sst_$tag")
-    d.toFile.deleteOnExit()
-    d
-  }
+  private def tmpDir(tag: String): java.nio.file.Path =
+    graft.core.Scratch.tempDir(s"graft_sst_$tag")
 
   /** Land staged chunk files one at a time into a fresh landing dir,
     * timing each processAllAvailable — per-batch walls for one rep.
@@ -92,7 +89,10 @@ object ScaleStream {
         q.processAllAvailable()
         (System.nanoTime() - t0) / 1e9
       }
-    } finally q.stop()
+    } finally {
+      q.stop()
+      Seq(landing, staging).foreach(graft.core.Scratch.rmTree)
+    }
   }
 
   private def minOver(reps: Int)(walls: => Seq[Double]): Seq[Double] =

@@ -674,8 +674,9 @@ object Operators {
     // maintenance folds for the streaming tier (round 13), as pipeline
     // stages — run in a maintenance window (stream stopped, checkpoint
     // committed: each fold's own contract). compact_stream_state folds
-    // the per-trigger dedup-admission state dirs (bands/sh/fps) into
-    // sized base files (StreamDedup.compactState) and returns a status
+    // the per-trigger dedup-admission state dirs (every kind of
+    // StreamDedup.StateKind.all, admitted output included) into sized
+    // base files (StreamDedup.compactState) and returns a status
     // frame of what is at rest; compact_index_blocks folds streamed
     // index blocks back into the partition-pruned base layout
     // (Blocks.compactStreamBlocks) and returns the re-read assignment.
@@ -690,7 +691,7 @@ object Operators {
       // every kind the fold touches, admission output included — a
       // containment/ladder maintenance window must report the posting
       // and hash state it just rewrote (round-13 advice)
-      Seq("bands", "sh", "fps", "post", "hashes", "admitted").flatMap { kind =>
+      graft.streaming.StreamDedup.StateKind.all.map(_.name).flatMap { kind =>
         val base = new org.apache.hadoop.fs.Path(s"$root/${kind}_base")
         val fs = base.getFileSystem(conf)
         if (!fs.exists(base)) None

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.streaming.StreamDedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -79,6 +80,15 @@ object FuzzDedup {
     val tau: (Int, Int) =
       Seq((1, 2), (2, 3), (3, 4), (4, 5), (9, 10))(rnd.nextInt(5))
     val strategy: String = Seq("auto", "raw", "prefix")(rnd.nextInt(3))
+    /** The drawn tier as the tier set the replay, its description and
+      * its oracle all run (draws nothing — later fields keep their
+      * per-seed values). */
+    val tiers: Seq[StreamDedup.Tier] = {
+      val lsh = StreamDedup.Lsh(verifyT)
+      val win = StreamDedup.Winnow(maxDf, minShared)
+      val con = StreamDedup.Contain(tau._1, tau._2, strategy)
+      Seq(Seq(lsh), Seq(win), Seq(con), Seq(StreamDedup.Exact, lsh, win, con))(tier)
+    }
     /** Restart/compaction draws (appended LAST so earlier fields keep
       * their per-seed values — the FuzzStream append-last discipline):
       * a drawn mid-replay boundary stops the stream after `k` batches,
@@ -126,13 +136,7 @@ object FuzzDedup {
 
     def describe: String = {
       val corpus = docMod.fold("full") { case (p, r) => s"doc_id%$p=$r" }
-      val params = tier match {
-        case 0 => s"verifyT=$verifyT"
-        case 1 => s"maxDf=$maxDf minShared=$minShared"
-        case 2 => s"tau=${tau._1}/${tau._2} strategy=$strategy"
-        case _ => s"verifyT=$verifyT maxDf=$maxDf minShared=$minShared " +
-          s"tau=${tau._1}/${tau._2} strategy=$strategy"
-      }
+      val params = tiers.map(_.params).filter(_.nonEmpty).mkString(" ")
       val boundary = restartAfter.fold("") { k =>
         s" restart@$k${if (foldAtRestart) "+fold" else ""}"
       }
@@ -153,17 +157,16 @@ object FuzzDedup {
         StreamingQ.stageFrameChunks(docsOf(s, dir), Seq(col("doc_id")),
           s"fuzzsd_$seed", chunks, blockBytes = Some(64L * 1024)))
 
-    /** Chronological multi-micro-batch replay through the drawn tier's
-      * admission loop (the [[StreamingQ.q_stream_dedup_lsh]] harness
-      * shape: fresh state root per invocation, tmpfs checkpoint dropped
-      * after the replay, scan-split cap so the per-doc kernels
+    /** Chronological multi-micro-batch replay of the drawn tier set
+      * through [[StreamDedup.admit]] (the `q_stream_dedup_*` harness
+      * shape: fresh state root per invocation, state and checkpoint
+      * dropped after the replay, scan-split cap so the per-doc kernels
       * parallelize per micro-batch). Chunk files land one at a time —
       * staged outside the watched dir, atomic move, strictly ordered
       * mtimes, the ScaleStream land() discipline — so the drawn
       * restart/fold boundary can stop the stream BETWEEN batches and
       * resume it from the same checkpoint. */
     def runStream(s: SparkSession, dir: String): DataFrame = {
-      import graft.streaming.StreamDedup
       import scala.jdk.CollectionConverters._
       val stagedDir = staged(s, dir)
       val chunkFiles = java.nio.file.Files.list(stagedDir).iterator().asScala
@@ -178,34 +181,12 @@ object FuzzDedup {
         val stream = s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(landing.toString)
-        tier match {
-          case 0 => StreamDedup.lshAdmit(
-            stream, root.toString, ck.toString, verifyT)
-          case 1 => StreamDedup.winnowAdmit(
-            stream, root.toString, ck.toString, maxDf, minShared)
-          case 2 => StreamDedup.containAdmit(
-            stream, root.toString, ck.toString, tau._1, tau._2, strategy)
-          case _ => StreamDedup.ladderAdmit(
-            stream, root.toString, ck.toString, verifyT, maxDf, minShared,
-            tau._1, tau._2, strategy)
-        }
+        StreamDedup.admit(tiers, stream, root.toString, ck.toString)
       }
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
       s.conf.set("spark.sql.shuffle.partitions", "4")
       s.conf.set("spark.sql.files.maxPartitionBytes", (64 * 1024).toString)
-      // deleted in the finally (reverse-order walk, same as the
-      // checkpoint): every replay writes fresh landing copies + state
-      // trees, and deleteOnExit cannot remove non-empty dirs — without
-      // eager cleanup each bench pass leaks its whole state tree under
-      // /tmp. Only the memoized STAGED chunks persist across replays.
-      def rmTree(dir: java.nio.file.Path): Unit =
-        try {
-          val walk = java.nio.file.Files.walk(dir)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
       // the drawn bucket count holds for the WHOLE replay (baked into
       // state at write time — a mid-replay change would split the
       // posting layout); restored in the finally. The override window is
@@ -254,7 +235,11 @@ object FuzzDedup {
         }
         s.conf.set("spark.sql.shuffle.partitions", prevParts)
         s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        Seq(ck, landing, landStage, root).foreach(rmTree)
+        // every replay writes fresh landing copies + state trees: drop
+        // them now rather than let each bench pass hold its state tree
+        // in tmpfs until JVM exit. Only the memoized STAGED chunks
+        // persist across replays.
+        Seq(ck, landing, landStage, root).foreach(graft.core.Scratch.rmTree)
       }
       } // layoutOverrideLock
     }
@@ -358,98 +343,112 @@ object FuzzDedup {
       } finally { chunk.unpersist(); d.unpersist(); () }
     }
 
-    // ---- DuckDB rendering (the driver-seed oracle) ---------------------
+    /** The DuckDB oracle of this plan (see [[admitSql]]). */
+    def sql: String = admitSql(tiers, chunks, docMod)
+  }
 
-    /** The residue draw shadows `documents` for every downstream CTE
-      * (DuckDB resolves the self-reference via the explicit `main.`
-      * schema); the shared [[Dedup.shingleSql]] / winnow CTEs then read
-      * the narrowed corpus unchanged. */
-    private def baseCtes: String = {
-      val shadow = docMod.map { case (p, r) =>
-        s"documents AS (SELECT * FROM main.documents WHERE doc_id % $p = $r),\n"
-      }.getOrElse("")
-      s"""${shadow}shs AS (${Dedup.shingleSql}),
-         |chunk AS (SELECT doc_id, ntile($chunks) OVER (ORDER BY doc_id) AS b
-         |          FROM documents)""".stripMargin
+  // ---- DuckDB rendering (every streaming-admission oracle) -------------
+
+  /** The residue draw shadows `documents` for every downstream CTE
+    * (DuckDB resolves the self-reference via the explicit `main.`
+    * schema); the shared [[Dedup.shingleSql]] / winnow CTEs then read
+    * the narrowed corpus unchanged. */
+  private def baseCtes(chunks: Int, docMod: Option[(Int, Int)]): String = {
+    val shadow = docMod.map { case (p, r) =>
+      s"documents AS (SELECT * FROM main.documents WHERE doc_id % $p = $r),\n"
+    }.getOrElse("")
+    s"""${shadow}shs AS (${Dedup.shingleSql}),
+       |chunk AS (SELECT doc_id, ntile($chunks) OVER (ORDER BY doc_id) AS b
+       |          FROM documents)""".stripMargin
+  }
+
+  private def emCte: String =
+    s"""em AS (
+       |  SELECT DISTINCT cn.doc_id
+       |  FROM documents p JOIN documents n ON p.text = n.text
+       |  JOIN chunk cp ON cp.doc_id = p.doc_id
+       |  JOIN chunk cn ON cn.doc_id = n.doc_id
+       |  WHERE cp.b < cn.b)""".stripMargin
+
+  private def lmCtes(verifyT: Double): String = {
+    val r = Dedup.MINHASH_K / Dedup.BANDS
+    val bandSelects = (0 until Dedup.BANDS).map { b =>
+      val parts = (0 until r).map(i => s"sig[${b * r + i + 1}]::VARCHAR")
+      s"SELECT doc_id, sh, $b AS band, md5(${parts.mkString(" || ',' || ")}) AS bkey FROM sig"
     }
+    val sigList = (0 until Dedup.MINHASH_K)
+      .map(j => Sql.minhash("sh", j)).mkString(", ")
+    s"""sig AS (SELECT doc_id, sh, [$sigList] AS sig FROM shs),
+       |banded AS (
+       |  ${bandSelects.mkString("\n  UNION ALL ")}
+       |),
+       |lm AS (
+       |  SELECT DISTINCT nb.doc_id
+       |  FROM banded pa JOIN banded nb
+       |    ON pa.band = nb.band AND pa.bkey = nb.bkey
+       |  JOIN chunk ca ON ca.doc_id = pa.doc_id
+       |  JOIN chunk cb ON cb.doc_id = nb.doc_id
+       |  WHERE ca.b < cb.b
+       |    AND ${Dedup.jaccardSql("pa.sh", "nb.sh")} >= $verifyT)""".stripMargin
+  }
 
-    private def emCte: String =
-      s"""em AS (
-         |  SELECT DISTINCT cn.doc_id
-         |  FROM documents p JOIN documents n ON p.text = n.text
-         |  JOIN chunk cp ON cp.doc_id = p.doc_id
-         |  JOIN chunk cn ON cn.doc_id = n.doc_id
-         |  WHERE cp.b < cn.b)""".stripMargin
+  private def wmCtes(maxDf: Long, minShared: Long): String =
+    s"""${TextAnalysis.winnowSql},
+       |wf AS (SELECT fps.doc_id, fps.fp, chunk.b
+       |      FROM fps JOIN chunk ON fps.doc_id = chunk.doc_id),
+       |wdf AS (SELECT doc_id, fp, b,
+       |          count(*) OVER (PARTITION BY fp ORDER BY b
+       |            RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+       |            AS df_before
+       |        FROM wf),
+       |wcand AS (
+       |  SELECT p.doc_id AS prev_id, n.doc_id AS new_id
+       |  FROM wf p JOIN wdf n ON p.fp = n.fp AND p.b < n.b
+       |  WHERE n.df_before <= $maxDf),
+       |wm AS (SELECT DISTINCT new_id AS doc_id
+       |       FROM (SELECT prev_id, new_id, count(*) AS ns
+       |             FROM wcand GROUP BY 1, 2)
+       |       WHERE ns >= $minShared)""".stripMargin
 
-    private def lmCtes: String = {
-      val r = Dedup.MINHASH_K / Dedup.BANDS
-      val bandSelects = (0 until Dedup.BANDS).map { b =>
-        val parts = (0 until r).map(i => s"sig[${b * r + i + 1}]::VARCHAR")
-        s"SELECT doc_id, sh, $b AS band, md5(${parts.mkString(" || ',' || ")}) AS bkey FROM sig"
-      }
-      val sigList = (0 until Dedup.MINHASH_K)
-        .map(j => Sql.minhash("sh", j)).mkString(", ")
-      s"""sig AS (SELECT doc_id, sh, [$sigList] AS sig FROM shs),
-         |banded AS (
-         |  ${bandSelects.mkString("\n  UNION ALL ")}
-         |),
-         |lm AS (
-         |  SELECT DISTINCT nb.doc_id
-         |  FROM banded pa JOIN banded nb
-         |    ON pa.band = nb.band AND pa.bkey = nb.bkey
-         |  JOIN chunk ca ON ca.doc_id = pa.doc_id
-         |  JOIN chunk cb ON cb.doc_id = nb.doc_id
-         |  WHERE ca.b < cb.b
-         |    AND ${Dedup.jaccardSql("pa.sh", "nb.sh")} >= $verifyT)""".stripMargin
+  private def cmCtes(tauNum: Int, tauDen: Int): String =
+    s"""pg AS (SELECT shs.doc_id, unnest(sh) AS g, chunk.b
+       |      FROM shs JOIN chunk ON shs.doc_id = chunk.doc_id),
+       |ccand AS (SELECT DISTINCT p.doc_id AS prev_id, n.doc_id AS new_id
+       |  FROM pg p JOIN pg n ON p.g = n.g AND p.b < n.b),
+       |cm AS (SELECT DISTINCT c.new_id AS doc_id
+       |  FROM ccand c
+       |  JOIN shs sp ON sp.doc_id = c.prev_id
+       |  JOIN shs sn ON sn.doc_id = c.new_id
+       |  WHERE len(list_filter(sn.sh, x -> list_contains(sp.sh, x))) * $tauDen
+       |          >= len(sn.sh) * $tauNum)""".stripMargin
+
+  /** ANSI SQL of an admission replay over `documents` (narrowed by the
+    * `docMod` residue) in `chunks` ntile micro-batches: one CTE group
+    * per tier states its earlier-chunk match rule with no state
+    * machinery (no prefix filter, no posting buckets, no strategy — the
+    * containment group enumerates every shared-shingle pair, so a
+    * pruning bug that dropped a true candidate mismatches), and a doc is
+    * admitted iff no tier matches it. Every `q_stream_dedup_*` and
+    * `q_fuzzsd_*` oracle is this rendering. */
+  private[queries] def admitSql(tiers: Seq[StreamDedup.Tier], chunks: Int,
+      docMod: Option[(Int, Int)] = None): String = {
+    val groups = tiers.map {
+      case StreamDedup.Exact => ("em", emCte)
+      case StreamDedup.Lsh(verifyT) => ("lm", lmCtes(verifyT))
+      case StreamDedup.Winnow(maxDf, minShared) =>
+        ("wm", wmCtes(maxDf, minShared))
+      case StreamDedup.Contain(tauNum, tauDen, _) =>
+        ("cm", cmCtes(tauNum, tauDen))
     }
-
-    private def wmCtes: String =
-      s"""${TextAnalysis.winnowSql},
-         |wf AS (SELECT fps.doc_id, fps.fp, chunk.b
-         |      FROM fps JOIN chunk ON fps.doc_id = chunk.doc_id),
-         |wdf AS (SELECT doc_id, fp, b,
-         |          count(*) OVER (PARTITION BY fp ORDER BY b
-         |            RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-         |            AS df_before
-         |        FROM wf),
-         |wcand AS (
-         |  SELECT p.doc_id AS prev_id, n.doc_id AS new_id
-         |  FROM wf p JOIN wdf n ON p.fp = n.fp AND p.b < n.b
-         |  WHERE n.df_before <= $maxDf),
-         |wm AS (SELECT DISTINCT new_id AS doc_id
-         |       FROM (SELECT prev_id, new_id, count(*) AS ns
-         |             FROM wcand GROUP BY 1, 2)
-         |       WHERE ns >= $minShared)""".stripMargin
-
-    private def cmCtes: String =
-      s"""pg AS (SELECT shs.doc_id, unnest(sh) AS g, chunk.b
-         |      FROM shs JOIN chunk ON shs.doc_id = chunk.doc_id),
-         |ccand AS (SELECT DISTINCT p.doc_id AS prev_id, n.doc_id AS new_id
-         |  FROM pg p JOIN pg n ON p.g = n.g AND p.b < n.b),
-         |cm AS (SELECT DISTINCT c.new_id AS doc_id
-         |  FROM ccand c
-         |  JOIN shs sp ON sp.doc_id = c.prev_id
-         |  JOIN shs sn ON sn.doc_id = c.new_id
-         |  WHERE len(list_filter(sn.sh, x -> list_contains(sp.sh, x))) * ${tau._2}
-         |          >= len(sn.sh) * ${tau._1})""".stripMargin
-
-    def sql: String = {
-      val (ctes, matchedSel) = tier match {
-        case 0 => (Seq(lmCtes), "SELECT doc_id FROM lm")
-        case 1 => (Seq(wmCtes), "SELECT doc_id FROM wm")
-        case 2 => (Seq(cmCtes), "SELECT doc_id FROM cm")
-        case _ => (Seq(emCte, lmCtes, wmCtes, cmCtes),
-          "SELECT doc_id FROM em UNION SELECT doc_id FROM lm " +
-            "UNION SELECT doc_id FROM wm UNION SELECT doc_id FROM cm")
-      }
-      s"""
-      |WITH $baseCtes,
-      |${ctes.mkString(",\n")}
-      |SELECT c.doc_id, c.b AS batch FROM chunk c
-      |WHERE c.doc_id NOT IN ($matchedSel)
-      |ORDER BY c.doc_id
-      |""".stripMargin
-    }
+    val matchedSel =
+      groups.map { case (cte, _) => s"SELECT doc_id FROM $cte" }.mkString(" UNION ")
+    s"""
+    |WITH ${baseCtes(chunks, docMod)},
+    |${groups.map(_._2).mkString(",\n")}
+    |SELECT c.doc_id, c.b AS batch FROM chunk c
+    |WHERE c.doc_id NOT IN ($matchedSel)
+    |ORDER BY c.doc_id
+    |""".stripMargin
   }
 
   /** Fixed driver seeds under the DuckDB oracle — one per tier, each on

@@ -36,32 +36,10 @@ object SourcesQ {
     |FROM documents GROUP BY lang ORDER BY lang
     |""".stripMargin
 
-  // ONE shutdown hook draining a shared list — a hook per tempDir call
-  // would accumulate one thread per roundtrip invocation for the life of
-  // a long-running session
-  private val stagingDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      import java.nio.file.{Files, Path}
-      import java.util.Comparator
-      stagingDirs.forEach { d =>
-        if (Files.exists(d)) {
-          Files.walk(d).sorted(Comparator.reverseOrder[Path]())
-            .forEach(p => { Files.deleteIfExists(p); () })
-        }
-      }
-    }))
-
-  private def tempDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix)
-    // deleteOnExit can't remove a non-empty directory and Spark writes
-    // part files inside — record the dir and recurse at JVM exit so
-    // repeated roundtrip invocations don't leak staging dirs in /tmp
-    cleanupHook
-    stagingDirs.add(d)
-    d.toString
-  }
+  // staged copies are read lazily by the returned frame, so they live
+  // until JVM exit, when Scratch deletes them recursively
+  private def tempDir(prefix: String): String =
+    graft.core.Scratch.tempDir(prefix).toString
 
   val q_csv_roundtrip = Q(
     "q_csv_roundtrip",

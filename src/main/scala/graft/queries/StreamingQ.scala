@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.streaming.Streams
+import graft.streaming.{StreamDedup, Streams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -139,11 +139,7 @@ object StreamingQ {
       sortCols: Seq[org.apache.spark.sql.Column],
       tag: String, numFiles: Int,
       blockBytes: Option[Long] = None): java.nio.file.Path = {
-    // landing registered for deleteOnExit BEFORE its files: deleteOnExit
-    // runs in reverse registration order, so the chunk files go first and
-    // the by-then-empty directory last
     val landing = graft.core.Scratch.tempDir(s"graft_stream_$tag")
-    landing.toFile.deleteOnExit()
     // equal-count chronological chunks (single-partition window sort:
     // harness staging over the bounded replay corpus, not engine path)
     val w = org.apache.spark.sql.expressions.Window.orderBy(sortCols: _*)
@@ -169,7 +165,6 @@ object StreamingQ {
         java.nio.file.Files.list(tmp).iterator().asScala
           .foreach(p => java.nio.file.Files.delete(p))
         java.nio.file.Files.delete(tmp)
-        dest.toFile.deleteOnExit()
         // strictly increasing mod times pin the file source's oldest-first
         // processing order to the chronological chunk order
         dest.toFile.setLastModified(base + i * 2000L)
@@ -754,7 +749,6 @@ object StreamingQ {
       val model = GannIndex.build(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", leafSize = 200, spill = 0.15, nTrees = 3)
       val path = graft.core.Scratch.tempDir("graft_stream_idx")
-      path.toFile.deleteOnExit()
       GannIndex.save(model, path.toString)
       val landing = stageFrameChunks(
         e.filter(col("vec_id") % 4 === 0)
@@ -765,7 +759,6 @@ object StreamingQ {
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
       val ck = graft.core.Scratch.tempDir("graft_stream_idx_ck")
-      ck.toFile.deleteOnExit()
       val q = graft.streaming.IndexMaintain.maintainGann(
         stream, model, path.toString, ck.toString)
       try q.processAllAvailable() finally q.stop()
@@ -869,7 +862,6 @@ object StreamingQ {
       val model = IvfIndex.build(e.filter(col("vec_id") % 4 =!= 0),
         "vec_id", "embedding", k = 8)
       val path = graft.core.Scratch.tempDir("graft_stream_ivfidx")
-      path.toFile.deleteOnExit()
       IvfIndex.save(model, path.toString)
       val landing = stageFrameChunks(
         e.filter(col("vec_id") % 4 === 0)
@@ -880,7 +872,6 @@ object StreamingQ {
         .option("maxFilesPerTrigger", "1")
         .parquet(landing.toString)
       val ck = graft.core.Scratch.tempDir("graft_stream_ivfidx_ck")
-      ck.toFile.deleteOnExit()
       val q = graft.streaming.IndexMaintain.maintainIvf(
         stream, model, path.toString, ck.toString)
       try q.processAllAvailable() finally q.stop()
@@ -936,347 +927,108 @@ object StreamingQ {
     },
     None)
 
-  /** Streaming MinHash-LSH near-dup admission
-    * ([[graft.streaming.StreamDedup.lshAdmit]] — the incremental twin of
-    * [[Dedup.q_dedup_minhash_lsh]]; see that object's scaladoc for the
-    * admission rule, exactly-once state layout, and scale shape;
-    * StreamLshDedupSpec pins restart-resume): documents ARRIVE in
-    * chronological micro-batches and a document is ADMITTED iff no
-    * document from an EARLIER batch is a verified near-dup (shared LSH
-    * band key + Jaccard ≥ 0.7 over distinct 3-shingle sets).
+  /** One streaming-dedup entry: the documents replayed as 4
+    * chronological micro-batches through
+    * [[graft.streaming.StreamDedup.admit]] over `tiers`, checked against
+    * [[FuzzDedup.admitSql]] of the same tier set — the admission rule is
+    * batch-order-expressible in one SQL shot (a doc is admitted iff no
+    * tier matches it against an earlier ntile chunk), so the WHOLE
+    * replay (state appends, partition-pruned reads, batch boundaries)
+    * runs under the DuckDB hash check, admitted batch number included.
     *
-    * Oracle: the admission rule is batch-order-expressible in one SQL
-    * shot — a doc is admitted iff no band-sharing verified pair has an
-    * earlier ntile chunk — so the WHOLE replay (state appends,
-    * partition-pruned reads, batch boundaries) runs under the DuckDB
-    * hash check, admitted batch number included.
-    */
-  val q_stream_dedup_lsh = Q(
-    "q_stream_dedup_lsh",
+    * Fresh state root and checkpoint per invocation (the replay IS the
+    * entry); the admitted set is materialized locally and both trees
+    * are deleted before returning, so a bench pass leaves no state in
+    * tmpfs. `splitFloor` is the scan-split cap's floor (see
+    * [[replaySplitCap]]): a one-file chunk is otherwise ONE scan split
+    * and the per-doc kernels run on a single core (the
+    * q_stream_domain_cap discipline; 16 KB where the md5-heavy
+    * fingerprint kernel dominates — measured 2.7 s/batch single-split
+    * vs ~1 s split). */
+  private def dedupReplay(name: String, tag: String, splitFloor: Long,
+      tiers: Seq[StreamDedup.Tier]): Q = Q(
+    name,
     (s, dir) => {
-      val stream = stagedDocStream(s, dir, "lshdedup")
-      val landing = stagedDocLanding(s, dir, "lshdedup")
-      // fresh state root per invocation — the replay IS the entry
-      val root = graft.core.Scratch.tempDir("graft_lshdd")
-      root.toFile.deleteOnExit()
-      val ck = graft.core.Scratch.tempDir("graft_lshdd_ck")
+      val stream = stagedDocStream(s, dir, tag)
+      val landing = stagedDocLanding(s, dir, tag)
+      val root = graft.core.Scratch.tempDir(s"graft_$tag")
+      val ck = graft.core.Scratch.tempDir(s"graft_${tag}_ck")
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
       val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
       s.conf.set("spark.sql.shuffle.partitions", "4")
-      // scan-split cap so the shingle/minhash kernel parallelizes per
-      // micro-batch (the q_stream_domain_cap discipline: a one-file
-      // chunk is otherwise ONE scan split and the per-doc kernel runs
-      // on a single core)
       s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 64 * 1024).toString)
-      val q = graft.streaming.StreamDedup.lshAdmit(
-        stream, root.toString, ck.toString)
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        // the replay is complete and the result is at rest — drop the
-        // tmpfs checkpoint now (runToMemory's policy)
-        try {
-          val walk = java.nio.file.Files.walk(ck)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
-      }
-      // admitted output carries the micro-batch it was admitted in; the
-      // partition column `batch` comes back from the dir key as INT, so
-      // cast to the oracle's ntile BIGINT
-      graft.streaming.StreamDedup.readAdmitted(s, root.toString)
-        .orderBy(col("doc_id"))
+        replaySplitCap(s, landing, splitFloor).toString)
+      val q = StreamDedup.admit(tiers, stream, root.toString, ck.toString)
+      try {
+        try q.processAllAvailable() finally {
+          q.stop()
+          s.conf.set("spark.sql.shuffle.partitions", prevParts)
+          s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+        }
+        // the admitted output carries the micro-batch it was admitted
+        // in (readAdmitted casts the dir key to the oracle's BIGINT);
+        // collected before the state tree it lives in is deleted
+        val admitted = StreamDedup.readAdmitted(s, root.toString)
+          .orderBy(col("doc_id"))
+        s.createDataFrame(
+          java.util.Arrays.asList(admitted.collect(): _*), admitted.schema)
+      } finally Seq(ck, root).foreach(graft.core.Scratch.rmTree)
     },
-    Some {
-      val r = Dedup.MINHASH_K / Dedup.BANDS
-      val bandSelects = (0 until Dedup.BANDS).map { b =>
-        val parts = (0 until r).map(i => s"sig[${b * r + i + 1}]::VARCHAR")
-        s"SELECT doc_id, sh, $b AS band, md5(${parts.mkString(" || ',' || ")}) AS bkey FROM sig"
-      }
-      val sigList = (0 until Dedup.MINHASH_K)
-        .map(j => Sql.minhash("sh", j)).mkString(", ")
-      s"""
-      |WITH shs AS (${Dedup.shingleSql}),
-      |chunk AS (SELECT doc_id, ntile(4) OVER (ORDER BY doc_id) AS b
-      |          FROM documents),
-      |sig AS (SELECT doc_id, sh, [$sigList] AS sig FROM shs),
-      |banded AS (
-      |  ${bandSelects.mkString("\n  UNION ALL ")}
-      |),
-      |matched AS (
-      |  SELECT DISTINCT nb.doc_id
-      |  FROM banded pa JOIN banded nb
-      |    ON pa.band = nb.band AND pa.bkey = nb.bkey
-      |  JOIN chunk ca ON ca.doc_id = pa.doc_id
-      |  JOIN chunk cb ON cb.doc_id = nb.doc_id
-      |  WHERE ca.b < cb.b
-      |    AND ${Dedup.jaccardSql("pa.sh", "nb.sh")} >= ${Dedup.MINHASH_VERIFY_T})
-      |SELECT c.doc_id, c.b AS batch FROM chunk c
-      |WHERE c.doc_id NOT IN (SELECT doc_id FROM matched)
-      |ORDER BY c.doc_id
-      |""".stripMargin
-    })
+    Some(FuzzDedup.admitSql(tiers, chunks = 4)))
+
+  /** Streaming MinHash-LSH near-dup admission
+    * ([[graft.streaming.StreamDedup.lshAdmit]] — the incremental twin of
+    * [[Dedup.q_dedup_minhash_lsh]]; StreamLshDedupSpec pins
+    * restart-resume): a document is ADMITTED iff no document from an
+    * EARLIER batch is a verified near-dup (shared LSH band key + Jaccard
+    * ≥ 0.7 over distinct 3-shingle sets). */
+  val q_stream_dedup_lsh = dedupReplay("q_stream_dedup_lsh", "lshdedup",
+    64 * 1024, Seq(StreamDedup.Lsh(Dedup.MINHASH_VERIFY_T)))
 
   /** Streaming winnow (partial-overlap) admission
     * ([[graft.streaming.StreamDedup.winnowAdmit]] — the live form of
-    * "reject crawl pages that heavily quote the corpus", composing
-    * [[TextAnalysis.winnowFps]]'s MOSS fingerprints into the
-    * exactly-once admission loop; the third streaming dedup tier next
-    * to exact-hash and MinHash-LSH, and the batch-order-aware twin of
-    * [[Dedup.q_dedup_winnow]]): documents ARRIVE in chronological
-    * micro-batches and a document is ADMITTED iff no EARLIER-batch
-    * document shares ≥ 2 winnow fingerprints with it through fps whose
-    * prior document frequency is ≤ 50 (the batch twin's boilerplate
-    * cut, computed per batch as one broadcast-semi-joined scan of
-    * state — see winnowMatched's scaladoc for why the df shuffle is
-    * batch-bounded). StreamWinnowAdmitSpec pins restart-resume and the
-    * broadcast-pinned plan.
-    *
-    * Oracle: prior-df is a per-fp window over the ntile chunks
-    * (RANGE ... 1 PRECEDING = strictly earlier batches), so the whole
-    * replay — state appends, df cut, pair threshold, batch
-    * boundaries — runs under the DuckDB hash check, admitted batch
-    * number included. */
-  val q_stream_dedup_winnow = Q(
-    "q_stream_dedup_winnow",
-    (s, dir) => {
-      val stream = stagedDocStream(s, dir, "winnowdedup")
-      val landing = stagedDocLanding(s, dir, "winnowdedup")
-      val root = graft.core.Scratch.tempDir("graft_wndd")
-      root.toFile.deleteOnExit()
-      val ck = graft.core.Scratch.tempDir("graft_wndd_ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // scan-split cap: the per-doc fingerprint kernel (an md5 per
-      // 3-shingle — the oracle-shared hash) dominates this entry, and a
-      // one-file chunk is otherwise ONE scan split running it on a
-      // single core (measured 2.7 s/batch single-split vs ~1 s split —
-      // the q_stream_domain_cap discipline)
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 16 * 1024).toString)
-      val q = graft.streaming.StreamDedup.winnowAdmit(
-        stream, root.toString, ck.toString)
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        try {
-          val walk = java.nio.file.Files.walk(ck)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
-      }
-      graft.streaming.StreamDedup.readAdmitted(s, root.toString)
-        .orderBy(col("doc_id"))
-    },
-    Some(s"""
-      |WITH ${TextAnalysis.winnowSql},
-      |chunk AS (SELECT doc_id, ntile(4) OVER (ORDER BY doc_id) AS b
-      |          FROM documents),
-      |f AS (SELECT fps.doc_id, fps.fp, chunk.b
-      |      FROM fps JOIN chunk ON fps.doc_id = chunk.doc_id),
-      |fdf AS (SELECT doc_id, fp, b,
-      |          count(*) OVER (PARTITION BY fp ORDER BY b
-      |            RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |            AS df_before
-      |        FROM f),
-      |cand AS (
-      |  SELECT p.doc_id AS prev_id, n.doc_id AS new_id
-      |  FROM f p JOIN fdf n ON p.fp = n.fp AND p.b < n.b
-      |  WHERE n.df_before <= 50),
-      |pairs AS (SELECT prev_id, new_id, count(*) AS ns
-      |          FROM cand GROUP BY 1, 2),
-      |matched AS (SELECT DISTINCT new_id AS doc_id FROM pairs WHERE ns >= 2)
-      |SELECT c.doc_id, c.b AS batch FROM chunk c
-      |WHERE c.doc_id NOT IN (SELECT doc_id FROM matched)
-      |ORDER BY c.doc_id
-      |""".stripMargin))
+    * "reject crawl pages that heavily quote the corpus", the
+    * batch-order-aware twin of [[Dedup.q_dedup_winnow]]): a document is
+    * ADMITTED iff no EARLIER-batch document shares ≥ 2 winnow
+    * fingerprints with it through fps whose prior document frequency is
+    * ≤ 50 (the batch twin's boilerplate cut; the oracle's prior df is a
+    * per-fp window over the ntile chunks, RANGE ... 1 PRECEDING =
+    * strictly earlier batches). StreamWinnowAdmitSpec pins
+    * restart-resume and the broadcast-pinned plan. */
+  val q_stream_dedup_winnow = dedupReplay("q_stream_dedup_winnow",
+    "winnowdedup", 16 * 1024,
+    Seq(StreamDedup.Winnow(maxDf = 50L, minShared = 2L)))
 
   /** Streaming containment admission
-    * ([[graft.streaming.StreamDedup.containAdmit]] — the FOURTH tier of
-    * the live dedup ladder: exact hash → MinHash-LSH → winnow overlap →
-    * shingle containment; the batch-order-aware twin of
-    * [[Dedup.q_dedup_containment]]): documents ARRIVE in chronological
-    * micro-batches and a document is ADMITTED iff no EARLIER-batch
-    * document contains ≥ 4/5 of its distinct 3-shingles (an exact
-    * rational — integer cross-multiplication on BOTH engines, no float
-    * boundary) — the "reject crawl pages whose content is mostly
-    * already in the corpus" rule. Candidates go through the EXACT
-    * prefix filter (rarest |A|−⌈τ·|A|⌉+1 shingles by prior df — pruning
-    * only, provably answer-preserving; see containMatched) over
-    * BUCKET-PRUNED posting reads (StreamDedup.postingState: the
-    * compacted posting base is partitioned by b = g mod 256 and each
-    * micro-batch reads only the buckets its own shingles hit — the
-    * per-batch posting scan no longer grows with the corpus), neither
-    * of which the ORACLE needs to mirror: it enumerates every
-    * shared-shingle pair directly, so a prefix- or bucket-filter bug
-    * that dropped a true candidate would hash-mismatch.
+    * ([[graft.streaming.StreamDedup.containAdmit]] — the batch-order-aware
+    * twin of [[Dedup.q_dedup_containment]]): a document is ADMITTED iff
+    * no EARLIER-batch document contains ≥ 4/5 of its distinct 3-shingles
+    * (an exact rational — integer cross-multiplication on BOTH engines,
+    * no float boundary). The engine's exact prefix filter and
+    * bucket-pruned posting reads are pruning only; the ORACLE enumerates
+    * every shared-shingle pair directly, so a prefix- or bucket-filter
+    * bug that dropped a true candidate would hash-mismatch.
     * StreamContainAdmitSpec pins restart-resume, the boundary-exact
-    * integer prefix bound, the bucket pruning, and the
-    * broadcast-pinned plan. */
-  val q_stream_dedup_containment = Q(
-    "q_stream_dedup_containment",
-    (s, dir) => {
-      val stream = stagedDocStream(s, dir, "containdedup")
-      val landing = stagedDocLanding(s, dir, "containdedup")
-      val root = graft.core.Scratch.tempDir("graft_ctdd")
-      root.toFile.deleteOnExit()
-      val ck = graft.core.Scratch.tempDir("graft_ctdd_ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // scan-split cap: the per-doc shingle kernel parallelizes per
-      // micro-batch (the q_stream_domain_cap discipline)
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 64 * 1024).toString)
-      val q = graft.streaming.StreamDedup.containAdmit(
-        stream, root.toString, ck.toString)
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        try {
-          val walk = java.nio.file.Files.walk(ck)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
-      }
-      graft.streaming.StreamDedup.readAdmitted(s, root.toString)
-        .orderBy(col("doc_id"))
-    },
-    Some(s"""
-      |WITH shs AS (${Dedup.shingleSql}),
-      |chunk AS (SELECT doc_id, ntile(4) OVER (ORDER BY doc_id) AS b
-      |          FROM documents),
-      |f AS (SELECT shs.doc_id, unnest(sh) AS g, chunk.b
-      |      FROM shs JOIN chunk ON shs.doc_id = chunk.doc_id),
-      |cand AS (SELECT DISTINCT p.doc_id AS prev_id, n.doc_id AS new_id
-      |  FROM f p JOIN f n ON p.g = n.g AND p.b < n.b),
-      |matched AS (SELECT DISTINCT c.new_id AS doc_id
-      |  FROM cand c
-      |  JOIN shs sp ON sp.doc_id = c.prev_id
-      |  JOIN shs sn ON sn.doc_id = c.new_id
-      |  WHERE len(list_filter(sn.sh, x -> list_contains(sp.sh, x))) * 5
-      |          >= len(sn.sh) * 4)
-      |SELECT c.doc_id, c.b AS batch FROM chunk c
-      |WHERE c.doc_id NOT IN (SELECT doc_id FROM matched)
-      |ORDER BY c.doc_id
-      |""".stripMargin))
+    * integer prefix bound, the bucket pruning, and the broadcast-pinned
+    * plan. */
+  val q_stream_dedup_containment = dedupReplay("q_stream_dedup_containment",
+    "containdedup", 64 * 1024,
+    Seq(StreamDedup.Contain(4, 5, strategy = "auto")))
 
   /** The COMPOSED streaming admission ladder
     * ([[graft.streaming.StreamDedup.ladderAdmit]]): all four dedup
     * tiers — exact text hash, MinHash-LSH (Jaccard ≥ 0.7), winnow
     * overlap (≥ 2 shared fingerprints through prior-df ≤ 50), shingle
-    * containment (≥ 4/5, exact rational) — run in ONE foreachBatch over
-    * ONE shared state family, the production pipeline shape. A doc is
-    * admitted iff NO tier matches it against earlier-batch state;
-    * every doc's keys enter every tier's state regardless (first-seen
-    * wins), so the ladder's admitted set is exactly the INTERSECTION of
-    * the four standalone tiers' — the oracle is their conjunction, and
-    * the whole replay (shared-`sh` reads, bucket-pruned posting scans,
-    * batch boundaries) runs under the DuckDB hash check, admitted batch
-    * number included. StreamLadderAdmitSpec pins restart-resume,
-    * mid-window compaction, and the single-copy shingle state. */
-  val q_stream_dedup_ladder = Q(
-    "q_stream_dedup_ladder",
-    (s, dir) => {
-      val stream = stagedDocStream(s, dir, "ladderdedup")
-      val landing = stagedDocLanding(s, dir, "ladderdedup")
-      val root = graft.core.Scratch.tempDir("graft_lddd")
-      root.toFile.deleteOnExit()
-      val ck = graft.core.Scratch.tempDir("graft_lddd_ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      // scan-split cap: the per-doc shingle/minhash/fingerprint kernels
-      // parallelize per micro-batch (the q_stream_domain_cap discipline)
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 16 * 1024).toString)
-      val q = graft.streaming.StreamDedup.ladderAdmit(
-        stream, root.toString, ck.toString)
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        try {
-          val walk = java.nio.file.Files.walk(ck)
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close()
-        } catch { case _: java.io.IOException => () }
-      }
-      graft.streaming.StreamDedup.readAdmitted(s, root.toString)
-        .orderBy(col("doc_id"))
-    },
-    Some {
-      val r = Dedup.MINHASH_K / Dedup.BANDS
-      val bandSelects = (0 until Dedup.BANDS).map { b =>
-        val parts = (0 until r).map(i => s"sig[${b * r + i + 1}]::VARCHAR")
-        s"SELECT doc_id, sh, $b AS band, md5(${parts.mkString(" || ',' || ")}) AS bkey FROM sig"
-      }
-      val sigList = (0 until Dedup.MINHASH_K)
-        .map(j => Sql.minhash("sh", j)).mkString(", ")
-      s"""
-      |WITH shs AS (${Dedup.shingleSql}),
-      |chunk AS (SELECT doc_id, ntile(4) OVER (ORDER BY doc_id) AS b
-      |          FROM documents),
-      |em AS (
-      |  SELECT DISTINCT cn.doc_id
-      |  FROM documents p JOIN documents n ON p.text = n.text
-      |  JOIN chunk cp ON cp.doc_id = p.doc_id
-      |  JOIN chunk cn ON cn.doc_id = n.doc_id
-      |  WHERE cp.b < cn.b),
-      |sig AS (SELECT doc_id, sh, [$sigList] AS sig FROM shs),
-      |banded AS (
-      |  ${bandSelects.mkString("\n  UNION ALL ")}
-      |),
-      |lm AS (
-      |  SELECT DISTINCT nb.doc_id
-      |  FROM banded pa JOIN banded nb
-      |    ON pa.band = nb.band AND pa.bkey = nb.bkey
-      |  JOIN chunk ca ON ca.doc_id = pa.doc_id
-      |  JOIN chunk cb ON cb.doc_id = nb.doc_id
-      |  WHERE ca.b < cb.b
-      |    AND ${Dedup.jaccardSql("pa.sh", "nb.sh")} >= ${Dedup.MINHASH_VERIFY_T}),
-      |${TextAnalysis.winnowSql},
-      |wf AS (SELECT fps.doc_id, fps.fp, chunk.b
-      |      FROM fps JOIN chunk ON fps.doc_id = chunk.doc_id),
-      |wdf AS (SELECT doc_id, fp, b,
-      |          count(*) OVER (PARTITION BY fp ORDER BY b
-      |            RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-      |            AS df_before
-      |        FROM wf),
-      |wcand AS (
-      |  SELECT p.doc_id AS prev_id, n.doc_id AS new_id
-      |  FROM wf p JOIN wdf n ON p.fp = n.fp AND p.b < n.b
-      |  WHERE n.df_before <= 50),
-      |wm AS (SELECT DISTINCT new_id AS doc_id
-      |       FROM (SELECT prev_id, new_id, count(*) AS ns
-      |             FROM wcand GROUP BY 1, 2)
-      |       WHERE ns >= 2),
-      |pg AS (SELECT shs.doc_id, unnest(sh) AS g, chunk.b
-      |      FROM shs JOIN chunk ON shs.doc_id = chunk.doc_id),
-      |ccand AS (SELECT DISTINCT p.doc_id AS prev_id, n.doc_id AS new_id
-      |  FROM pg p JOIN pg n ON p.g = n.g AND p.b < n.b),
-      |cm AS (SELECT DISTINCT c.new_id AS doc_id
-      |  FROM ccand c
-      |  JOIN shs sp ON sp.doc_id = c.prev_id
-      |  JOIN shs sn ON sn.doc_id = c.new_id
-      |  WHERE len(list_filter(sn.sh, x -> list_contains(sp.sh, x))) * 5
-      |          >= len(sn.sh) * 4),
-      |matched AS (SELECT doc_id FROM em UNION SELECT doc_id FROM lm
-      |  UNION SELECT doc_id FROM wm UNION SELECT doc_id FROM cm)
-      |SELECT c.doc_id, c.b AS batch FROM chunk c
-      |WHERE c.doc_id NOT IN (SELECT doc_id FROM matched)
-      |ORDER BY c.doc_id
-      |""".stripMargin
-    })
+    * containment (≥ 4/5, exact rational) — in ONE foreachBatch over ONE
+    * shared state family, the production pipeline shape. Its admitted
+    * set is the intersection of the four standalone tiers', so the
+    * oracle is their conjunction. StreamLadderAdmitSpec pins
+    * restart-resume, mid-window compaction, and the single-copy shingle
+    * state. */
+  val q_stream_dedup_ladder = dedupReplay("q_stream_dedup_ladder",
+    "ladderdedup", 16 * 1024,
+    Seq(StreamDedup.Exact, StreamDedup.Lsh(Dedup.MINHASH_VERIFY_T),
+      StreamDedup.Winnow(50L, 2L), StreamDedup.Contain(4, 5, "auto")))
 
   /** Streaming domain cap — [[Corpus.q_domain_cap]]'s bounded-heap
     * per-source top-k run as a streaming aggregate over the multi-batch

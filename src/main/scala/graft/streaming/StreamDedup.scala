@@ -6,36 +6,47 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming dedup ADMISSION — the incremental dedup a live ingestion
-  * pipeline runs, as a ladder of three tiers over one shared state
-  * discipline (exact-hash streaming dedup, the zeroth tier, lives in
-  * `StreamingQ.q_stream_dedup`):
+  * pipeline runs, as a ladder of four tiers over one shared state
+  * discipline. Each tier is defined ONCE (a [[Tier]] value: the batch
+  * kernels it needs, the state kinds it persists, its matched ids
+  * against prior state), and every entry point is a composition of
+  * tiers run by the one admission loop [[admit]]:
   *
-  *  - [[lshAdmit]] — MinHash-LSH near-dup (batch twin
-  *    `Dedup.q_dedup_minhash_lsh`): reject if an EARLIER-batch doc
-  *    shares an LSH band key and verifies at Jaccard ≥ `verifyT`;
-  *  - [[winnowAdmit]] — partial overlap (batch twin `q_dedup_winnow`):
-  *    reject if an earlier doc shares ≥ minShared MOSS winnowing
-  *    fingerprints through fps below the boilerplate df cut;
-  *  - [[containAdmit]] — containment (batch twin
-  *    `q_dedup_containment`): reject if one earlier doc contains ≥ τ
-  *    (an exact rational) of the new doc's distinct 3-shingles (exact
+  * {{{
+  * tier           kernels            state kinds   batch twin
+  * Exact          text hash          hashes        Dedup.q_dedup_exact
+  * Lsh(verifyT)   shingles + bands   bands, sh     Dedup.q_dedup_minhash_lsh
+  * Winnow(maxDf,  winnow fps         fps           Dedup.q_dedup_winnow
+  *   minShared)
+  * Contain(tau,   shingles           post, sh      Dedup.q_dedup_containment
+  *   strategy)
+  * }}}
+  *
+  *  - [[lshAdmit]] — reject if an EARLIER-batch doc shares an LSH band
+  *    key and verifies at Jaccard ≥ `verifyT`;
+  *  - [[winnowAdmit]] — reject if an earlier doc shares ≥ minShared
+  *    MOSS winnowing fingerprints through fps below the boilerplate df
+  *    cut;
+  *  - [[containAdmit]] — reject if one earlier doc contains ≥ τ (an
+  *    exact rational) of the new doc's distinct 3-shingles (exact
   *    prefix-filter candidate cut, bucket-pruned posting reads);
-  *  - [[ladderAdmit]] — ALL FOUR tiers (exact hash included) composed
-  *    in one foreachBatch over one SHARED state family — the
-  *    production shape; one `sh` kind serves both shingle-consuming
-  *    tiers.
+  *  - [[ladderAdmit]] — ALL FOUR tiers (exact hash included) in one
+  *    foreachBatch over one SHARED state family — the production shape;
+  *    one `sh` kind serves both shingle-consuming tiers. A document is
+  *    admitted iff no tier matches it, so the ladder's admitted set is
+  *    the intersection of the standalone tiers' (StreamTierCompositionSpec).
   *
   * EVERY batch document's keys/sets are appended to persisted state
   * regardless of admission — first-seen wins, so a dup of a dropped
   * dup is still a dup.
   *
-  * Exactly-once like [[IndexMaintain]]: all three state/output surfaces
-  * land under batch-keyed dirs with overwrite semantics, and the
-  * candidate join reads ONLY state with batch < current (partition
-  * pruning on the dir key for live batch dirs; a plain data-column
-  * filter on the compacted base), so an at-least-once replay of a
-  * micro-batch replaces its own state and can never match against it —
-  * StreamLshDedupSpec pins restart-resume.
+  * Exactly-once like [[IndexMaintain]]: every state kind and the
+  * admitted output land under batch-keyed dirs with overwrite
+  * semantics, and the candidate joins read ONLY state with batch <
+  * current (partition pruning on the dir key for live batch dirs; a
+  * plain data-column filter on the compacted base), so an at-least-once
+  * replay of a micro-batch replaces its own state and can never match
+  * against it — StreamLshDedupSpec pins restart-resume.
   *
   * == The 100 TB state discipline (round-12 verdict) ==
   *
@@ -79,8 +90,36 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object StreamDedup {
 
-  private def bandsRoot(stateRoot: String) = s"$stateRoot/bands"
-  private def shRoot(stateRoot: String) = s"$stateRoot/sh"
+  /** One persisted state kind: live `<name>/batch=<id>` dirs (batch is
+    * the dir key), the compacted `<name>_base` (batch a data column),
+    * its data columns, and the bucket column the posting base may be
+    * partitioned by (see [[PostBuckets]]). The admission reads and
+    * writes, [[compactState]]'s folds and the `compact_stream_state`
+    * operator's report all walk [[StateKind.all]]. */
+  private[graft] final case class StateKind(name: String, cols: Seq[String],
+      bucket: Option[String] = None)
+
+  private[graft] object StateKind {
+    val Hashes = StateKind("hashes", Seq("doc_id", "h"))
+    val Bands = StateKind("bands", Seq("doc_id", "band", "bkey"))
+    val Sh = StateKind("sh", Seq("doc_id", "sh", "nsh"))
+    val Fps = StateKind("fps", Seq("doc_id", "fp"))
+    val Post = StateKind("post", Seq("doc_id", "g"), bucket = Some("b"))
+    val Admitted = StateKind("admitted", Seq("doc_id"))
+    val all: Seq[StateKind] = Seq(Hashes, Bands, Sh, Fps, Post, Admitted)
+  }
+
+  /** The per-trigger batch kernels a tier can ask for. Shingles and
+    * bands are one chain (bands hash the cached shingle sets); winnow
+    * fingerprints are independent of both; the text hash is a cheap
+    * projection and never cached. */
+  private[graft] sealed trait Kernel
+  private[graft] object Kernel {
+    case object Shingles extends Kernel
+    case object Bands extends Kernel
+    case object Fps extends Kernel
+    case object TextHash extends Kernel
+  }
 
   /** Small daemon pool for OVERLAPPING the independent per-batch state
     * writes (guide §2.6 "overlap independent jobs"): each admission
@@ -181,12 +220,13 @@ object StreamDedup {
 
   /** Accumulated state strictly BEFORE `batchId`: compacted base (batch
     * is a data column there) ∪ live batch dirs (batch is the partition
-    * dir key) — None when neither exists yet. `cols` projects both
-    * sides to one layout. */
-  private def readState(sp: SparkSession, stateRoot: String, kind: String,
-      batchId: Long, cols: Seq[String]): Option[DataFrame] = {
-    val live = s"$stateRoot/$kind"
-    val base = s"$stateRoot/${kind}_base"
+    * dir key) — None when neither exists yet. Both sides are projected
+    * to the kind's columns (bucket included). */
+  private def readState(sp: SparkSession, stateRoot: String, kind: StateKind,
+      batchId: Long): Option[DataFrame] = {
+    val live = s"$stateRoot/${kind.name}"
+    val base = s"$stateRoot/${kind.name}_base"
+    val cols = kind.cols ++ kind.bucket
     val parts = Seq(live, base).filter(exists(sp, _)).map(d =>
       sp.read.parquet(d).filter(col("batch") < batchId)
         .select(cols.map(col): _*))
@@ -436,26 +476,6 @@ object StreamDedup {
   private def postBucket(g: Column): Column =
     pmod(g, lit(PostBuckets.toLong)).cast("int")
 
-  /** Batch posting-state append: (doc_id, g, b) under
-    * `post/batch=<id>`. Posting keys are 64-bit shingle hashes, not the
-    * shingle strings: equality is all candidate generation needs, a
-    * hash collision only ADDS a candidate the exact array-intersect
-    * verify then drops (admission decisions provably unchanged), and
-    * the at-rest posting state shrinks to two longs + a bucket per
-    * row — the state term every batch scans (measured: string postings
-    * made the 10× per-batch wall GROW 2.7× across the replay where the
-    * LSH tier's md5-key band state stayed flat). */
-  private def writePostState(d: DataFrame, stateRoot: String,
-      batchId: Long): Unit =
-    // size-based per-trigger file count (see sizedForWrite): the serving
-    // read pays O(files) open cost per batch, so a tiny trigger still
-    // lands as ONE file — but never a hardcoded single write task;
-    // at-rest sizing beyond the trigger is compactState's job
-    sizedForWrite(d.select(col("doc_id"),
-        explode(transform(col("sh"), s => xxhash64(s))).as("g"))
-      .withColumn("b", postBucket(col("g"))))
-      .write.mode("overwrite").parquet(s"$stateRoot/post/batch=$batchId")
-
   /** Bucket-PRUNED posting state strictly before `batchId`: the batch's
     * own shingles determine the bucket set (≤ [[PostBuckets]] values, a
     * bounded driver collect off the cached batch frame), and the
@@ -464,7 +484,7 @@ object StreamDedup {
     * yet. */
   private[streaming] def postingState(sp: SparkSession, stateRoot: String,
       batchId: Long, d: DataFrame): Option[DataFrame] =
-    readState(sp, stateRoot, "post", batchId, Seq("doc_id", "g", "b"))
+    readState(sp, stateRoot, StateKind.Post, batchId)
       .map { post =>
         val buckets = d.select(explode(transform(col("sh"),
             s => postBucket(xxhash64(s)))).as("b"))
@@ -476,122 +496,6 @@ object StreamDedup {
         if (buckets.size >= PostBuckets) post.select("doc_id", "g")
         else post.filter(col("b").isin(buckets: _*)).select("doc_id", "g")
       }
-
-  /** Streaming containment admission — the fourth tier of the live
-    * dedup ladder (exact hash → MinHash-LSH → winnow overlap → shingle
-    * containment): a document is ADMITTED iff no EARLIER-batch document
-    * CONTAINS ≥ `t` of its distinct 3-shingles — the "reject crawl
-    * pages whose content is mostly already in the corpus" rule, the
-    * batch-order-aware twin of
-    * [[graft.queries.Dedup.q_dedup_containment]] with the same exact
-    * prefix-filter candidate cut (see [[containMatched]], threshold the
-    * exact rational tauNum/tauDen). First-seen wins; same batch-keyed
-    * exactly-once layout, broadcast-pinned joins, bucket-pruned posting
-    * reads (see [[postingState]]), and [[compactState]] maintenance
-    * (kinds `post` + `sh`).
-    *
-    * `strategy`: `auto` (default — per-batch cost-based pick, see
-    * [[chooseContainStrategy]]) | `raw` | `prefix`. All three admit
-    * identically (spec-pinned); the choice is purely physical. */
-  def containAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
-      tauNum: Int = 4, tauDen: Int = 5,
-      strategy: String = "auto"): StreamingQuery = {
-    require(Set("auto", "raw", "prefix").contains(strategy),
-      s"containAdmit strategy must be auto|raw|prefix, got '$strategy'")
-    val outRoot = admittedRoot(stateRoot)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        val d = Dedup.shingleOf(batch.toDF()).cache()
-        try {
-          val matched = (
-            postingState(sp, stateRoot, batchId, d),
-            readState(sp, stateRoot, "sh", batchId,
-              Seq("doc_id", "sh", "nsh"))) match {
-            case (Some(post), Some(psh)) =>
-              val chosen =
-                if (strategy == "auto") chooseContainStrategy(d, post)
-                else strategy
-              if (chosen == "raw")
-                containMatchedRaw(d, post, psh, tauNum, tauDen)
-              else containMatched(d, post, psh, tauNum, tauDen)
-            case _ => sp.range(0).select(col("id").as("doc_id"))
-          }
-          // admitted output + the two state kinds are mutually
-          // independent (nothing reads any of them until the next
-          // trigger), so all three land concurrently — one write round
-          // per trigger instead of admit-then-states (round 18, the
-          // ladder driver-gap work applied to every tier)
-          writeAll(sp, Seq(
-            (s"contain b$batchId: admit", () =>
-              batch.toDF().select(col("doc_id"))
-                .join(broadcast(matched), Seq("doc_id"), "left_anti")
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/batch=${batchId + 1}")),
-            (s"contain b$batchId: post", () =>
-              writePostState(d, stateRoot, batchId)),
-            (s"contain b$batchId: sh", () =>
-              sizedForWrite(d.select(col("doc_id"), col("sh"), col("nsh")))
-                .write.mode("overwrite")
-                .parquet(s"$stateRoot/sh/batch=$batchId"))))
-        } finally { d.unpersist(); () }
-        ()
-      }
-      .start()
-  }
-
-  /** Attach the LSH admission loop to a document stream (doc_id, text,
-    * ...). Admitted ids land under `stateRoot/admitted/batch=<n>` with
-    * n = batchId + 1 (1-based, matching an ntile replay oracle); band
-    * and shingle state under `stateRoot/bands|sh/batch=<batchId>` (live)
-    * plus `stateRoot/bands_base|sh_base` once [[compactState]] has run.
-    * The returned query is live; callers own its lifecycle. */
-  def lshAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
-      verifyT: Double = Dedup.MINHASH_VERIFY_T): StreamingQuery = {
-    val outRoot = admittedRoot(stateRoot)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        val d = Dedup.shingleOf(batch.toDF()).cache()
-        val banded = Dedup.bandedOf(d).cache()
-        try {
-          val matched = (
-            readState(sp, stateRoot, "bands", batchId,
-              Seq("doc_id", "band", "bkey")),
-            readState(sp, stateRoot, "sh", batchId,
-              Seq("doc_id", "sh", "nsh"))) match {
-            case (Some(pb), Some(psh)) =>
-              matchedAgainstState(d, banded, pb, psh, verifyT)
-            case _ => sp.range(0).select(col("id").as("doc_id"))
-          }
-          // `batch` is NOT a data column in the live dirs — it comes
-          // back from the partition dir key on read (a same-named data
-          // column would collide with partition discovery). Admitted
-          // output and both state kinds are mutually independent
-          // (nothing reads them until the next trigger; an
-          // at-least-once replay overwrites the same batch-keyed dirs
-          // and the batch< filter keeps it blind to them), so all three
-          // land concurrently — one write round per trigger
-          writeAll(sp, Seq(
-            (s"lsh b$batchId: admit", () =>
-              batch.toDF().select(col("doc_id"))
-                .join(broadcast(matched), Seq("doc_id"), "left_anti")
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/batch=${batchId + 1}")),
-            (s"lsh b$batchId: bands", () => sizedForWrite(banded)
-              .write.mode("overwrite")
-              .parquet(s"${bandsRoot(stateRoot)}/batch=$batchId")),
-            (s"lsh b$batchId: sh", () =>
-              sizedForWrite(d.select(col("doc_id"), col("sh"), col("nsh")))
-                .write.mode("overwrite")
-                .parquet(s"${shRoot(stateRoot)}/batch=$batchId"))))
-        } finally { d.unpersist(); banded.unpersist() }
-        ()
-      }
-      .start()
-  }
 
   /** The winnow per-batch admission core, exposed for plan-shape
     * pinning: matched (heavy-overlap-with-earlier) doc ids of the
@@ -625,81 +529,248 @@ object StreamDedup {
       .select(col("new_id").as("doc_id")).distinct()
   }
 
-  /** Streaming winnow (partial-overlap) admission — the live form of
-    * "reject crawl pages that heavily quote the corpus": a document is
-    * ADMITTED iff no document from an EARLIER micro-batch shares
-    * ≥ `minShared` winnowing fingerprints with it through fps whose
-    * PRIOR document frequency is ≤ `maxDf` (the
-    * [[graft.queries.Dedup.q_dedup_winnow]] rule, batch-order-aware —
-    * the third admission tier next to exact-hash and MinHash-LSH).
-    * First-seen wins like [[lshAdmit]]: every doc's fingerprints land
-    * in state regardless of admission; same batch-keyed exactly-once
-    * layout, same broadcast-pinned per-batch joins, same
-    * [[compactState]] maintenance (kind `fps`). Admitted ids land
-    * under `stateRoot/admitted/batch=<n>`, n = batchId + 1. */
-  def winnowAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
-      maxDf: Long = 50L, minShared: Long = 2L): StreamingQuery = {
+  /** One micro-batch as the tiers see it: the batch kernels, each built
+    * and cached on first use (and released by [[release]]), and the
+    * prior state of each kind, read at most once per trigger and
+    * strictly before `batchId`. */
+  private[streaming] final class Trigger(val sp: SparkSession,
+      val batch: DataFrame, val stateRoot: String, val batchId: Long) {
+    private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    private def keep(df: DataFrame): DataFrame =
+      synchronized { cached += df; df.cache() }
+    lazy val shingles: DataFrame = keep(Dedup.shingleOf(batch))
+    lazy val bands: DataFrame = keep(Dedup.bandedOf(shingles))
+    lazy val fps: DataFrame = keep(graft.queries.TextAnalysis.winnowFps(batch))
+    lazy val textHash: DataFrame =
+      batch.select(col("doc_id"), xxhash64(col("text")).as("h"))
+
+    private val priors =
+      scala.collection.mutable.Map.empty[StateKind, Option[DataFrame]]
+    def prior(kind: StateKind): Option[DataFrame] =
+      priors.getOrElseUpdate(kind, readState(sp, stateRoot, kind, batchId))
+
+    /** The batch rows a state kind persists. Posting keys are 64-bit
+      * shingle hashes, not the shingle strings: equality is all
+      * candidate generation needs, a hash collision only ADDS a
+      * candidate the exact array-intersect verify then drops (admission
+      * decisions provably unchanged), and the at-rest posting state
+      * shrinks to two longs + a bucket per row — the state term every
+      * batch scans (measured: string postings made the 10× per-batch
+      * wall GROW 2.7× across the replay where the LSH tier's md5-key
+      * band state stayed flat). Exact-tier hashes are 64-bit text hashes:
+      * a collision could only DROP a unique doc, at xxhash64 odds, the
+      * trade the batch incremental-dedup twin accepts too. */
+    def stateOf(kind: StateKind): DataFrame = kind match {
+      case StateKind.Hashes => textHash
+      case StateKind.Bands => bands
+      case StateKind.Sh => shingles.select(col("doc_id"), col("sh"), col("nsh"))
+      case StateKind.Fps => fps
+      case StateKind.Post =>
+        shingles.select(col("doc_id"),
+            explode(transform(col("sh"), s => xxhash64(s))).as("g"))
+          .withColumn("b", postBucket(col("g")))
+      case other =>
+        throw new IllegalArgumentException(s"no batch rows for ${other.name}")
+    }
+
+    def release(): Unit = cached.foreach(_.unpersist())
+  }
+
+  /** One admission tier: the batch kernels it needs, the state kinds it
+    * persists, and its matched (near-dup-of-earlier) ids of the
+    * trigger's batch — None while its prior state is empty. */
+  private[graft] sealed trait Tier {
+    def name: String
+    /** The tier's thresholds as `key=value` words (empty for [[Exact]]). */
+    def params: String
+    def kernels: Seq[Kernel]
+    def kinds: Seq[StateKind]
+    private[streaming] def matched(t: Trigger): Option[DataFrame]
+  }
+
+  /** Exact text-hash tier: reject a doc whose text hash an earlier batch
+    * already holds. */
+  private[graft] case object Exact extends Tier {
+    val name = "exact"
+    val params = ""
+    val kernels = Seq(Kernel.TextHash)
+    val kinds = Seq(StateKind.Hashes)
+    private[streaming] def matched(t: Trigger): Option[DataFrame] =
+      t.prior(StateKind.Hashes).map(_.select(col("h"))
+        .join(broadcast(t.textHash), Seq("h")).select(col("doc_id")).distinct())
+  }
+
+  /** MinHash-LSH tier ([[matchedAgainstState]]). */
+  private[graft] final case class Lsh(verifyT: Double) extends Tier {
+    val name = "lsh"
+    def params = s"verifyT=$verifyT"
+    val kernels = Seq(Kernel.Shingles, Kernel.Bands)
+    val kinds = Seq(StateKind.Bands, StateKind.Sh)
+    private[streaming] def matched(t: Trigger): Option[DataFrame] =
+      for (pb <- t.prior(StateKind.Bands); psh <- t.prior(StateKind.Sh))
+        yield matchedAgainstState(t.shingles, t.bands, pb, psh, verifyT)
+  }
+
+  /** Winnow-overlap tier ([[winnowMatched]]). */
+  private[graft] final case class Winnow(maxDf: Long, minShared: Long)
+      extends Tier {
+    val name = "winnow"
+    def params = s"maxDf=$maxDf minShared=$minShared"
+    val kernels = Seq(Kernel.Fps)
+    val kinds = Seq(StateKind.Fps)
+    private[streaming] def matched(t: Trigger): Option[DataFrame] =
+      t.prior(StateKind.Fps).map(winnowMatched(t.fps, _, maxDf, minShared))
+  }
+
+  /** Containment tier: [[containMatchedRaw]] or [[containMatched]],
+    * per `strategy` (`auto` prices the two per trigger with
+    * [[chooseContainStrategy]]). */
+  private[graft] final case class Contain(tauNum: Int, tauDen: Int,
+      strategy: String) extends Tier {
+    val name = "contain"
+    def params = s"tau=$tauNum/$tauDen strategy=$strategy"
+    val kernels = Seq(Kernel.Shingles)
+    val kinds = Seq(StateKind.Post, StateKind.Sh)
+    private[streaming] def matched(t: Trigger): Option[DataFrame] =
+      (postingState(t.sp, t.stateRoot, t.batchId, t.shingles),
+        t.prior(StateKind.Sh)) match {
+        case (Some(post), Some(psh)) =>
+          val chosen =
+            if (strategy == "auto") chooseContainStrategy(t.shingles, post)
+            else strategy
+          Some(if (chosen == "raw")
+            containMatchedRaw(t.shingles, post, psh, tauNum, tauDen)
+          else containMatched(t.shingles, post, psh, tauNum, tauDen))
+        case _ => None
+      }
+  }
+
+  /** The one admission loop: attach `tiers` to a document stream
+    * (doc_id, text, ...). A document is ADMITTED iff no tier matches it
+    * against earlier-batch state; admitted ids land under
+    * `stateRoot/admitted/batch=<n>` with n = batchId + 1 (1-based,
+    * matching an ntile replay oracle), and every document's rows enter
+    * each tier's state kinds (`<kind>/batch=<batchId>`, each kind once
+    * however many tiers share it). Per trigger, two write rounds:
+    *
+    *  1. the cached kernels the tiers need materialize concurrently —
+    *     bands CHAINED after the shingles inside one pool task so they
+    *     build from the populated shingle cache (racing them would
+    *     re-run the shingle kernel), the fps kernel overlapping both.
+    *     Without this the tiers' broadcast builds race on the cold
+    *     caches and each racer runs the full kernel (round-17 profile:
+    *     duplicated 2.3-3.8 s stage pairs per batch);
+    *  2. the admit anti-join and every state write, mutually independent
+    *     (nothing reads any of them until the next trigger; an
+    *     at-least-once replay overwrites the same batch-keyed dirs and
+    *     the batch< filter keeps it blind to them), in ONE concurrent
+    *     round (round 18 — the r17 profile booked ~100 ms of driver gap
+    *     per job; fewer sequential rounds per trigger is the lever). The
+    *     admit runs at its natural scan parallelism; state files are
+    *     size-based via [[sizedForWrite]].
+    *
+    * Jobs are labelled `"<label> b<batchId>: <what>"`, the label being
+    * the single tier's name or `ladder` for a composition. The returned
+    * query is live; callers own its lifecycle. */
+  private[graft] def admit(tiers: Seq[Tier], docs: DataFrame,
+      stateRoot: String, checkpoint: String): StreamingQuery = {
+    val label = tiers match { case Seq(one) => one.name; case _ => "ladder" }
+    val need = tiers.flatMap(_.kernels).toSet
+    val kinds = tiers.flatMap(_.kinds).distinct
     val outRoot = admittedRoot(stateRoot)
     docs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
         val sp = batch.sparkSession
-        val bfps = graft.queries.TextAnalysis.winnowFps(batch.toDF()).cache()
+        val t = new Trigger(sp, batch.toDF(), stateRoot, batchId)
+        def job(what: String)(f: => Unit): (String, () => Unit) =
+          (s"$label b$batchId: $what", () => f)
         try {
-          // materialize the fingerprint kernel ONCE before the match
-          // plan's broadcast builds fan out: two broadcast jobs racing
-          // on the unpopulated cache each ran the full md5 kernel
-          // (round-17 profile: identical 3.8 s stage pairs per batch)
-          sp.sparkContext.setJobDescription(s"winnow b$batchId: kernel")
-          bfps.count()
-          sp.sparkContext.setJobDescription(null)
+          val shingleChain =
+            if (need(Kernel.Bands)) Some(job("shingle+band kernels") {
+              t.shingles.count(); t.bands.count(); () })
+            else if (need(Kernel.Shingles)) Some(job("shingle kernel") {
+              t.shingles.count(); () })
+            else None
+          val fpsChain =
+            if (need(Kernel.Fps)) Some(job("fps kernel") { t.fps.count(); () })
+            else None
+          writeAll(sp, (shingleChain ++ fpsChain).toSeq)
+          // one tier keeps its own plan; a composition unions the tiers'
+          // matched ids
           val matched =
-            readState(sp, stateRoot, "fps", batchId, Seq("doc_id", "fp"))
-              .map(winnowMatched(bfps, _, maxDf, minShared))
-              .getOrElse(sp.range(0).select(col("id").as("doc_id")))
-          // admitted output + fps state are independent (nothing reads
-          // either until the next trigger) — land them concurrently
-          writeAll(sp, Seq(
-            (s"winnow b$batchId: admit", () =>
-              batch.toDF().select(col("doc_id"))
-                .join(broadcast(matched), Seq("doc_id"), "left_anti")
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/batch=${batchId + 1}")),
-            (s"winnow b$batchId: fps", () =>
-              sizedForWrite(bfps).write.mode("overwrite")
-                .parquet(s"$stateRoot/fps/batch=$batchId"))))
-        } finally { bfps.unpersist(); () }
+            tiers.map(_.matched(t).getOrElse(sp.range(0)
+              .select(col("id").as("doc_id")))) match {
+              case Seq(one) => one
+              case many => many.reduce(_.unionByName(_)).distinct()
+            }
+          writeAll(sp, job("admit") {
+            t.batch.select(col("doc_id"))
+              .join(broadcast(matched), Seq("doc_id"), "left_anti")
+              .write.mode("overwrite")
+              .parquet(s"$outRoot/batch=${batchId + 1}")
+          } +: kinds.map(k => job(k.name) {
+            sizedForWrite(t.stateOf(k)).write.mode("overwrite")
+              .parquet(s"$stateRoot/${k.name}/batch=$batchId")
+          }))
+        } finally t.release()
         ()
       }
       .start()
   }
 
+  /** Streaming LSH admission ([[Lsh]] alone): band and shingle state
+    * under `stateRoot/bands|sh/batch=<batchId>` (live) plus
+    * `stateRoot/bands_base|sh_base` once [[compactState]] has run. */
+  def lshAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
+      verifyT: Double = Dedup.MINHASH_VERIFY_T): StreamingQuery =
+    admit(Seq(Lsh(verifyT)), docs, stateRoot, checkpoint)
+
+  /** Streaming winnow (partial-overlap) admission ([[Winnow]] alone) —
+    * the live form of "reject crawl pages that heavily quote the
+    * corpus": a document is ADMITTED iff no document from an EARLIER
+    * micro-batch shares ≥ `minShared` winnowing fingerprints with it
+    * through fps whose PRIOR document frequency is ≤ `maxDf` (the
+    * [[graft.queries.Dedup.q_dedup_winnow]] rule, batch-order-aware). */
+  def winnowAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
+      maxDf: Long = 50L, minShared: Long = 2L): StreamingQuery =
+    admit(Seq(Winnow(maxDf, minShared)), docs, stateRoot, checkpoint)
+
+  /** Streaming containment admission ([[Contain]] alone): a document is
+    * ADMITTED iff no EARLIER-batch document CONTAINS ≥ tauNum/tauDen of
+    * its distinct 3-shingles — the "reject crawl pages whose content is
+    * mostly already in the corpus" rule, the batch-order-aware twin of
+    * [[graft.queries.Dedup.q_dedup_containment]] with the same exact
+    * prefix-filter candidate cut (see [[containMatched]]) over
+    * bucket-pruned posting reads (see [[postingState]]).
+    *
+    * `strategy`: `auto` (default — per-batch cost-based pick, see
+    * [[chooseContainStrategy]]) | `raw` | `prefix`. All three admit
+    * identically (spec-pinned); the choice is purely physical. */
+  def containAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
+      tauNum: Int = 4, tauDen: Int = 5,
+      strategy: String = "auto"): StreamingQuery = {
+    require(Set("auto", "raw", "prefix").contains(strategy),
+      s"containAdmit strategy must be auto|raw|prefix, got '$strategy'")
+    admit(Seq(Contain(tauNum, tauDen, strategy)), docs, stateRoot, checkpoint)
+  }
+
   /** The COMPOSED admission ladder — all four tiers (exact hash →
     * MinHash-LSH → winnow overlap → shingle containment) in ONE
     * foreachBatch over ONE shared state family, the shape a production
-    * pipeline actually runs. A document is ADMITTED iff NO tier matches
-    * it against EARLIER-batch state; every document's keys enter every
-    * tier's state regardless of admission (first-seen wins), so the
-    * ladder's admitted set is exactly the INTERSECTION of the four
-    * standalone tiers' admitted sets — which is what makes the whole
-    * replay one-shot oracle-checkable (q_stream_dedup_ladder ANDs the
-    * four tier conditions in SQL).
+    * pipeline actually runs; its admitted set is the intersection of the
+    * four standalone tiers' — which is what makes the whole replay
+    * one-shot oracle-checkable (q_stream_dedup_ladder ANDs the four tier
+    * conditions in SQL).
     *
     * State unification (the round-13 verdict's consolidation ask):
     * running [[lshAdmit]] and [[containAdmit]] side by side stores
     * every document's shingle array TWICE (each tier persists its own
     * `sh` kind under its own stateRoot); here ONE `sh` kind serves both
-    * the LSH verify and the containment verify, alongside `hashes`
-    * (exact tier — 64-bit text hashes; a collision could only DROP a
-    * unique doc, at xxhash64 odds, and the batch incremental-dedup twin
-    * accepts the same trade), `bands` (LSH), `fps` (winnow) and the
-    * bucket-pruned `post` (containment). Same batch-keyed exactly-once
-    * layout, broadcast-pinned per-batch joins, and [[compactState]]
-    * maintenance as the standalone tiers — the state write amplification
-    * of the full ladder over its most expensive tier is the three extra
-    * id-keyed key tables, not a second copy of the shingles
-    * (StreamLadderAdmitSpec pins the single-`sh` claim and
-    * restart-resume). */
+    * verifies, so the state write amplification of the full ladder over
+    * its most expensive tier is the three extra id-keyed key tables, not
+    * a second copy of the shingles (StreamLadderAdmitSpec pins the
+    * single-`sh` claim and restart-resume). */
   def ladderAdmit(docs: DataFrame, stateRoot: String, checkpoint: String,
       verifyT: Double = Dedup.MINHASH_VERIFY_T,
       maxDf: Long = 50L, minShared: Long = 2L,
@@ -707,99 +778,13 @@ object StreamDedup {
       strategy: String = "auto"): StreamingQuery = {
     require(Set("auto", "raw", "prefix").contains(strategy),
       s"ladderAdmit strategy must be auto|raw|prefix, got '$strategy'")
-    val outRoot = admittedRoot(stateRoot)
-    docs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
-        val sp = batch.sparkSession
-        val b = batch.toDF()
-        val d = Dedup.shingleOf(b).cache()
-        val banded = Dedup.bandedOf(d).cache()
-        val bfps = graft.queries.TextAnalysis.winnowFps(b).cache()
-        val bh = b.select(col("doc_id"), xxhash64(col("text")).as("h"))
-        try {
-          // the two INDEPENDENT kernel chains (shingles→bands, winnow
-          // fingerprints) materialize concurrently on the write pool;
-          // banded is CHAINED after d inside one pool task so it builds
-          // from d's now-populated cache (racing it would re-run the
-          // shingle kernel) while the fps kernel overlaps both. Without
-          // the materialization discipline the four tiers' broadcast
-          // builds race on the cold caches and each racer runs the full
-          // kernel (round-17 profile: duplicated 2.3 s stage pairs per
-          // batch in the admit phase).
-          writeAll(sp, Seq(
-            (s"ladder b$batchId: shingle+band kernels", () =>
-              { d.count(); banded.count(); () }),
-            (s"ladder b$batchId: fps kernel", () => { bfps.count(); () })))
-          def none = sp.range(0).select(col("id").as("doc_id"))
-          val psh =
-            readState(sp, stateRoot, "sh", batchId, Seq("doc_id", "sh", "nsh"))
-          val exactM =
-            readState(sp, stateRoot, "hashes", batchId, Seq("doc_id", "h"))
-              .map(_.select(col("h")).join(broadcast(bh), Seq("h"))
-                .select(col("doc_id")).distinct())
-              .getOrElse(none)
-          val lshM = (readState(sp, stateRoot, "bands", batchId,
-              Seq("doc_id", "band", "bkey")), psh) match {
-            case (Some(pb), Some(s)) =>
-              matchedAgainstState(d, banded, pb, s, verifyT)
-            case _ => none
-          }
-          val winM = readState(sp, stateRoot, "fps", batchId,
-              Seq("doc_id", "fp"))
-            .map(winnowMatched(bfps, _, maxDf, minShared))
-            .getOrElse(none)
-          val conM = (postingState(sp, stateRoot, batchId, d), psh) match {
-            case (Some(post), Some(s)) =>
-              val chosen =
-                if (strategy == "auto") chooseContainStrategy(d, post)
-                else strategy
-              if (chosen == "raw") containMatchedRaw(d, post, s, tauNum, tauDen)
-              else containMatched(d, post, s, tauNum, tauDen)
-            case _ => none
-          }
-          val matched = exactM.unionByName(lshM).unionByName(winM)
-            .unionByName(conM).distinct()
-          // admitted output + five state kinds: all six writes are
-          // mutually independent (nothing reads any of them until the
-          // next trigger), so they land in ONE concurrent round instead
-          // of admit-then-states (round 18 — the r17 profile booked
-          // ~100 ms of driver gap per job; fewer sequential rounds per
-          // trigger is the lever). The admit anti-join runs at its
-          // natural scan parallelism — the r17 coalesce(1) here
-          // collapsed the per-trigger admission compute itself to one
-          // task (the verdict's #4); state files are size-based via
-          // sizedForWrite.
-          writeAll(sp, Seq(
-            (s"ladder b$batchId: admit", () =>
-              b.select(col("doc_id"))
-                .join(broadcast(matched), Seq("doc_id"), "left_anti")
-                .write.mode("overwrite")
-                .parquet(s"$outRoot/batch=${batchId + 1}")),
-            (s"ladder b$batchId: hashes", () => sizedForWrite(bh)
-              .write.mode("overwrite")
-              .parquet(s"$stateRoot/hashes/batch=$batchId")),
-            (s"ladder b$batchId: bands", () => sizedForWrite(banded)
-              .write.mode("overwrite")
-              .parquet(s"${bandsRoot(stateRoot)}/batch=$batchId")),
-            (s"ladder b$batchId: sh", () =>
-              sizedForWrite(d.select(col("doc_id"), col("sh"), col("nsh")))
-                .write.mode("overwrite")
-                .parquet(s"${shRoot(stateRoot)}/batch=$batchId")),
-            (s"ladder b$batchId: fps", () => sizedForWrite(bfps)
-              .write.mode("overwrite")
-              .parquet(s"$stateRoot/fps/batch=$batchId")),
-            (s"ladder b$batchId: post", () =>
-              writePostState(d, stateRoot, batchId))))
-        } finally { d.unpersist(); banded.unpersist(); bfps.unpersist(); () }
-        ()
-      }
-      .start()
+    admit(Seq(Exact, Lsh(verifyT), Winnow(maxDf, minShared),
+      Contain(tauNum, tauDen, strategy)), docs, stateRoot, checkpoint)
   }
 
   /** MAINTENANCE-WINDOW state compaction: fold every live
-    * `bands|sh|fps|post|hashes|admitted/batch=*` dir (plus any previous
-    * base) into `<kind>_base` — ~`targetBytes` parquet files total
+    * `<kind>/batch=*` dir of [[StateKind.all]] (plus any previous base)
+    * into `<kind>_base` — ~`targetBytes` parquet files total
     * (`post` instead bucket-partitioned by `b`, see [[PostBuckets]]),
     * batch preserved as a data column — and drop the live dirs. Returns
     * false (no-op) when no live state exists. The admitted OUTPUT is
@@ -824,13 +809,12 @@ object StreamDedup {
       targetBytes: Long = 128L * 1024 * 1024,
       bucketedBaseMinBytes: Long = 4L * 1024 * 1024 * PostBuckets): Boolean = {
     val conf = spark.sparkContext.hadoopConfiguration
-    def foldOne(kind: String, cols: Seq[String],
-        bucketCol: Option[String] = None): Boolean = {
-      val live = new org.apache.hadoop.fs.Path(s"$stateRoot/$kind")
+    def foldOne(kind: StateKind): Boolean = {
+      val live = new org.apache.hadoop.fs.Path(s"$stateRoot/${kind.name}")
       val fs = live.getFileSystem(conf)
       if (!fs.exists(live)) return false
-      val base = new org.apache.hadoop.fs.Path(s"$stateRoot/${kind}_base")
-      val withBatch = cols ++ bucketCol :+ "batch"
+      val base = new org.apache.hadoop.fs.Path(s"$stateRoot/${kind.name}_base")
+      val withBatch = kind.cols ++ kind.bucket :+ "batch"
       val liveDf = spark.read.parquet(live.toString)
         .withColumn("batch", col("batch").cast("long"))
         .select(withBatch.map(col): _*)
@@ -846,9 +830,9 @@ object StreamDedup {
         (fs.getContentSummary(live).getLength
           + (if (fs.exists(base)) fs.getContentSummary(base).getLength else 0L))
       val n = graft.sink.Compaction.planFiles(bytes, targetBytes)
-      val staging = s"$stateRoot/${kind}_compact"
+      val staging = s"$stateRoot/${kind.name}_compact"
       val folded = all
-      bucketCol match {
+      kind.bucket match {
         case Some(bc) if bytes >= bucketedBaseMinBytes =>
           // bucket-partitioned base (the posting kind): each bucket's
           // rows land entirely in one task (hash repartition on the
@@ -877,18 +861,15 @@ object StreamDedup {
       fs.rename(new org.apache.hadoop.fs.Path(staging), base)
       true
     }
-    val b = foldOne("bands", Seq("doc_id", "band", "bkey"))
-    val s = foldOne("sh", Seq("doc_id", "sh", "nsh"))
-    val f = foldOne("fps", Seq("doc_id", "fp"))
-    val g = foldOne("post", Seq("doc_id", "g"), bucketCol = Some("b"))
-    val h = foldOne("hashes", Seq("doc_id", "h"))
-    val a = foldOne("admitted", Seq("doc_id"))
-    b || s || f || g || h || a
+    // every kind folds (a strict map, not a short-circuiting exists)
+    StateKind.all.map(foldOne).contains(true)
   }
 
-  /** Where [[lshAdmit]]/[[winnowAdmit]] land admitted ids (partitioned
+  /** Where every admission entry ([[lshAdmit]], [[winnowAdmit]],
+    * [[containAdmit]], [[ladderAdmit]]) lands admitted ids (partitioned
     * by `batch`, 1-based). */
-  def admittedRoot(stateRoot: String): String = s"$stateRoot/admitted"
+  def admittedRoot(stateRoot: String): String =
+    s"$stateRoot/${StateKind.Admitted.name}"
 
   /** The admitted (doc_id, batch) set — live per-trigger dirs unioned
     * with the compacted `admitted_base` (batch normalized to long; the
@@ -896,7 +877,7 @@ object StreamDedup {
     * path every consumer of the admission loop should use once
     * [[compactState]] has ever run. */
   def readAdmitted(sp: SparkSession, stateRoot: String): DataFrame = {
-    val parts = Seq(admittedRoot(stateRoot), s"$stateRoot/admitted_base")
+    val parts = Seq(admittedRoot(stateRoot), s"${admittedRoot(stateRoot)}_base")
       .filter(exists(sp, _)).map(d => sp.read.parquet(d)
         .select(col("doc_id"), col("batch").cast("long").as("batch")))
     require(parts.nonEmpty, s"no admitted output under $stateRoot")

@@ -144,14 +144,7 @@ object Streams {
         // the run is complete and the sink is in memory — the checkpoint
         // has no further use; delete it now rather than letting finished
         // runs accumulate in tmpfs
-        try {
-          import scala.jdk.CollectionConverters._
-          val walk = java.nio.file.Files.walk(ck)
-          try walk.iterator().asScala.toSeq
-            .sortBy(-_.getNameCount)
-            .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          finally walk.close() // Files.walk holds open directory handles
-        } catch { case _: java.io.IOException => () }
+        graft.core.Scratch.rmTree(ck)
       } else {
         // FAILED run: the offset/commit/state logs are exactly the
         // debugging evidence — keep them and say where they are
