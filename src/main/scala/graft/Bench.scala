@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** One pass over the suite: wall seconds of every entry that completed
@@ -90,13 +89,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.core.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionConf.local(defaultCpus = 4)
     // warm-up: JVM/codegen/parquet-footer costs land here instead of
     // inflating whichever query happens to run first (~6 s observed).
     // The join/agg/window/HOF shapes warm the codegen+JIT paths the real
@@ -185,8 +178,9 @@ object Bench {
       // variadic xxhash64(a, j) + a modulo before the sum: a chained
       // hash is full-range 64-bit, so both `a + j` and a raw sum of
       // hashes overflow under ANSI mode
-      spark.range(0, 12000000L, 1, cpus.toInt).selectExpr(
-        "sum(aggregate(sequence(1, 16), cast(id as bigint), (a, j) -> xxhash64(a, j)) % 1000000)")
+      spark.range(0, 12000000L, 1, spark.sparkContext.defaultParallelism)
+        .selectExpr(
+          "sum(aggregate(sequence(1, 16), cast(id as bigint), (a, j) -> xxhash64(a, j)) % 1000000)")
         .collect()
       (System.nanoTime() - t0) / 1e9
     }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan and wall time of queries.
   * Usage: runMain graft.Explain <name>[,<name>...] [sfDir] [--time-only] [--warm]
   * `--warm` runs each entry twice and times the second pass — steady-state
@@ -16,13 +14,7 @@ object Explain {
     val names = args(0).split(",").toSeq
     val sfDir = args.lift(1).filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionConf.local(defaultCpus = 32)
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()
       spark.read.parquet(s"$sfDir/lineitem.parquet").count()

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 import scala.collection.concurrent.TrieMap
 
 /** Dev measurement tool (guide §1: measure first): run entries with a
@@ -22,13 +21,7 @@ object Profile {
     val sfDir = args.lift(1).filterNot(_.startsWith("--"))
       .getOrElse("/root/testdata/sf0.1")
     val cold = args.contains("--cold")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionConf.local(defaultCpus = 32)
     // warm-up identical in spirit to Bench's
     try {
       spark.range(1000000).selectExpr("sum(id)").collect()

@@ -2,7 +2,6 @@ package graft
 
 import graft.core.Tables
 import graft.index.IndexKinds
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-vs-shortlist sweep for the 1-bit (BQ / IVF-BQ) tier — the
@@ -26,13 +25,7 @@ object RecallCurve {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionConf.local(defaultCpus = 8)
 
     val k = 10
     val exact = RecallReport.exactTopK(spark, sfDir, k)

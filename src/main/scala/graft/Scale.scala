@@ -67,9 +67,15 @@ object Scale {
     // df-cap guard is exercised, the quadratic regime is not reachable
     "q_dedup_winnow")
 
+  /** Every table [[buildScaled]] writes: a scale dir is reused only when
+    * all of them are complete. */
+  private val ScaledTables = Seq(
+    "documents", "embeddings", "orders", "events", "customer", "supplier")
+
   private[graft] def buildScaled(spark: SparkSession, base: String, out: String,
       factor: Int): Unit = {
-    if (new java.io.File(s"$out/embeddings.parquet/_SUCCESS").exists()) return
+    if (ScaledTables.forall(t =>
+        new java.io.File(s"$out/$t.parquet/_SUCCESS").exists())) return
     val docs = spark.read.parquet(s"$base/documents.parquet")
     val docCopies = (0 until factor).map { k =>
       if (k == 0) docs.select("doc_id", "text", "lang", "source", "n_chars")
@@ -142,6 +148,18 @@ object Scale {
     }.reduce(_.unionByName(_))
       .repartition(32).write.mode("overwrite")
       .parquet(s"$out/customer.parquet")
+
+    // supplier copy k takes keys s_suppkey + k·n (n = the base row count,
+    // keys 0..n−1), so the N× table is still the contiguous binary heap
+    // q_recursive_tree walks, ⌈log₂ N⌉ levels deeper
+    val supp = spark.read.parquet(s"$base/supplier.parquet")
+    val nSupp = supp.count()
+    (0 until factor).map { k =>
+      if (k == 0) supp
+      else supp.withColumn("s_suppkey", col("s_suppkey") + lit(k * nSupp))
+    }.reduce(_.unionByName(_))
+      .repartition(32).write.mode("overwrite")
+      .parquet(s"$out/supplier.parquet")
   }
 
   /** Heavy non-document families (round 18): entries whose inputs are
@@ -193,13 +211,7 @@ object Scale {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warm = "/root/testdata/sf0.001"
     val out = s"/tmp/graft_scale/x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.core.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.SessionConf.local(defaultCpus = 8)
 
     if (measured.nonEmpty || only.isEmpty) buildScaled(spark, base, out, factor)
     // codegen/JIT warm-up so the 1× pass doesn't pay compile costs
@@ -341,15 +353,12 @@ object Scale {
           (System.nanoTime() - t0) / 1e9
         }.min
       }
-      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      val prevSkew = spark.conf.get("spark.sql.adaptive.skewJoin.enabled")
-      val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
       // the timed join must run under the same 16-wide exchange the
       // deterministic mass model (maxPartMass) computes
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try {
+      graft.core.SessionConf.scoped(spark,
+          "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+          "spark.sql.adaptive.skewJoin.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> parts.toString) {
         val n1 = 2000000L
         val f1 = fixture(n1)
         val fN = fixture(n1 * factor)
@@ -364,10 +373,6 @@ object Scale {
           s""""max_part_rows_plain_N":$mNk,"max_part_rows_salted_N":$mNks,""" +
           f""""t_plain_1":$tp1%.2f,"t_salted_1":$ts1%.2f,""" +
           f""""t_plain_N":$tpN%.2f,"t_salted_N":$tsN%.2f}"""
-      } finally {
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", prevSkew)
-        spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       }
     }
 

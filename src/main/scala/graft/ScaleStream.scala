@@ -117,199 +117,198 @@ object ScaleStream {
       .flatMap(_.toIntOption).getOrElse(3).max(1)
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = s"/tmp/graft_scale/x$factor"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val numFiles = 8
-    val spark = graft.core.Tables.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Scale.buildScaled(spark, base, out, factor)
+    val spark = graft.core.SessionConf.local(defaultCpus = 8)
+    // every replay here starts at the stream harness's state-partition
+    // count, like the registered streaming entries
+    graft.core.SessionConf.scoped(spark, "spark.sql.shuffle.partitions" ->
+        graft.streaming.Streams.ReplayStatePartitions.toString) {
+      Scale.buildScaled(spark, base, out, factor)
 
-    val rows = scala.collection.mutable.ArrayBuffer.empty[
-      (String, String, Seq[Double], Long)]
+      val rows = scala.collection.mutable.ArrayBuffer.empty[
+        (String, String, Seq[Double], Long)]
 
-    Seq("1x" -> base, s"${factor}x" -> out).foreach { case (scale, dir) =>
-      lazy val staged = graft.queries.StreamingQ.stageFrameChunks(
-        graft.core.Tables(spark, dir, "documents"),
-        Seq(col("doc_id")), s"sst_${scale}", numFiles,
-        blockBytes = Some(64L * 1024))
+      Seq("1x" -> base, s"${factor}x" -> out).foreach { case (scale, dir) =>
+        lazy val staged = graft.queries.StreamingQ.stageFrameChunks(
+          graft.core.Tables(spark, dir, "documents"),
+          Seq(col("doc_id")), s"sst_${scale}", numFiles,
+          blockBytes = Some(64L * 1024))
 
-      if (want("q_stream_dedup_lsh")) {
-      // LSH admission: fresh state per rep, per-batch min across reps
-      val lshWalls = minOver(reps) {
-        val st = tmpDir("lshstate"); val ck = tmpDir("lshck")
-        replayTimed(spark, staged,
-          s => graft.streaming.StreamDedup.lshAdmit(s, st.toString, ck.toString))
-      }
-      // state rows after ONE replay (deterministic — re-read the last rep
-      // via a fresh run would duplicate work; rows = banded + shingle)
-      val lshSt = tmpDir("lshstrows"); val lshCk = tmpDir("lshckrows")
-      replayTimed(spark, staged, s =>
-        graft.streaming.StreamDedup.lshAdmit(s, lshSt.toString, lshCk.toString))
-      val lshRows = spark.read.parquet(s"$lshSt/bands").count() +
-        spark.read.parquet(s"$lshSt/sh").count()
-      rows += (("q_stream_dedup_lsh", scale, lshWalls, lshRows))
-      }
+        if (want("q_stream_dedup_lsh")) {
+        // LSH admission: fresh state per rep, per-batch min across reps
+        val lshWalls = minOver(reps) {
+          val st = tmpDir("lshstate"); val ck = tmpDir("lshck")
+          replayTimed(spark, staged,
+            s => graft.streaming.StreamDedup.lshAdmit(s, st.toString, ck.toString))
+        }
+        // state rows after ONE replay (deterministic — re-read the last rep
+        // via a fresh run would duplicate work; rows = banded + shingle)
+        val lshSt = tmpDir("lshstrows"); val lshCk = tmpDir("lshckrows")
+        replayTimed(spark, staged, s =>
+          graft.streaming.StreamDedup.lshAdmit(s, lshSt.toString, lshCk.toString))
+        val lshRows = spark.read.parquet(s"$lshSt/bands").count() +
+          spark.read.parquet(s"$lshSt/sh").count()
+        rows += (("q_stream_dedup_lsh", scale, lshWalls, lshRows))
+        }
 
-      if (want("q_stream_dedup_winnow")) {
-      val wnWalls = minOver(reps) {
-        val st = tmpDir("wnstate"); val ck = tmpDir("wnck")
-        replayTimed(spark, staged,
-          s => graft.streaming.StreamDedup.winnowAdmit(s, st.toString, ck.toString))
-      }
-      val wnSt = tmpDir("wnstrows"); val wnCk = tmpDir("wnckrows")
-      replayTimed(spark, staged, s =>
-        graft.streaming.StreamDedup.winnowAdmit(s, wnSt.toString, wnCk.toString))
-      val wnRows = spark.read.parquet(s"$wnSt/fps").count()
-      rows += (("q_stream_dedup_winnow", scale, wnWalls, wnRows))
-      }
+        if (want("q_stream_dedup_winnow")) {
+        val wnWalls = minOver(reps) {
+          val st = tmpDir("wnstate"); val ck = tmpDir("wnck")
+          replayTimed(spark, staged,
+            s => graft.streaming.StreamDedup.winnowAdmit(s, st.toString, ck.toString))
+        }
+        val wnSt = tmpDir("wnstrows"); val wnCk = tmpDir("wnckrows")
+        replayTimed(spark, staged, s =>
+          graft.streaming.StreamDedup.winnowAdmit(s, wnSt.toString, wnCk.toString))
+        val wnRows = spark.read.parquet(s"$wnSt/fps").count()
+        rows += (("q_stream_dedup_winnow", scale, wnWalls, wnRows))
+        }
 
-      if (want("q_stream_dedup_containment")) {
-      // measured at the production maintenance cadence (fold every 2
-      // batches): steady state per trigger = batch work + one scan of
-      // [compacted base + ≤2 live dirs]
-      val ctWalls = minOver(reps) {
-        val st = tmpDir("ctstate"); val ck = tmpDir("ctck")
-        replayTimed(spark, staged,
-          s => graft.streaming.StreamDedup.containAdmit(s, st.toString, ck.toString),
-          foldEvery = 2, stateRoot = Some(st.toString))
-      }
-      val ctSt = tmpDir("ctstrows"); val ctCk = tmpDir("ctckrows")
-      replayTimed(spark, staged, s =>
-        graft.streaming.StreamDedup.containAdmit(s, ctSt.toString, ctCk.toString))
-      val ctRows = spark.read.parquet(s"$ctSt/post").count()
-      rows += (("q_stream_dedup_containment", scale, ctWalls, ctRows))
-      }
+        if (want("q_stream_dedup_containment")) {
+        // measured at the production maintenance cadence (fold every 2
+        // batches): steady state per trigger = batch work + one scan of
+        // [compacted base + ≤2 live dirs]
+        val ctWalls = minOver(reps) {
+          val st = tmpDir("ctstate"); val ck = tmpDir("ctck")
+          replayTimed(spark, staged,
+            s => graft.streaming.StreamDedup.containAdmit(s, st.toString, ck.toString),
+            foldEvery = 2, stateRoot = Some(st.toString))
+        }
+        val ctSt = tmpDir("ctstrows"); val ctCk = tmpDir("ctckrows")
+        replayTimed(spark, staged, s =>
+          graft.streaming.StreamDedup.containAdmit(s, ctSt.toString, ctCk.toString))
+        val ctRows = spark.read.parquet(s"$ctSt/post").count()
+        rows += (("q_stream_dedup_containment", scale, ctWalls, ctRows))
+        }
 
-      // SATURATED-SHINGLE corpus (round-15 verdict ask): the same
-      // documents with a 6-token boilerplate run injected into 30% of
-      // them — every hot shingle's posting list grows with the corpus,
-      // so a raw-forced replay's candidate aggregate is
-      // Σ df_state·df_batch ~ 0.09·N²/64 per hot shingle per late batch
-      // (quadratic in corpus size), while the auto pick flips to the
-      // prefix filter (hot shingles fall outside every rarest-first
-      // prefix) and stays candidate-bounded. Two rows: auto (the
-      // default production path — bounded walls) and hotraw (the
-      // round-14 manual-knob regime, kept measurable as the refutation
-      // baseline). Same fold cadence as the plain containment row.
-      if (want("q_stream_dedup_containment_hot") ||
-          want("q_stream_dedup_containment_hotraw")) {
-      lazy val hotStaged = graft.queries.StreamingQ.stageFrameChunks(
-        graft.core.Tables(spark, dir, "documents").withColumn("text",
-          when(pmod(col("doc_id"), lit(10)) < 3,
-            concat(lit("boiler plate header every crawl page repeats "),
-              col("text")))
-            .otherwise(col("text"))),
-        Seq(col("doc_id")), s"sst_hot_${scale}", numFiles,
-        blockBytes = Some(64L * 1024))
-      Seq("q_stream_dedup_containment_hot" -> "auto",
-          "q_stream_dedup_containment_hotraw" -> "raw").foreach {
-        case (entry, strat) =>
-          if (want(entry)) {
-            val walls = minOver(reps) {
-              val st = tmpDir("hotstate"); val ck = tmpDir("hotck")
-              replayTimed(spark, hotStaged,
-                s => graft.streaming.StreamDedup.containAdmit(
-                  s, st.toString, ck.toString, strategy = strat),
-                foldEvery = 2, stateRoot = Some(st.toString))
+        // SATURATED-SHINGLE corpus (round-15 verdict ask): the same
+        // documents with a 6-token boilerplate run injected into 30% of
+        // them — every hot shingle's posting list grows with the corpus,
+        // so a raw-forced replay's candidate aggregate is
+        // Σ df_state·df_batch ~ 0.09·N²/64 per hot shingle per late batch
+        // (quadratic in corpus size), while the auto pick flips to the
+        // prefix filter (hot shingles fall outside every rarest-first
+        // prefix) and stays candidate-bounded. Two rows: auto (the
+        // default production path — bounded walls) and hotraw (the
+        // round-14 manual-knob regime, kept measurable as the refutation
+        // baseline). Same fold cadence as the plain containment row.
+        if (want("q_stream_dedup_containment_hot") ||
+            want("q_stream_dedup_containment_hotraw")) {
+        lazy val hotStaged = graft.queries.StreamingQ.stageFrameChunks(
+          graft.core.Tables(spark, dir, "documents").withColumn("text",
+            when(pmod(col("doc_id"), lit(10)) < 3,
+              concat(lit("boiler plate header every crawl page repeats "),
+                col("text")))
+              .otherwise(col("text"))),
+          Seq(col("doc_id")), s"sst_hot_${scale}", numFiles,
+          blockBytes = Some(64L * 1024))
+        Seq("q_stream_dedup_containment_hot" -> "auto",
+            "q_stream_dedup_containment_hotraw" -> "raw").foreach {
+          case (entry, strat) =>
+            if (want(entry)) {
+              val walls = minOver(reps) {
+                val st = tmpDir("hotstate"); val ck = tmpDir("hotck")
+                replayTimed(spark, hotStaged,
+                  s => graft.streaming.StreamDedup.containAdmit(
+                    s, st.toString, ck.toString, strategy = strat),
+                  foldEvery = 2, stateRoot = Some(st.toString))
+              }
+              rows += ((entry, scale, walls, -1L))
             }
-            rows += ((entry, scale, walls, -1L))
-          }
-      }
-      }
+        }
+        }
 
-      if (want("q_stream_dedup_ladder")) {
-      // composed 4-tier ladder over ONE shared state family; rows =
-      // shingle state (stored once — the unification claim)
-      val ldWalls = minOver(reps) {
-        val st = tmpDir("ldstate"); val ck = tmpDir("ldck")
-        replayTimed(spark, staged,
-          s => graft.streaming.StreamDedup.ladderAdmit(s, st.toString, ck.toString))
-      }
-      val ldSt = tmpDir("ldstrows"); val ldCk = tmpDir("ldckrows")
-      replayTimed(spark, staged, s =>
-        graft.streaming.StreamDedup.ladderAdmit(s, ldSt.toString, ldCk.toString))
-      val ldRows = spark.read.parquet(s"$ldSt/sh").count()
-      rows += (("q_stream_dedup_ladder", scale, ldWalls, ldRows))
-      }
+        if (want("q_stream_dedup_ladder")) {
+        // composed 4-tier ladder over ONE shared state family; rows =
+        // shingle state (stored once — the unification claim)
+        val ldWalls = minOver(reps) {
+          val st = tmpDir("ldstate"); val ck = tmpDir("ldck")
+          replayTimed(spark, staged,
+            s => graft.streaming.StreamDedup.ladderAdmit(s, st.toString, ck.toString))
+        }
+        val ldSt = tmpDir("ldstrows"); val ldCk = tmpDir("ldckrows")
+        replayTimed(spark, staged, s =>
+          graft.streaming.StreamDedup.ladderAdmit(s, ldSt.toString, ldCk.toString))
+        val ldRows = spark.read.parquet(s"$ldSt/sh").count()
+        rows += (("q_stream_dedup_ladder", scale, ldWalls, ldRows))
+        }
 
-      if (want("q_stream_domain_cap")) {
-      // domain cap: Complete-mode heap aggregate; state rows from the
-      // final progress (the |sources|·k claim — one store row per
-      // source, each a serialized k=3 heap buffer)
-      val capWalls = minOver(reps) {
-        val name = s"sst_cap_${scale}_${System.nanoTime()}"
-        val ck = tmpDir("capck")
+        if (want("q_stream_domain_cap")) {
+        // domain cap: Complete-mode heap aggregate; state rows from the
+        // final progress (the |sources|·k claim — one store row per
+        // source, each a serialized k=3 heap buffer)
+        val capWalls = minOver(reps) {
+          val name = s"sst_cap_${scale}_${System.nanoTime()}"
+          val ck = tmpDir("capck")
+          replayTimed(spark, staged, s => {
+            val top = graft.queries.Corpus.domainCapTop(
+              graft.queries.Corpus.sourceScored(s))
+            top.writeStream.outputMode("complete")
+              .option("checkpointLocation", ck.toString)
+              .format("memory").queryName(name).start()
+          })
+        }
+        // a one-off replay to read the state-store row count
+        val capCk = tmpDir("caprowsck")
+        var lastQ: org.apache.spark.sql.streaming.StreamingQuery = null
         replayTimed(spark, staged, s => {
           val top = graft.queries.Corpus.domainCapTop(
             graft.queries.Corpus.sourceScored(s))
-          top.writeStream.outputMode("complete")
-            .option("checkpointLocation", ck.toString)
-            .format("memory").queryName(name).start()
+          lastQ = top.writeStream.outputMode("complete")
+            .option("checkpointLocation", capCk.toString)
+            .format("memory").queryName(s"sst_caprows_${scale}").start()
+          lastQ
         })
-      }
-      // a one-off replay to read the state-store row count
-      val capCk = tmpDir("caprowsck")
-      var lastQ: org.apache.spark.sql.streaming.StreamingQuery = null
-      replayTimed(spark, staged, s => {
-        val top = graft.queries.Corpus.domainCapTop(
-          graft.queries.Corpus.sourceScored(s))
-        lastQ = top.writeStream.outputMode("complete")
-          .option("checkpointLocation", capCk.toString)
-          .format("memory").queryName(s"sst_caprows_${scale}").start()
-        lastQ
-      })
-      val capState = Option(lastQ.lastProgress)
-        .flatMap(p => p.stateOperators.headOption)
-        .map(_.numRowsTotal).getOrElse(-1L)
-      rows += (("q_stream_domain_cap", scale, capWalls, capState))
+        val capState = Option(lastQ.lastProgress)
+          .flatMap(p => p.stateOperators.headOption)
+          .map(_.numRowsTotal).getOrElse(-1L)
+        rows += (("q_stream_domain_cap", scale, capWalls, capState))
+        }
+
+        if (want("q_stream_index_insert")) {
+        // index maintenance: base forest over THIS scale's resident 3/4,
+        // streamed batches of FIXED 1× size — flat walls across scales is
+        // the O(batch) claim
+        val e = graft.core.Tables.spread(graft.core.Tables(spark, dir, "embeddings"))
+        val e1 = graft.core.Tables(spark, base, "embeddings")
+        val batchCount = e1.filter(col("vec_id") % 4 === 0).count()
+        val model = graft.index.GannIndex.build(
+          e.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
+          leafSize = 200, spill = 0.15, nTrees = 3)
+        val arriving = e.filter(col("vec_id") % 4 === 0)
+          .orderBy(col("vec_id")).limit(batchCount.toInt)
+          .select(col("vec_id"), col("embedding"))
+        val idxStaged = graft.queries.StreamingQ.stageFrameChunks(
+          arriving, Seq(col("vec_id")), s"sst_idx_${scale}", 4)
+        val idxWalls = minOver(reps) {
+          val path = tmpDir("idx"); val ck = tmpDir("idxck")
+          graft.index.GannIndex.save(model, path.toString)
+          replayTimed(spark, idxStaged, s =>
+            graft.streaming.IndexMaintain.maintainGann(
+              s, model, path.toString, ck.toString))
+        }
+        val baseRows = model.assign.count()
+        rows += (("q_stream_index_insert", scale, idxWalls, baseRows))
+        }
       }
 
-      if (want("q_stream_index_insert")) {
-      // index maintenance: base forest over THIS scale's resident 3/4,
-      // streamed batches of FIXED 1× size — flat walls across scales is
-      // the O(batch) claim
-      val e = graft.core.Tables.spread(graft.core.Tables(spark, dir, "embeddings"))
-      val e1 = graft.core.Tables(spark, base, "embeddings")
-      val batchCount = e1.filter(col("vec_id") % 4 === 0).count()
-      val model = graft.index.GannIndex.build(
-        e.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding",
-        leafSize = 200, spill = 0.15, nTrees = 3)
-      val arriving = e.filter(col("vec_id") % 4 === 0)
-        .orderBy(col("vec_id")).limit(batchCount.toInt)
-        .select(col("vec_id"), col("embedding"))
-      val idxStaged = graft.queries.StreamingQ.stageFrameChunks(
-        arriving, Seq(col("vec_id")), s"sst_idx_${scale}", 4)
-      val idxWalls = minOver(reps) {
-        val path = tmpDir("idx"); val ck = tmpDir("idxck")
-        graft.index.GannIndex.save(model, path.toString)
-        replayTimed(spark, idxStaged, s =>
-          graft.streaming.IndexMaintain.maintainGann(
-            s, model, path.toString, ck.toString))
-      }
-      val baseRows = model.assign.count()
-      rows += (("q_stream_index_insert", scale, idxWalls, baseRows))
-      }
+      println("| entry | corpus | b1 | mid | bN | state/base rows |")
+      println("| --- | --- | --- | --- | --- | --- |")
+      val json = rows.map { case (entry, scale, walls, st) =>
+        val b1 = walls.head; val bn = walls.last
+        val mid = walls(walls.size / 2)
+        println(f"| $entry | $scale | $b1%.2f | $mid%.2f | $bn%.2f | $st |")
+        val ws = walls.map(w => f"$w%.3f").mkString("[", ",", "]")
+        s"""{"entry":"$entry","scale":"$scale","walls":$ws,"rows":$st}"""
+      }.mkString("[", ",\n", "]")
+      val dir = java.nio.file.Paths.get("target")
+      java.nio.file.Files.createDirectories(dir)
+      // a subset re-measure must not clobber the full-table artifact
+      val artifact =
+        if (only.isEmpty) "scale_stream.json" else "scale_stream_subset.json"
+      java.nio.file.Files.write(dir.resolve(artifact),
+        json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     }
-
-    println("| entry | corpus | b1 | mid | bN | state/base rows |")
-    println("| --- | --- | --- | --- | --- | --- |")
-    val json = rows.map { case (entry, scale, walls, st) =>
-      val b1 = walls.head; val bn = walls.last
-      val mid = walls(walls.size / 2)
-      println(f"| $entry | $scale | $b1%.2f | $mid%.2f | $bn%.2f | $st |")
-      val ws = walls.map(w => f"$w%.3f").mkString("[", ",", "]")
-      s"""{"entry":"$entry","scale":"$scale","walls":$ws,"rows":$st}"""
-    }.mkString("[", ",\n", "]")
-    val dir = java.nio.file.Paths.get("target")
-    java.nio.file.Files.createDirectories(dir)
-    // a subset re-measure must not clobber the full-table artifact
-    val artifact =
-      if (only.isEmpty) "scale_stream.json" else "scale_stream_subset.json"
-    java.nio.file.Files.write(dir.resolve(artifact),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
   }
 }

@@ -16,14 +16,15 @@ object Tables {
   /** Session conf needed to read the testdata: events.ts is parquet
     * TIMESTAMP(NANOS), which Spark refuses by default; reading it as long
     * nanos and truncating to micros matches DuckDB's TIMESTAMP cast, so
-    * the oracle agrees. Set once at session construction (Bench / Verify /
-    * TestSpark all pass it to their builders). */
+    * the oracle agrees. Set once at session construction, through
+    * [[configure]]. */
   val sessionConf: Map[String, String] =
     Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
 
   /** Apply [[sessionConf]] to a session builder — the single place the
-    * testdata-required confs live (Bench / Verify / Explain / TestSpark
-    * all route through this). */
+    * testdata-required confs live. Every session builder routes through
+    * this: the tools' [[SessionConf.local]], the test suites' shared
+    * session and the perfbench client. */
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     sessionConf.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
 

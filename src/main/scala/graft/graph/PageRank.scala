@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
   *
   * SESSION-CONF SIDE EFFECT (documented contract, measured +2 s at
   * sf0.1 without it): the loop scopes `spark.sql.shuffle.partitions`
-  * down to the node-table's scale for the duration of the call and
-  * restores it in the finally — AQE coalescing alone leaves ~35%
+  * down to the node-table's scale for the duration of the call
+  * ([[graft.core.SessionConf.scoped]]) — AQE coalescing alone leaves ~35%
   * per-round scheduling overhead on small graphs. A CONCURRENT query on
   * the same SparkSession runs at the reduced partition count until the
   * restore; the engine's own entries are single-threaded per session
@@ -67,60 +67,59 @@ object PageRank {
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct().cache()
     val n = nodes.count()
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    val parts = math.max(4L, math.min(prevParts.toLong, n / 20000L + 1L))
-    spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    // released in the finally: a failed round (executor loss, OOM in a
-    // dangling collect) must not leave four frames pinned in storage
-    val pinned = scala.collection.mutable.Buffer[DataFrame](edges, nodes)
-    try {
-    val outw = edges.groupBy("src").agg(sum("weight").as("outw"))
-    // repartitioned to the loop's parallelism before caching: the scan
-    // may have many small input splits, and every round re-reads these
-    // cached partitions — task count per round should match `parts`
-    val trans = edges.join(outw, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
-      .repartition(parts.toInt, col("src"))
-      .cache()
-    // nodes with no out-edges: their rank leaks unless redistributed.
-    // Counted once up front — a sink-free graph (the common symmetrized
-    // case) skips the per-round dangling aggregate entirely, halving the
-    // driver-job count of the loop.
-    val sinks = nodes.join(outw.select(col("src").as("node")),
-      Seq("node"), "left_anti").cache()
-    pinned += trans; pinned += sinks
-    val hasSinks = sinks.limit(1).count() > 0
-    // mirrored in the oracle: round(SCALE / n) — half-up on a positive
-    // double, identical on both engines
-    var rank = nodes.select(col("node"),
-      lit(math.round(SCALE / n)).as("r")).localCheckpoint(true)
-    val base = (1.0 - damping) * SCALE / n
-    for (_ <- 1 to iters) {
-      val prev = rank
-      val dangling = if (!hasSinks) 0.0
-        else sinks.join(rank, Seq("node"))
-          .agg(coalesce(sum("r"), lit(0L))).head().getLong(0) / n.toDouble
-      // per-edge contribution: ONE double multiply + half-up round,
-      // op-for-op the oracle's expression — then an order-free long sum
-      val msgs = trans.join(rank, trans("src") === rank("node"))
-        .select(trans("dst").as("node"),
-          round(col("r").cast("double") * col("p"), 0).cast("long").as("c"))
-        .groupBy("node").agg(sum("c").as("m"))
-      rank = nodes.join(msgs, Seq("node"), "left")
-        .select(col("node"),
-          round(lit(base) + lit(damping) *
-            (coalesce(col("m"), lit(0L)).cast("double") + lit(dangling)), 0)
-            .cast("long").as("r"))
-        .localCheckpoint(true)
-      // round N is materialized (eager checkpoint) — round N−1's blocks
-      // are dead; release them so the loop holds ≤2 rank states, not 10
-      graft.core.Caches.releaseMaterialized(prev)
-    }
-    rank.select(col("node"),
-      (col("r").cast("double") / lit(SCALE)).as("rank"))
-    } finally {
-      pinned.foreach(f => { f.unpersist(); () })
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val parts = math.max(4L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toLong, n / 20000L + 1L))
+    graft.core.SessionConf.scoped(spark,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
+      // released in the finally: a failed round (executor loss, OOM in a
+      // dangling collect) must not leave four frames pinned in storage
+      val pinned = scala.collection.mutable.Buffer[DataFrame](edges, nodes)
+      try {
+        val outw = edges.groupBy("src").agg(sum("weight").as("outw"))
+        // repartitioned to the loop's parallelism before caching: the scan
+        // may have many small input splits, and every round re-reads these
+        // cached partitions — task count per round should match `parts`
+        val trans = edges.join(outw, "src")
+          .select(col("src"), col("dst"), (col("weight") / col("outw")).as("p"))
+          .repartition(parts.toInt, col("src"))
+          .cache()
+        // nodes with no out-edges: their rank leaks unless redistributed.
+        // Counted once up front — a sink-free graph (the common symmetrized
+        // case) skips the per-round dangling aggregate entirely, halving the
+        // driver-job count of the loop.
+        val sinks = nodes.join(outw.select(col("src").as("node")),
+          Seq("node"), "left_anti").cache()
+        pinned += trans; pinned += sinks
+        val hasSinks = sinks.limit(1).count() > 0
+        // mirrored in the oracle: round(SCALE / n) — half-up on a positive
+        // double, identical on both engines
+        var rank = nodes.select(col("node"),
+          lit(math.round(SCALE / n)).as("r")).localCheckpoint(true)
+        val base = (1.0 - damping) * SCALE / n
+        for (_ <- 1 to iters) {
+          val prev = rank
+          val dangling = if (!hasSinks) 0.0
+            else sinks.join(rank, Seq("node"))
+              .agg(coalesce(sum("r"), lit(0L))).head().getLong(0) / n.toDouble
+          // per-edge contribution: ONE double multiply + half-up round,
+          // op-for-op the oracle's expression — then an order-free long sum
+          val msgs = trans.join(rank, trans("src") === rank("node"))
+            .select(trans("dst").as("node"),
+              round(col("r").cast("double") * col("p"), 0).cast("long").as("c"))
+            .groupBy("node").agg(sum("c").as("m"))
+          rank = nodes.join(msgs, Seq("node"), "left")
+            .select(col("node"),
+              round(lit(base) + lit(damping) *
+                (coalesce(col("m"), lit(0L)).cast("double") + lit(dangling)), 0)
+                .cast("long").as("r"))
+            .localCheckpoint(true)
+          // round N is materialized (eager checkpoint) — round N−1's blocks
+          // are dead; release them so the loop holds ≤2 rank states, not 10
+          graft.core.Caches.releaseMaterialized(prev)
+        }
+        rank.select(col("node"),
+          (col("r").cast("double") / lit(SCALE)).as("rank"))
+      } finally pinned.foreach(f => { f.unpersist(); () })
     }
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.streaming.StreamDedup
+import graft.core.SessionConf
+import graft.streaming.{StreamDedup, Streams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -183,65 +184,63 @@ object FuzzDedup {
           .parquet(landing.toString)
         StreamDedup.admit(tiers, stream, root.toString, ck.toString)
       }
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.files.maxPartitionBytes", (64 * 1024).toString)
-      // the drawn bucket count holds for the WHOLE replay (baked into
-      // state at write time — a mid-replay change would split the
-      // posting layout); restored in the finally. The override window is
-      // held under StreamDedup.layoutOverrideLock: PostBuckets is a
-      // process-global read at every state write/read, so overlapping
-      // replays (or any concurrent dedup stream in this JVM) must be
-      // impossible by construction, not by test-ordering accident
-      // (round-17 advice)
-      StreamDedup.layoutOverrideLock.synchronized {
-      val prevPb = sys.props.get("graft.postBuckets")
-      sys.props("graft.postBuckets") = postBuckets.toString
-      var q = attach()
-      try {
-        chunkFiles.zipWithIndex.foreach { case (f, i) =>
-          // the drawn restart boundary OWNS its fold decision: when the
-          // draw says restart WITHOUT a fold, the cadence must not fold
-          // there either, or the no-fold recovery path (resume over
-          // unfolded live state) silently stops being exercised on
-          // seeds where the boundaries coincide (round-17 advice)
-          val cadenceFold = foldEvery.exists(k => i > 0 && i % k == 0) &&
-            !(restartAfter.contains(i) && !foldAtRestart)
-          if (restartAfter.contains(i) || cadenceFold) {
+      SessionConf.scoped(s,
+          "spark.sql.shuffle.partitions" -> Streams.ReplayStatePartitions.toString,
+          "spark.sql.files.maxPartitionBytes" -> (64 * 1024).toString) {
+        // the drawn bucket count holds for the WHOLE replay (baked into
+        // state at write time — a mid-replay change would split the
+        // posting layout); restored in the finally. The override window is
+        // held under StreamDedup.layoutOverrideLock: PostBuckets is a
+        // process-global read at every state write/read, so overlapping
+        // replays (or any concurrent dedup stream in this JVM) must be
+        // impossible by construction, not by test-ordering accident
+        // (round-17 advice)
+        StreamDedup.layoutOverrideLock.synchronized {
+          val prevPb = sys.props.get("graft.postBuckets")
+          sys.props("graft.postBuckets") = postBuckets.toString
+          var q = attach()
+          try {
+            chunkFiles.zipWithIndex.foreach { case (f, i) =>
+              // the drawn restart boundary OWNS its fold decision: when the
+              // draw says restart WITHOUT a fold, the cadence must not fold
+              // there either, or the no-fold recovery path (resume over
+              // unfolded live state) silently stops being exercised on
+              // seeds where the boundaries coincide (round-17 advice)
+              val cadenceFold = foldEvery.exists(k => i > 0 && i % k == 0) &&
+                !(restartAfter.contains(i) && !foldAtRestart)
+              if (restartAfter.contains(i) || cadenceFold) {
+                q.stop()
+                if (cadenceFold || (restartAfter.contains(i) && foldAtRestart))
+                  StreamDedup.compactState(s, root.toString)
+                q = attach()
+              }
+              val tmp = landStage.resolve(f.getFileName.toString)
+              java.nio.file.Files.copy(f, tmp)
+              tmp.toFile.setLastModified(f.toFile.lastModified())
+              java.nio.file.Files.move(tmp, landing.resolve(f.getFileName.toString),
+                java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+              q.processAllAvailable()
+            }
+            // materialize the admitted set BEFORE the state tree is deleted
+            // below — the returned frame must not lazily re-read `root`
+            val admitted = StreamDedup.readAdmitted(s, root.toString)
+              .orderBy(col("doc_id"))
+            s.createDataFrame(
+              java.util.Arrays.asList(admitted.collect(): _*), admitted.schema)
+          } finally {
             q.stop()
-            if (cadenceFold || (restartAfter.contains(i) && foldAtRestart))
-              StreamDedup.compactState(s, root.toString)
-            q = attach()
+            prevPb match {
+              case Some(v) => sys.props("graft.postBuckets") = v
+              case None => sys.props.remove("graft.postBuckets"); ()
+            }
+            // every replay writes fresh landing copies + state trees: drop
+            // them now rather than let each bench pass hold its state tree
+            // in tmpfs until JVM exit. Only the memoized STAGED chunks
+            // persist across replays.
+            Seq(ck, landing, landStage, root).foreach(graft.core.Scratch.rmTree)
           }
-          val tmp = landStage.resolve(f.getFileName.toString)
-          java.nio.file.Files.copy(f, tmp)
-          tmp.toFile.setLastModified(f.toFile.lastModified())
-          java.nio.file.Files.move(tmp, landing.resolve(f.getFileName.toString),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          q.processAllAvailable()
         }
-        // materialize the admitted set BEFORE the state tree is deleted
-        // below — the returned frame must not lazily re-read `root`
-        val admitted = StreamDedup.readAdmitted(s, root.toString)
-          .orderBy(col("doc_id"))
-        s.createDataFrame(
-          java.util.Arrays.asList(admitted.collect(): _*), admitted.schema)
-      } finally {
-        q.stop()
-        prevPb match {
-          case Some(v) => sys.props("graft.postBuckets") = v
-          case None => sys.props.remove("graft.postBuckets"); ()
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
-        // every replay writes fresh landing copies + state trees: drop
-        // them now rather than let each bench pass hold its state tree
-        // in tmpfs until JVM exit. Only the memoized STAGED chunks
-        // persist across replays.
-        Seq(ck, landing, landStage, root).foreach(graft.core.Scratch.rmTree)
       }
-      } // layoutOverrideLock
     }
 
     // ---- batch twin: ntile chunks + earlier-chunk window joins --------

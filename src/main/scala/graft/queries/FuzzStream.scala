@@ -176,11 +176,8 @@ object FuzzStream {
     def runStream(s: SparkSession, dir: String): DataFrame = {
       val agg = aggPlan(StreamingQ.stagedEventStream(s, dir, "fuzzst"))
       val mode = if (append) OutputMode.Append() else OutputMode.Complete()
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(agg, s"q_fuzzst_${seed}_sink", mode)
+      Streams.runToMemory(agg, s"q_fuzzst_${seed}_sink", mode)
         .orderBy(orderCols: _*)
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
 
     /** Batch twin: identical plan on the bounded table; in append mode
@@ -367,12 +364,9 @@ object FuzzStream {
         .join(side(stream, rightType, "r"), expr(cond), joinType)
         .select(col("lid").cast("long").as("lid"),
           col("rid").cast("long").as("rid"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(joined, s"q_fuzzstj_${seed}_sink",
+      Streams.runToMemory(joined, s"q_fuzzstj_${seed}_sink",
           OutputMode.Append())
         .orderBy(asc_nulls_first("lid"), asc_nulls_first("rid"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
 
     /** Batch twin: inner matches as a plain join; outer verdicts applied

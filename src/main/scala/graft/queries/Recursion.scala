@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.core.Tables
+import graft.core.{SessionConf, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col, lit}
 
@@ -52,11 +52,12 @@ object Recursion {
   private[queries] def levelLimit(s: SparkSession): Unit =
     s.conf.set("spark.sql.cteRecursionLevelLimit", "10000")
 
-  /** Execute a recursive statement EAGERLY under a scoped shuffle-
-    * partition count and return the materialized result (round 18): the
-    * conf must hold while the per-level jobs actually run — a lazily
-    * returned frame executes after the caller's finally restored it.
-    * The materialization is an entry-result-class cache (released
+  /** Execute a recursive statement EAGERLY at `parts` shuffle partitions
+    * and return the materialized result (round 18). The count is set
+    * through [[SessionConf.scoped]], which restores the session's count
+    * when the body returns; a lazily returned frame would run its
+    * per-level jobs after that restore, so the body counts the frame
+    * while the scoped count still holds. The materialization is an entry-result-class cache (released
     * between bench passes, so every timed pass pays the full recursion);
     * the consumer's action reads the cache built here, within the same
     * invocation. */
@@ -68,13 +69,12 @@ object Recursion {
     // — chain 5.2 → 6.5 s, fuzzr_18 3.0 → 4.2 s (min-of-3 standalone,
     // idle host): the per-level driver collect + LocalRelation planning
     // costs more than the per-level broadcast jobs it removes.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
-    try {
+    SessionConf.scoped(s,
+        "spark.sql.shuffle.partitions" -> parts.toString) {
       val df = graft.core.Caches.cachedTransient(build)
       df.count()
       df
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
   }
 
   /** Shuffle-partition count for a recursion whose per-level work is one
@@ -318,7 +318,7 @@ object Recursion {
         try {
           if (thr.trim.startsWith("-")) -1L
           else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(thr)
-        } catch { case _: Throwable => 10L * 1024 * 1024 }
+        } catch { case scala.util.control.NonFatal(_) => 10L * 1024 * 1024 }
       if (bytes <= 0) 0L else bytes / 16
     }
     // partitioned-by-src edge snapshot, built lazily on first shuffle-mode

@@ -1,11 +1,13 @@
 package graft.queries
 
+import graft.core.SessionConf
 import graft.streaming.{StreamDedup, Streams}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 /** Structured-Streaming query entries: the SAME windowed aggregation /
   * dedup / interval-join code that runs continuously (watermark + window,
@@ -87,7 +89,7 @@ object StreamingQ {
             val p = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
             p.getFileSystem(s.sparkContext.hadoopConfiguration)
               .getContentSummary(p).getLength
-          } catch { case _: Throwable => 0L }
+          } catch { case NonFatal(_) => 0L }
         val rowGroup = math.max(16L * 1024,
           srcBytes / numFiles / math.max(1, s.sparkContext.defaultParallelism))
         stageFrameChunks(graft.core.Tables(s, dir, "documents"),
@@ -127,7 +129,7 @@ object StreamingQ {
             .filter(_.getFileName.toString.endsWith(".parquet"))
             .map(java.nio.file.Files.size).foldLeft(0L)(math.max)
         } finally ls.close()
-      } catch { case _: Throwable => 0L }
+      } catch { case NonFatal(_) => 0L }
     math.max(floorBytes,
       chunkBytes / math.max(1, s.sparkContext.defaultParallelism))
   }
@@ -174,16 +176,6 @@ object StreamingQ {
     landing
   }
 
-  // Stateful-parallelism note (round-17 measurement): raising the
-  // interval joins' / sessionization's state partitions toward the core
-  // count was MEASURED AND REJECTED — min-of-3 standalone walls at
-  // {4, 8, 32} partitions were {15.4, 13.9, 16.2} s (inner join),
-  // {17.7, 18.4, 24.4} (left outer), {18.9, 16.0, 40.0} (full outer):
-  // per-partition state-store fixed costs (provider init, version
-  // cloning, delta commit per store per trigger) dominate long before
-  // row throughput does at this batch size, so the r16 sizing — a small
-  // fixed count tracking state, not cores — stands for every stateful
-  // entry here.
   val q_stream_windowed = Q(
     "q_stream_windowed",
     (s, dir) => {
@@ -195,17 +187,8 @@ object StreamingQ {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-      // stateful-operator parallelism is pinned at QUERY START and should
-      // track state size (#windows × #event_types ≈ thousands), not the
-      // session's scan parallelism: every state partition costs per-batch
-      // provider init + delta-file I/O in the checkpoint dir. Scoped to
-      // this query; the session conf is restored before returning.
-      // (Values are exact DECIMAL sums, so partitioning can't change them.)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(agg, "q_stream_windowed_sink", OutputMode.Complete())
+      Streams.runToMemory(agg, "q_stream_windowed_sink", OutputMode.Complete())
         .orderBy(col("window_start"), col("event_type"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some(s"""
       |SELECT time_bucket(INTERVAL '10 minutes', ts) AS window_start, event_type,
@@ -241,13 +224,8 @@ object StreamingQ {
         .dedupWithinWatermark(stream, Seq("user_id", "event_type"),
           watermarkDelay = "35 days")
         .select(col("user_id"), col("event_type"))
-      // dedup state partitions sized to key cardinality, like
-      // q_stream_windowed (see the note there)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(dd, "q_stream_dedup_sink", OutputMode.Append())
+      Streams.runToMemory(dd, "q_stream_dedup_sink", OutputMode.Append())
         .orderBy(col("user_id"), col("event_type"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some("""
       |SELECT DISTINCT user_id, event_type FROM events
@@ -282,19 +260,8 @@ object StreamingQ {
       val joined = p.join(c,
           expr("pu = cu AND cts >= pts - interval 30 minutes AND cts < pts"))
         .select(col("pid"), col("cid"))
-      // state-store lever sweep (round 18, measured and the r16 sizing
-      // KEPT): min-of-3 standalone walls on an idle host —
-      // parts {1,2,4,8} = {4.71, 5.81, 4.42, 8.68} s on the HDFS-backed
-      // provider (tmpfs checkpoint), RocksDB provider {9.97, —, 5.44, —}:
-      // per-partition per-trigger store fixed costs keep 4 the local
-      // optimum and RocksDB's native column-family/changelog machinery
-      // costs more than it saves at this state size (its lever is
-      // multi-GB per-partition state, not a 5-trigger replay).
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(joined, "q_stream_join_sink", OutputMode.Append())
+      Streams.runToMemory(joined, "q_stream_join_sink", OutputMode.Append())
         .orderBy(col("pid"), col("cid"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some("""
       |SELECT p.event_id AS pid, c.event_id AS cid
@@ -337,15 +304,12 @@ object StreamingQ {
           expr("pu = cu AND cts >= pts - interval 30 minutes AND cts < pts"),
           "leftOuter")
         .select(col("pid"), col("cid").cast("long").as("cid"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // NULLS FIRST made explicit on both renderings (round-15 advice):
       // Spark ASC defaults to nulls-first, DuckDB to nulls-last — the
       // NULL-cid verdict rows would order differently under an
       // order-sensitive compare unless both sides state the placement
-      try Streams.runToMemory(joined, "q_stream_join_outer_sink", OutputMode.Append())
+      Streams.runToMemory(joined, "q_stream_join_outer_sink", OutputMode.Append())
         .orderBy(asc_nulls_first("pid"), asc_nulls_first("cid"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some("""
       |WITH p AS (
@@ -396,12 +360,9 @@ object StreamingQ {
           "fullOuter")
         .select(col("pid").cast("long").as("pid"),
           col("cid").cast("long").as("cid"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
       // explicit NULLS FIRST, matching the oracle (see q_stream_join_outer)
-      try Streams.runToMemory(joined, "q_stream_join_full_sink", OutputMode.Append())
+      Streams.runToMemory(joined, "q_stream_join_full_sink", OutputMode.Append())
         .orderBy(asc_nulls_first("pid"), asc_nulls_first("cid"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some("""
       |WITH p AS (
@@ -466,13 +427,8 @@ object StreamingQ {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
         .select(col("user_id"), col("w.start").as("start_ts"),
           col("w.end").as("end_ts"), col("n_events"), col("sum_value"))
-      // session state partitions sized to key cardinality, like
-      // q_stream_windowed (see the notes there)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(sess, "q_stream_sessions_sink", OutputMode.Append())
+      Streams.runToMemory(sess, "q_stream_sessions_sink", OutputMode.Append())
         .orderBy(col("user_id"), col("start_ts"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some(s"""
       |WITH g AS (
@@ -527,11 +483,8 @@ object StreamingQ {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
         .select(col("user_id"), col("w.start").as("start_ts"),
           col("w.end").as("end_ts"), col("n_events"), col("sum_value"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(sess, "q_stream_sessions_gap_sink", OutputMode.Append())
+      Streams.runToMemory(sess, "q_stream_sessions_gap_sink", OutputMode.Append())
         .orderBy(col("user_id"), col("start_ts"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some(s"""
       |WITH e AS (
@@ -584,11 +537,8 @@ object StreamingQ {
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("c_mktsegment"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(joined, "q_stream_enrich_sink", OutputMode.Append())
+      Streams.runToMemory(joined, "q_stream_enrich_sink", OutputMode.Append())
         .orderBy(col("event_id"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some("""
       |SELECT event_id, user_id, event_type, c_mktsegment
@@ -619,25 +569,17 @@ object StreamingQ {
         .withColumn("h", md5(lower(trim(col("text")))))
         .groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
-      // dedup state partitions sized to key cardinality, like
-      // q_stream_windowed (see the note there). The scan-split cap is
-      // the streaming twin of Tables.spread: each staged chunk is ONE
-      // small file = one scan split, and the token/shingle kernel runs
-      // AT the scan (a repartition doesn't help — the optimizer pushes
-      // the filter back through it), so without the cap every
-      // micro-batch's CPU-heavy filter runs on a single core. At 100 TB
-      // arriving files exceed the default 128 MB split and this knob
-      // reverts to the default.
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 64 * 1024).toString)
-      try Streams.runToMemory(dd, "q_stream_curate_sink", OutputMode.Complete())
-        .orderBy(col("doc_id"))
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+      // The scan-split cap is the streaming twin of Tables.spread: each
+      // staged chunk is ONE small file = one scan split, and the
+      // token/shingle kernel runs AT the scan (a repartition doesn't help
+      // — the optimizer pushes the filter back through it), so without
+      // the cap every micro-batch's CPU-heavy filter runs on a single
+      // core. At 100 TB arriving files exceed the default 128 MB split
+      // and this knob reverts to the default.
+      SessionConf.scoped(s, "spark.sql.files.maxPartitionBytes" ->
+          replaySplitCap(s, landing, 64 * 1024).toString) {
+        Streams.runToMemory(dd, "q_stream_curate_sink", OutputMode.Complete())
+          .orderBy(col("doc_id"))
       }
     },
     Some(s"""
@@ -697,11 +639,8 @@ object StreamingQ {
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
         .select(col("window.start").as("window_start"), col("event_type"),
           col("n"), col("sum_value"))
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try Streams.runToMemory(agg, "q_stream_late_sink", OutputMode.Append())
+      Streams.runToMemory(agg, "q_stream_late_sink", OutputMode.Append())
         .orderBy(col("window_start"), col("event_type"))
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
     },
     Some(s"""
       |WITH e AS (
@@ -953,17 +892,13 @@ object StreamingQ {
       val landing = stagedDocLanding(s, dir, tag)
       val root = graft.core.Scratch.tempDir(s"graft_$tag")
       val ck = graft.core.Scratch.tempDir(s"graft_${tag}_ck")
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, splitFloor).toString)
-      val q = StreamDedup.admit(tiers, stream, root.toString, ck.toString)
       try {
-        try q.processAllAvailable() finally {
-          q.stop()
-          s.conf.set("spark.sql.shuffle.partitions", prevParts)
-          s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+        SessionConf.scoped(s,
+            "spark.sql.shuffle.partitions" -> Streams.ReplayStatePartitions.toString,
+            "spark.sql.files.maxPartitionBytes" ->
+              replaySplitCap(s, landing, splitFloor).toString) {
+          val q = StreamDedup.admit(tiers, stream, root.toString, ck.toString)
+          try q.processAllAvailable() finally q.stop()
         }
         // the admitted output carries the micro-batch it was admitted
         // in (readAdmitted casts the dir key to the oracle's BIGINT);
@@ -1049,19 +984,13 @@ object StreamingQ {
       val stream = stagedDocStream(s, dir, "domcap")
       val landing = stagedDocLanding(s, dir, "domcap")
       val top = Corpus.domainCapTop(Corpus.sourceScored(stream))
-      // state partitions sized to key cardinality; scan-split cap so the
-      // token kernel parallelizes per micro-batch (see q_stream_curate)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val prevSplit = s.conf.get("spark.sql.files.maxPartitionBytes")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.files.maxPartitionBytes",
-        replaySplitCap(s, landing, 64 * 1024).toString)
-      try Corpus.domainCapUnpack(
-        Streams.runToMemory(top, "q_stream_domain_cap_sink",
-          OutputMode.Complete()))
-      finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        s.conf.set("spark.sql.files.maxPartitionBytes", prevSplit)
+      // scan-split cap so the token kernel parallelizes per micro-batch
+      // (see q_stream_curate)
+      SessionConf.scoped(s, "spark.sql.files.maxPartitionBytes" ->
+          replaySplitCap(s, landing, 64 * 1024).toString) {
+        Corpus.domainCapUnpack(
+          Streams.runToMemory(top, "q_stream_domain_cap_sink",
+            OutputMode.Complete()))
       }
     },
     Some(Corpus.domainCapSql))
