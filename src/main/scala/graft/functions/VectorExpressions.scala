@@ -123,169 +123,10 @@ case class L2Distance(left: Expression, right: Expression) extends VectorFoldExp
     copy(left = l, right = r)
 }
 
-/** Σᵢ dt[i·ksub + codes[i]] — the PQ/ADC distance reconstruction
-  * (PqIndex/IvfPq search): m table lookups per candidate over the
-  * broadcast per-query distance table. A tight primitive loop inlined
-  * into whole-stage codegen, replacing the higher-order `aggregate`
-  * fold (HOFs evaluate their lambda per element outside codegen).
-  * Bit-identical: same ascending-subspace add order, same doubles.
-  * `left` = codes (array<int>), `right` = dt (array<double>); a null
-  * element or an out-of-range code yields null (the HOF form's
-  * element_at would throw or null the same malformed input).
-  */
-case class AdcLookup(left: Expression, right: Expression, ksub: Int)
-    extends BinaryExpression {
-  override def prettyName: String = "graft_adc"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (array<int>, array<double>), got " +
-            s"${l.simpleString} and ${r.simpleString}")
-    }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val codes = l.asInstanceOf[ArrayData]
-    val dt = r.asInstanceOf[ArrayData]
-    val m = codes.numElements()
-    val nd = dt.numElements()
-    var s = 0.0
-    var i = 0
-    while (i < m) {
-      if (codes.isNullAt(i)) return null
-      val idx = i * ksub + codes.getInt(i)
-      if (idx < 0 || idx >= nd || dt.isNullAt(idx)) return null
-      s += dt.getDouble(idx)
-      i += 1
-    }
-    s
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (codes, dt) => {
-      val m = ctx.freshName("m")
-      val nd = ctx.freshName("nd")
-      val i = ctx.freshName("i")
-      val idx = ctx.freshName("idx")
-      val s = ctx.freshName("s")
-      s"""
-         |int $m = $codes.numElements();
-         |int $nd = $dt.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($codes.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |  int $idx = $i * $ksub + $codes.getInt($i);
-         |  if ($idx < 0 || $idx >= $nd || $dt.isNullAt($idx)) { ${ev.isNull} = true; break; }
-         |  $s += $dt.getDouble($idx);
-         |}
-         |if (!${ev.isNull}) { ${ev.value} = $s; }
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): AdcLookup =
-    copy(left = l, right = r)
-}
-
-/** √Σᵢ (qᵢ − (minᵢ + (codesᵢ & 0xFF)·scaleᵢ))² — the scalar-quantization
-  * (SQ8) asymmetric distance: the raw query against a per-dimension
-  * uint8-dequantized candidate, the shortlist kernel of the 4x rung of
-  * the compression tier ([[graft.index.SqIndex]]). The quantizer grid
-  * (per-dimension mins and scales, fit once on a spread sample) rides
-  * along as constructor state — KB-scale, referenced from the generated
-  * code via `addReferenceObj`, never shipped per row. `left` = codes
-  * (binary, one byte per dimension), `right` = query (array<float|double>);
-  * a length mismatch with the query or the grid, or a null query
-  * element, yields null (the HOF forms' null-poisoning convention).
-  */
-case class SqDistance(left: Expression, right: Expression,
-    mins: Array[Double], scales: Array[Double]) extends BinaryExpression {
-  override def prettyName: String = "graft_sq_dist"
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (BinaryType, ArrayType(FloatType | DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName requires (binary, array<float|double>), got " +
-            s"${l.simpleString} and ${r.simpleString}")
-    }
-
-  @transient private lazy val qIsFloat =
-    right.dataType.asInstanceOf[ArrayType].elementType == FloatType
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val codes = l.asInstanceOf[Array[Byte]]
-    val q = r.asInstanceOf[ArrayData]
-    val n = codes.length
-    if (n != q.numElements() || n != mins.length) return null
-    var s = 0.0
-    var i = 0
-    while (i < n) {
-      if (q.isNullAt(i)) return null
-      val qi = if (qIsFloat) q.getFloat(i).toDouble else q.getDouble(i)
-      val d = qi - (mins(i) + (codes(i) & 0xFF) * scales(i))
-      s += d * d
-      i += 1
-    }
-    math.sqrt(s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val minsRef = ctx.addReferenceObj("sqMins", mins, "double[]")
-    val scalesRef = ctx.addReferenceObj("sqScales", scales, "double[]")
-    val qa = if (qIsFloat) "getFloat" else "getDouble"
-    nullSafeCodeGen(ctx, ev, (codes, q) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = $codes.length;
-         |if ($n != $q.numElements() || $n != $minsRef.length) { ${ev.isNull} = true; } else {
-         |  double $s = 0.0;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($q.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    double $d = (double) $q.$qa($i)
-         |      - ($minsRef[$i] + ($codes[$i] & 0xFF) * $scalesRef[$i]);
-         |    $s += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = java.lang.Math.sqrt($s); }
-         |}
-       """.stripMargin
-    })
-  }
-
-  // Array-valued constructor state breaks case-class equality (reference
-  // equality on arrays), which Catalyst uses for semanticEquals/CSE —
-  // compare the grid by content like the children.
-  override def equals(o: Any): Boolean = o match {
-    case s: SqDistance =>
-      s.left == left && s.right == right &&
-        java.util.Arrays.equals(s.mins, mins) &&
-        java.util.Arrays.equals(s.scales, scales)
-    case _ => false
-  }
-  override def hashCode(): Int =
-    java.util.Objects.hash(left, right,
-      Integer.valueOf(java.util.Arrays.hashCode(mins)),
-      Integer.valueOf(java.util.Arrays.hashCode(scales)))
-
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SqDistance =
-    copy(left = l, right = r)
-}
-
 /** Σ popcount(aᵢ xor bᵢ) over packed signature words — the multi-word
-  * Hamming kernel behind the BQ index (gann.c's distance kernel role for
-  * the 1-bit tier): XOR + POPCNT in a primitive loop inside whole-stage
-  * codegen, where the `aggregate(zip_with(...))` form it replaces
+  * Hamming kernel of the 1-bit tier (the `graft_hamming_words` SQL
+  * function; the BQ index scores the same sum in its scan kernel):
+  * XOR + POPCNT in a primitive loop inside whole-stage codegen, where the `aggregate(zip_with(...))` form it replaces
   * dispatches an interpreted lambda per word. Inputs are `array<long>`
   * signatures; length mismatch or a null word yields null, matching the
   * HOF fold's null-poisoning. */

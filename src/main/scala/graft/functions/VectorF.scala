@@ -84,26 +84,12 @@ object VectorF {
     when(union === 0L, lit(0.0)).otherwise(d(inter) / d(union))
   }
 
-  /** PQ/ADC distance reconstruction: Σᵢ dt[i·ksub + codes[i]] over the
-    * per-query distance table (codegen'd [[AdcLookup]]). */
-  def adc(codes: Column, dt: Column, ksub: Int): Column =
-    ColumnBridge.column(AdcLookup(
-      ColumnBridge.expression(codes), ColumnBridge.expression(dt), ksub))
-
-  /** SQ8 asymmetric distance: raw query vs per-dimension uint8-dequantized
-    * codes over the broadcast-free constructor grid (codegen'd
-    * [[SqDistance]] — the [[graft.index.SqIndex]] shortlist kernel). */
-  def sqDist(codes: Column, q: Column, mins: Array[Double],
-      scales: Array[Double]): Column =
-    ColumnBridge.column(SqDistance(
-      ColumnBridge.expression(codes), ColumnBridge.expression(q), mins, scales))
-
   /** Hamming distance between two long-encoded bit signatures (SimHash). */
   def hammingDist(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b)).cast("int")
 
   /** Σ popcount(aᵢ xor bᵢ) over two packed `array<long>` signatures —
-    * the codegen'd [[HammingWords]] kernel (the BQ index's distance). */
+    * the codegen'd [[HammingWords]] kernel. */
   def hammingWords(a: Column, b: Column): Column =
     ColumnBridge.column(HammingWords(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))

@@ -1,7 +1,7 @@
 package graft.index
 
-import graft.functions.VectorF
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** BQ (binary-quantization) ANN index — the 1-bit member of the
   * compression tier ([[Quantized]] has the tier table): every vector is
@@ -13,10 +13,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Thresholds are the per-dimension MEANS of a spread fit sample —
   * sign-of-centered-value splits each dimension near its median mass,
   * where raw sign bits waste whole dimensions on biased data. Search
-  * sign-codes the query once and ranks by Hamming distance (the
-  * codegen'd [[graft.functions.HammingWords]] XOR+POPCNT over the
-  * packed words); the shortlist boundary sits in a heavy tie band, so
-  * serve through `searchRerank` with a deep shortlist.
+  * sign-codes the query once and ranks by Hamming distance (XOR+POPCNT
+  * over the packed words, as [[graft.functions.HammingWords]] sums it);
+  * the shortlist boundary sits in a heavy tie band, so serve through
+  * `searchRerank` with a deep shortlist.
   */
 object BqIndex extends Quantized.Family {
 
@@ -34,13 +34,25 @@ object BqIndex extends Quantized.Family {
   /** Threshold sign codes, queries coded alike, Hamming distance.
     * `persisted = false` for IVF-BQ, whose zero thresholds are implied. */
   private[index] final case class Codec(thresholds: Array[Double],
-      persisted: Boolean = true) extends Quantized.Codec[Seq[Long], Seq[Long]] {
+      persisted: Boolean = true)
+      extends Quantized.Codec[Seq[Long], Array[Long], Array[Long]] {
     def codeCol = "sig"
-    def queryCol = "qsig"
     def encode(v: IndexedSeq[Double]): Seq[Long] = encodeOne(v, thresholds).toSeq
-    def query(v: IndexedSeq[Double]): Seq[Long] = encode(v)
-    def dist(code: Column, q: Column): Column =
-      VectorF.hammingWords(code, q).cast("double")
+    def query(v: IndexedSeq[Double]): Array[Long] = encodeOne(v, thresholds)
+    def read(row: InternalRow, ord: Int): Array[Long] = {
+      val a = Search.arrayAt(row, ord)
+      if (a == null) null else a.toLongArray()
+    }
+    /** Σ popcount(codeᵢ xor qᵢ) as a double. */
+    def dist(code: Array[Long], q: Array[Long]): Double =
+      if (code.length != q.length) Double.NaN
+      else {
+        var s = 0L; var i = 0
+        while (i < code.length) {
+          s += java.lang.Long.bitCount(code(i) ^ q(i)); i += 1
+        }
+        s.toDouble
+      }
     def write(spark: SparkSession, path: String): Unit =
       if (persisted) {
         import spark.implicits._

@@ -2,6 +2,7 @@ package graft.index
 
 import graft.functions.VectorF
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,8 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * This is the scale path for similarity search (SURVEY.md §4.3): the
   * posting-list table is partitioned by `cluster`, so a probe reads
-  * nprobe/k of the data; the centroid table is tiny and broadcast. The
-  * brute-force path (VectorSearch.q_knn_*) is the recall oracle.
+  * nprobe/k of the data; the centroid table is tiny, and the probe runs
+  * on the driver. The brute-force path (VectorSearch.q_knn_*) is the
+  * recall oracle.
   */
 object IvfIndex {
 
@@ -23,10 +25,15 @@ object IvfIndex {
     def nearestClusters(v: Array[Double], nprobe: Int): Seq[Int] =
       Coarse.nearestK(v, centroids, nprobe).map(centroids(_)._1).toSeq
 
-    /** Batch search: probe nprobe clusters per query, exact-rank top-k.
-      * `idCol` must be integral (rides the top-k heap as long, cast back
-      * on output — see GannIndex.requireIntegralId). `excludeSelf`
-      * follows the id-domain convention in [[Search.selfFilter]].
+    /** Batch search: probe the `nprobe` nearest clusters per query and
+      * rank their posting lists exactly, by the L2Distance fold, into the
+      * top-k rows (qid, idCol, dist, rnk) — one Spark job over the probed
+      * lists ([[Search.scan]]). It runs when called and returns a local
+      * frame, so the query batch and its k·|queries| rows must fit on the
+      * driver; a streaming query frame is rejected. `idCol` must be
+      * integral (ranked as a long, cast back on output — see
+      * GannIndex.requireIntegralId). `excludeSelf` follows the id-domain
+      * convention in [[Search.selfFilter]].
       *
       * `allowedIds` is the filtered-search contract (the reference's
       * Milvus `filter=` search kwarg, radient/tasks/sinks/milvus.py:122):
@@ -34,37 +41,33 @@ object IvfIndex {
       * distance fold, so the returned k are the true top-k of the
       * ALLOWED set within the probed clusters — pre-filter semantics,
       * never the post-filtered (and arbitrarily short) unfiltered
-      * top-k. The semi join shuffles ids only; selectivity prunes the
-      * distance work proportionally. */
+      * top-k. The semi join may cost the search one more job. */
     def search(queries: DataFrame, qid: String, qvec: String,
         k: Int, nprobe: Int, excludeSelf: Boolean = true,
         allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = GannIndex.requireIntegralId(assign, idCol)
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast(centroids)
-      val np = nprobe
-      val probeUdf = udf { (v: Seq[Double]) =>
-        val cs = bc.value
-        val arr = v.toArray
-        Coarse.nearestK(arr, cs, np).map(cs(_)._1).toSeq
+      Search.scan(queries, qid, qvec, k, metric, excludeSelf, assign, idCol,
+          col(vecCol).cast("array<double>"), clustered = true, allowedIds,
+          L2Kernel) { v =>
+        Coarse.nearestK(v, centroids, nprobe).toSeq.map(p => (centroids(p)._1, v))
       }
-      val qn = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-        qvec, metric)
-      val probed = qn.select(col(qid), col(qvec),
-        explode(probeUdf(col(qvec))).as("cluster"))
-      val base = allowedIds.fold(assign)(ids =>
-        assign.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
-      // bounded-heap top-k (TopKAgg): map-side partial aggregation ships
-      // ≤k pairs per partition per query — no per-id dedup needed here,
-      // every vector lives in exactly one posting list
-      Search.topKOut(
-        Search.selfFilter(probed.join(base, Seq("cluster")), idCol, qid,
-            excludeSelf)
-          .select(col(qid), col(idCol),
-            VectorF.l2Dist(col(qvec), col(vecCol)).as("dist")),
-        qid, idCol, idType, k)
     }
+  }
+
+  /** √Σ(qᵢ − vᵢ)² over the raw vectors: the same sequential fold as the
+    * codegen'd [[graft.functions.L2Distance]], so distances are
+    * bit-identical to `VectorF.l2Dist`. */
+  private object L2Kernel extends Search.Kernel[Array[Double], Array[Double]] {
+    def read(row: InternalRow, ord: Int): Array[Double] = {
+      val a = Search.arrayAt(row, ord)
+      if (a == null) null else a.toDoubleArray()
+    }
+    def dist(v: Array[Double], q: Array[Double]): Double =
+      if (v.length != q.length) Double.NaN
+      else {
+        var s = 0.0; var i = 0
+        while (i < v.length) { s = s + (q(i) - v(i)) * (q(i) - v(i)); i += 1 }
+        math.sqrt(s)
+      }
   }
 
   /** Incremental insert — the streaming-ingest half of the reference's

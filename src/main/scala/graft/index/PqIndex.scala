@@ -1,7 +1,7 @@
 package graft.index
 
-import graft.functions.VectorF
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** PQ (product-quantization) ANN index: the vector space is split into
   * `m` subspaces, each subspace gets its own small codebook (`ksub`
@@ -14,8 +14,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * Quantization for Nearest Neighbor Search", TPAMI 2011): per query, one
   * `m x ksub` table of exact subspace distances is computed once, and
   * every candidate's approximate distance is `m` table lookups over its
-  * codes (the codegen'd [[graft.functions.AdcLookup]]) — no float vector
-  * is read at search time. The reference stores raw float vectors
+  * codes — no float vector is read at search time. The reference stores raw float vectors
   * (radient/tasks/sinks/local/gann.py:196-216) — PQ is the compression
   * tier its GANN/IVF probes would sit on top of at scale.
   */
@@ -24,14 +23,27 @@ object PqIndex extends Quantized.Family {
   /** Subspace codes; the query becomes its flat ADC table. */
   private[index] final case class Codec(m: Int, dsub: Int, ksub: Int,
       codebooks: Array[Array[Array[Double]]])
-      extends Quantized.Codec[Seq[Int], Seq[Double]] {
+      extends Quantized.Codec[Seq[Int], Array[Int], Array[Double]] {
     def codeCol = "codes"
-    def queryCol = "dt"
     def encode(v: IndexedSeq[Double]): Seq[Int] =
       encodeOne(v, codebooks, m, dsub).toSeq
-    def query(v: IndexedSeq[Double]): Seq[Double] =
-      distTable(v, codebooks, m, dsub, ksub).toSeq
-    def dist(code: Column, q: Column): Column = VectorF.adc(code, q, ksub)
+    def query(v: IndexedSeq[Double]): Array[Double] =
+      distTable(v, codebooks, m, dsub, ksub)
+    def read(row: InternalRow, ord: Int): Array[Int] = {
+      val a = Search.arrayAt(row, ord)
+      if (a == null) null else a.toIntArray()
+    }
+    /** ADC: Σᵢ dt[i·ksub + codeᵢ], ascending subspaces; NaN on an
+      * out-of-range code. */
+    def dist(code: Array[Int], dt: Array[Double]): Double = {
+      var s = 0.0; var i = 0
+      while (i < code.length) {
+        val idx = i * ksub + code(i)
+        if (idx < 0 || idx >= dt.length) return Double.NaN
+        s += dt(idx); i += 1
+      }
+      s
+    }
     def write(spark: SparkSession, path: String): Unit = {
       import spark.implicits._
       val rows = for {

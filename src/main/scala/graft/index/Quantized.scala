@@ -1,5 +1,6 @@
 package graft.index
 
+import scala.collection.immutable.ArraySeq
 import scala.reflect.runtime.universe.TypeTag
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -26,15 +27,15 @@ import org.apache.spark.sql.functions._
   * partition `codes/` by `cluster`, so a probe reads nprobe of the
   * posting lists.
   *
-  * Search prepares each query once (SQ: the raw vector; BQ: its sign
-  * code; PQ: its ADC distance table — per probed cluster, from the
-  * query's residual, on the IVF kinds), ranks by the codec's codegen'd
-  * distance kernel ([[graft.functions.SqDistance]],
-  * [[graft.functions.HammingWords]], [[graft.functions.AdcLookup]])
-  * through the bounded-heap TopKAgg, and `searchRerank` re-ranks the
-  * shortlist exactly against the raw vectors by id equi-join
-  * ([[Search.rerank]]). The IVF probe and assign-on-encode are the
-  * [[Coarse]] scans. Fits are driver-side over a deterministic spread
+  * Search prepares each query once on the driver (SQ: the raw vector;
+  * BQ: its sign code; PQ: its ADC distance table — per probed cluster,
+  * from the query's residual, on the IVF kinds), then scores only the
+  * probed posting lists in one Spark job with the codec's scalar kernel
+  * and one bounded heap per query per partition, and merges the heaps
+  * on the driver into a local frame ([[Search.scan]]); `searchRerank`
+  * re-ranks that shortlist exactly against the raw vectors by id
+  * equi-join ([[Search.rerank]]). The IVF probe and assign-on-encode
+  * are the [[Coarse]] scans. Fits are driver-side over a deterministic spread
   * sample ([[IvfIndex.hashSample]]) and the full table is touched by one
   * distributed encode pass; inserts encode against the FROZEN fit. */
 object Quantized {
@@ -42,16 +43,13 @@ object Quantized {
   type Centroids = Array[(Int, Array[Double])]
 
   /** A fine quantizer: its fitted params, the per-vector encode into a
-    * `C` code, the query-side prep into a `Q`, and the distance kernel
-    * between the two columns. Broadcast to executors whole. */
-  private[index] abstract class Codec[C, Q] extends Serializable {
+    * `C` code, the driver-side query prep into a `Q`, and the scalar
+    * distance kernel between a stored code (read as a `K`) and a `Q`
+    * ([[Search.Kernel]]). Shipped to executors whole. */
+  private[index] abstract class Codec[C, K, Q] extends Search.Kernel[K, Q] {
     def codeCol: String
-    def queryCol: String
     def encode(v: IndexedSeq[Double]): C
     def query(v: IndexedSeq[Double]): Q
-    /** The query side is the vector itself: flat search needs no UDF. */
-    def rawQuery: Boolean = false
-    def dist(code: Column, q: Column): Column
     /** Persist the fitted params under `path`. */
     def write(spark: SparkSession, path: String): Unit
   }
@@ -61,70 +59,40 @@ object Quantized {
     df.coalesce(1).write.mode("overwrite").parquet(path)
 
   private def residual(v: Array[Double], cent: Array[Double]): IndexedSeq[Double] =
-    scala.collection.immutable.ArraySeq.unsafeWrapArray(
-      Array.tabulate(v.length)(i => v(i) - cent(i)))
+    ArraySeq.unsafeWrapArray(Array.tabulate(v.length)(i => v(i) - cent(i)))
 
-  private def encodeUdf[C: TypeTag, Q](spark: SparkSession, codec: Codec[C, Q]) = {
+  private def encodeUdf[C: TypeTag, K, Q](spark: SparkSession,
+      codec: Codec[C, K, Q]) = {
     val bc = spark.sparkContext.broadcast(codec)
     udf { (v: Seq[Double]) => bc.value.encode(v.toIndexedSeq) }
   }
 
   /** Search, encode and persistence of one model, for either layout. */
-  private[index] final class Core[C, Q](codec: Codec[C, Q],
+  private[index] final class Core[C: TypeTag, K, Q](codec: Codec[C, K, Q],
       coarse: Option[Centroids], codes: DataFrame, idCol: String,
-      metric: String)(implicit ct: TypeTag[C], qt: TypeTag[Q]) {
-
-    /** (qid, q) per query, or (qid, cluster, q) per probed cluster with
-      * q prepared from the query's residual — Coarse.nearestK
-      * partial-selects the probes (no full sort of kCoarse). */
-    private def prepared(queries: DataFrame, qid: String, qvec: String,
-        nprobe: Int): DataFrame = {
-      val sc = queries.sparkSession.sparkContext
-      val q = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-        qvec, metric)
-      coarse match {
-        case None if codec.rawQuery =>
-          q.select(col(qid), col(qvec).as(codec.queryCol))
-        case None =>
-          val bc = sc.broadcast(codec)
-          val prepUdf = udf { (v: Seq[Double]) => bc.value.query(v.toIndexedSeq) }
-          q.select(col(qid), prepUdf(col(qvec)).as(codec.queryCol))
-        case Some(cents) =>
-          val bc = sc.broadcast((cents, codec))
-          val np = nprobe
-          val probeUdf = udf { (v: Seq[Double]) =>
-            val arr = v.toArray
-            val (cs, cd) = bc.value
-            Coarse.nearestK(arr, cs, np).map { pos =>
-              val (cid, cent) = cs(pos)
-              (cid, cd.query(residual(arr, cent)))
-            }.toSeq
-          }
-          q.select(col(qid), explode(probeUdf(col(qvec))).as("p"))
-            .select(col(qid), col("p._1").as("cluster"),
-              col("p._2").as(codec.queryCol))
-      }
-    }
+      metric: String) {
 
     /** Top-k by the codec distance over the codes (coarse stage), only
-      * the probed clusters' posting lists on the IVF layout. `allowedIds`
-      * is the pre-filter contract ([[Search.allowedOnly]]): the semi join
-      * composes with the cluster pruning. */
+      * the probed clusters' posting lists on the IVF layout, in one Spark
+      * job ([[Search.scan]]). Each query is prepared once per probed
+      * cluster — from its residual on the IVF layout, where
+      * Coarse.nearestK partial-selects the probes. `allowedIds` is the
+      * pre-filter contract ([[Search.allowedOnly]]): the semi join
+      * composes with the cluster pruning. Runs when called; the result
+      * is a local frame. */
     def search(queries: DataFrame, qid: String, qvec: String, k: Int,
         nprobe: Int, excludeSelf: Boolean,
         allowedIds: Option[DataFrame]): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val q = prepared(queries, qid, qvec, nprobe)
-      val table = Search.allowedOnly(codes, idCol, allowedIds)
-      val cand =
-        if (coarse.isEmpty) table.crossJoin(broadcast(q))
-        else q.join(table, Seq("cluster"))
-      Search.topKOut(
-        Search.selfFilter(cand, idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            codec.dist(col(codec.codeCol), col(codec.queryCol)).as("dist")),
-        qid, idCol, idType, k)
+      Search.scan(queries, qid, qvec, k, metric, excludeSelf, codes, idCol,
+          col(codec.codeCol), coarse.isDefined, allowedIds, codec) { v =>
+        coarse match {
+          case None => Seq((0, codec.query(ArraySeq.unsafeWrapArray(v))))
+          case Some(cents) => Coarse.nearestK(v, cents, nprobe).toSeq.map { p =>
+            val (cid, cent) = cents(p)
+            (cid, codec.query(residual(v, cent)))
+          }
+        }
+      }
     }
 
     /** Shortlist of `shortlist` by [[search]], then exact rerank against
@@ -193,7 +161,7 @@ object Quantized {
   trait Indexed[M] {
     def codes: DataFrame
     def appends: Int
-    private[index] def core: Core[_, _]
+    private[index] def core: Core[_, _, _]
     private[index] def withCodes(codes: DataFrame, appends: Int): M
   }
 
@@ -280,7 +248,7 @@ object Quantized {
 
     /** Every row's code in one distributed pass; cached (tracked):
       * build-once / search-many, every search scans the codes. */
-    def codes[C: TypeTag, Q](codec: Codec[C, Q]): DataFrame =
+    def codes[C: TypeTag, K, Q](codec: Codec[C, K, Q]): DataFrame =
       graft.core.Caches.cached(rows.select(
         keys.map(col) :+ encodeUdf(rows.sparkSession, codec).apply(v).as(codec.codeCol): _*))
   }

@@ -1,15 +1,19 @@
 package graft.index
 
-import graft.functions.{TopKAgg, VectorF}
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+import graft.functions.{TopKAgg, TopKBuffer, VectorF}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types._
 
 /** Shared search-side plumbing for the eight index kinds
   * ([[IndexKinds]]: GANN, IVF, and the [[Quantized]] SQ / PQ / BQ
-  * codecs flat and over IVF): the bounded-heap top-k
-  * output shape, the exact-rerank stage, the optional self-exclusion
+  * codecs flat and over IVF): the one-pass probed scan of IVF and the
+  * quantized kinds ([[scan]]), GANN's bounded-heap top-k output shape
+  * ([[topKOut]]), the exact-rerank stage, the optional self-exclusion
   * filter, and the l2/cosine metric prep.
   *
   * Metric semantics (reference: radient's GKMeans supports
@@ -40,6 +44,18 @@ private[index] object Search {
         VectorF.normalize(col(vecCol).cast("array<double>")))
     else df
 
+  /** [[prepVectors]] of one driver-side vector, with the same arithmetic
+    * as `VectorF.normalize`: a sequential fold of squares, its square
+    * root, each element divided by it, and the zero vector kept zero. */
+  def prepVector(v: Array[Double], metric: String): Array[Double] =
+    if (metric != "cosine") v
+    else {
+      var s = 0.0; var i = 0
+      while (i < v.length) { s = s + v(i) * v(i); i += 1 }
+      val n = math.sqrt(s)
+      v.map(x => if (n == 0.0) 0.0 else x / n)
+    }
+
   /** PRE-FILTER semantics for filtered ANN search — the reference's
     * only search kwarg (radient/tasks/sinks/milvus.py:122-127) extended
     * to every index tier (round 14; IVF and GANN grew it in rounds
@@ -67,7 +83,8 @@ private[index] object Search {
   /** (qid, idCol, dist) candidates → per-query top-k rows
     * (qid, idCol, dist, rnk): bounded-heap TopKAgg (≤k pairs per
     * partition per query reach the final shuffle), posexplode, id cast
-    * back to its input type. */
+    * back to its input type. GANN's search ranks through it; IVF and the
+    * quantized kinds rank inside [[scan]] with the same heap order. */
   def topKOut(cand: DataFrame, qid: String, idCol: String,
       idType: DataType, k: Int): DataFrame =
     cand.groupBy(col(qid))
@@ -75,6 +92,127 @@ private[index] object Search {
       .select(col(qid), posexplode(col("top")).as(Seq("pos", "s")))
       .select(col(qid), col("s.id").cast(idType).as(idCol),
         col("s.dist").as("dist"), (col("pos") + 1).cast("int").as("rnk"))
+
+  /** The scalar distance kernel of a [[scan]]: `read` loads one row's
+    * stored code (null when the code or any element of it is null: the
+    * row is not scored), and `dist` scores it against one prepared query.
+    * A NaN distance means none (a length mismatch, an out-of-range
+    * code): the pair is skipped, as TopKAgg skips a null distance. */
+  trait Kernel[K, Q] extends Serializable {
+    def read(row: InternalRow, ord: Int): K
+    def dist(code: K, q: Q): Double
+  }
+
+  /** The array at `ord` of a row, or null when it or any element is null. */
+  def arrayAt(row: InternalRow, ord: Int): ArrayData =
+    if (row.isNullAt(ord)) null
+    else {
+      val a = row.getArray(ord)
+      var i = 0
+      while (i < a.numElements() && !a.isNullAt(i)) i += 1
+      if (i < a.numElements()) null else a
+    }
+
+  /** One prepared query of a probed posting list: its heap slot, the id
+    * `excludeSelf` drops (its qid) and its kernel-side form. */
+  private final case class Probe[Q](slot: Int, self: Long, q: Q)
+
+  /** Top-k search of IVF and the quantized kinds in one Spark job.
+    *
+    *  1. Driver: collect the query batch, prep each vector
+    *     ([[prepVector]]) and `probe` it into (cluster, prepared query)
+    *     pairs — one pair with cluster 0 on a flat layout.
+    *  1. One job over the probed posting lists only (a `cluster IN (…)`
+    *     filter on the `clustered` layout, which prunes the `cluster=`
+    *     directories of a saved index), after [[allowedOnly]]: every row
+    *     is scored by `kernel` against the queries that probe its cluster,
+    *     `excludeSelf` is applied in the loop, and each query keeps one
+    *     bounded [[graft.functions.TopKBuffer]] per partition.
+    *  1. Driver: merge the partitions' heaps per query into a local frame
+    *     of (qid, idCol cast back to its type, dist, rnk).
+    *
+    * Queries sharing a qid share a heap, as `groupBy(qid)` merged them. A
+    * query whose vector is null or holds a null element gets no rows;
+    * under `excludeSelf` the qid must be integral ([[selfFilter]]) and a
+    * null qid gets no rows. The search runs when called, so the query
+    * batch and its k·|queries| result rows must fit on the driver; a
+    * streaming query frame is rejected (serve a stream through
+    * `foreachBatch`). */
+  def scan[K, Q](queries: DataFrame, qid: String, qvec: String, k: Int,
+      metric: String, excludeSelf: Boolean, table: DataFrame, idCol: String,
+      code: Column, clustered: Boolean, allowedIds: Option[DataFrame],
+      kernel: Kernel[K, Q])(probe: Array[Double] => Seq[(Int, Q)]): DataFrame = {
+    require(!queries.isStreaming,
+      "index search takes a batch query frame; serve a stream through foreachBatch")
+    val idType = GannIndex.requireIntegralId(table, idCol)
+    if (excludeSelf) GannIndex.requireIntegralId(queries, qid)
+    val slots = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
+    val probed = queries.select(col(qid), col(qvec).cast("array<double>"))
+      .collect().toSeq.flatMap { r =>
+        val v = if (r.isNullAt(1)) Seq(null) else r.getSeq[Any](1)
+        if (v.contains(null) || (excludeSelf && r.isNullAt(0))) Nil
+        else {
+          val slot = slots.getOrElseUpdate(r.get(0), slots.size)
+          val self = if (excludeSelf) r.getAs[Number](0).longValue else 0L
+          probe(prepVector(v.map(_.asInstanceOf[Double]).toArray, metric))
+            .map { case (c, q) => c -> Probe(slot, self, q) }
+        }
+      }
+    val heaps = Array.fill(slots.size)(new TopKBuffer(k))
+    if (probed.nonEmpty) {
+      val byCluster = probed.groupMap(_._1)(_._2).map { case (c, ps) => c -> ps.toArray }
+      val nSlots = slots.size
+      val rows = allowedOnly(
+        if (clustered) table.filter(col("cluster").isin(byCluster.keys.toSeq: _*))
+        else table, idCol, allowedIds)
+        .select(col(idCol).cast("long"), code,
+          if (clustered) col("cluster") else lit(0))
+      rows.queryExecution.toRdd.mapPartitions { it =>
+        val part = new Array[TopKBuffer](nSlots)
+        it.foreach { row =>
+          val ps = if (row.isNullAt(0) || row.isNullAt(2)) null
+            else byCluster.getOrElse(row.getInt(2), null)
+          val c = if (ps == null) null.asInstanceOf[K] else kernel.read(row, 1)
+          if (c != null) {
+            val id = row.getLong(0)
+            var i = 0
+            while (i < ps.length) {
+              val p = ps(i)
+              if (!(excludeSelf && p.self == id)) {
+                val d = kernel.dist(c, p.q)
+                if (!d.isNaN) {
+                  if (part(p.slot) == null) part(p.slot) = new TopKBuffer(k)
+                  part(p.slot).insert(d, id)
+                }
+              }
+              i += 1
+            }
+          }
+        }
+        part.iterator.zipWithIndex.collect { case (h, s) if h != null =>
+          (s, h.dists.take(h.size), h.ids.take(h.size))
+        }
+      }.collect().foreach { case (s, ds, ids) =>
+        var i = 0
+        while (i < ds.length) { heaps(s).insert(ds(i), ids(i)); i += 1 }
+      }
+    }
+    val typed: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    val out = for {
+      (q, s) <- slots.toSeq
+      ((d, id), r) <- heaps(s).sorted.toSeq.zipWithIndex
+    } yield Row(q, typed(id), d, r + 1)
+    val qf = queries.schema(qid)
+    queries.sparkSession.createDataFrame(out.asJava, StructType(Seq(
+      StructField(qid, qf.dataType, qf.nullable),
+      StructField(idCol, idType), StructField("dist", DoubleType),
+      StructField("rnk", IntegerType, nullable = false))))
+  }
 
   /** Exact re-rank of a (qid, idCol) shortlist against the raw vectors
     * — the second stage of every compressed search (ADC/Hamming

@@ -1,7 +1,7 @@
 package graft.index
 
-import graft.functions.VectorF
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 
 /** SQ8 (8-bit scalar quantization) ANN index — the 4x rung of the
   * compression tier ([[Quantized]] has the tier table): every vector is
@@ -15,10 +15,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * `scale = (max − min)/255`. No codebook training and no subspaces —
   * encode/decode are per-dimension affine maps, and the quantization
   * error is bounded by scale/2 per dimension, giving near-exact
-  * shortlists. Search ranks by the ASYMMETRIC distance (raw query
-  * against the dequantized code — the codegen'd
-  * [[graft.functions.SqDistance]], whose grid rides into the generated
-  * code as a reference object, not per-row data).
+  * shortlists. Search ranks by the ASYMMETRIC distance: the raw query
+  * against the code dequantized on the grid, which ships with the codec,
+  * never per row.
   */
 object SqIndex extends Quantized.Family {
 
@@ -37,14 +36,24 @@ object SqIndex extends Quantized.Family {
 
   /** Byte codes on the (min, scale) grid; the query stays raw. */
   private[index] final case class Codec(mins: Array[Double],
-      scales: Array[Double]) extends Quantized.Codec[Array[Byte], Seq[Double]] {
+      scales: Array[Double])
+      extends Quantized.Codec[Array[Byte], Array[Byte], Array[Double]] {
     def codeCol = "sig"
-    def queryCol = "qres"
     def encode(v: IndexedSeq[Double]): Array[Byte] = encodeOne(v, mins, scales)
-    def query(v: IndexedSeq[Double]): Seq[Double] = v
-    override def rawQuery = true
-    def dist(code: Column, q: Column): Column =
-      VectorF.sqDist(code, q, mins, scales)
+    def query(v: IndexedSeq[Double]): Array[Double] = v.toArray
+    def read(row: InternalRow, ord: Int): Array[Byte] =
+      if (row.isNullAt(ord)) null else row.getBinary(ord)
+    /** √Σᵢ (qᵢ − (minᵢ + (codeᵢ & 0xFF)·scaleᵢ))², a sequential fold. */
+    def dist(code: Array[Byte], q: Array[Double]): Double =
+      if (code.length != q.length || code.length != mins.length) Double.NaN
+      else {
+        var s = 0.0; var i = 0
+        while (i < code.length) {
+          val d = q(i) - (mins(i) + (code(i) & 0xFF) * scales(i))
+          s += d * d; i += 1
+        }
+        math.sqrt(s)
+      }
     def write(spark: SparkSession, path: String): Unit = {
       import spark.implicits._
       Quantized.writeTable(mins.toSeq.zip(scales.toSeq).zipWithIndex

@@ -117,8 +117,8 @@ object Ann {
   val q_ann_bq = annQ("q_ann_bq", "bq", shortlist = 800)
 
   /** IVF-BQ (cluster-pruned 1-bit residual codes): probe 7 of 8
-    * clusters, Hamming over the probed posting lists via the codegen
-    * HammingWords kernel, exact rerank — the binary sibling of IVF-PQ
+    * clusters, Hamming over the probed posting lists in the one-pass
+    * scan, exact rerank — the binary sibling of IVF-PQ
     * (recall/monotonicity/roundtrip/insert pinned in IvfBqSpec).
     * nprobe=7 + shortlist=800 (round 13 ratchet — the tier the r12
     * verdict left behind at 0.856): the measured sweep (SCALE.md;
@@ -163,21 +163,21 @@ object Ann {
     shortlist = 200, filtered = true)
 
   /** Filtered SQ8 search — the near-exact rung under the filter verb:
-    * allowed semi-join before the asymmetric SqDistance fold, same
+    * allowed semi-join before the asymmetric SQ8 distance, same
     * shortlist as [[q_ann_sq]], model shared via the memo. rows-only +
     * recall-gated vs the exact FILTERED brute force. */
   val q_ann_sq_filtered = annQ("q_ann_sq_filtered", "sq", shortlist = 30,
     filtered = true)
 
   /** SQ8 (8-bit scalar quantization, 4x compression): asymmetric-distance
-    * shortlist over the byte codes via the codegen SqDistance kernel,
+    * shortlist over the byte codes (the one-pass scan's SQ8 kernel),
     * exact rerank — the near-exact rung of the compression tier
     * (recall/monotonicity/roundtrip/insert pinned in SqSpec). */
   val q_ann_sq = annQ("q_ann_sq", "sq", shortlist = 30)
 
   /** IVF-SQ (cluster-pruned SQ8 residual codes — the Milvus IVF_SQ8 /
-    * FAISS IVFx,SQ8 production config): probe 5 of 8 clusters, codegen
-    * asymmetric SqDistance over the probed posting lists, exact rerank
+    * FAISS IVFx,SQ8 production config): probe 5 of 8 clusters,
+    * asymmetric SQ8 distance over the probed posting lists, exact rerank
     * (recall/monotonicity/roundtrip/insert pinned in IvfSqSpec).
     * nprobe=6 (round 12 ratchet): SQ8 ranks are near-exact (flat SQ
     * recall 1.0), so the curve tracks plain IVF — 0.78/0.85/0.93 at

@@ -535,15 +535,22 @@ object Corpus {
     * char-split s0, and per-round stages e/p/b/f/r/g/h/s — `b$k` holds
     * round k's winning pair, `s$k` every vocab word's symbol list AFTER
     * k merges (so `s$numMerges` IS the trained tokenizer applied to the
-    * vocabulary — [[q_bpe_encode]] consumes it directly). */
+    * vocabulary — [[q_bpe_encode]] consumes it directly).
+    *
+    * `v` and every `e$k`, `b$k` and `s$k` are referenced more than once
+    * downstream, so they are declared `AS MATERIALIZED`: DuckDB inlines a
+    * plain CTE at each reference, and through the chain that re-derives
+    * every earlier round per use (at sf0.001 on a 4-vCPU host,
+    * q_bpe_merges' SQL ran 260 s inlined and 0.2 s materialized, with
+    * the same rows). */
   private def bpeStagesSql(numMerges: Int): String = {
     val stages = (1 to numMerges).map { k =>
       val prev = if (k == 1) "s0" else s"s${k - 1}"
-      s"""e$k AS (SELECT w, n, unnest(syms) AS s, generate_subscripts(syms, 1) AS i FROM $prev),
+      s"""e$k AS MATERIALIZED (SELECT w, n, unnest(syms) AS s, generate_subscripts(syms, 1) AS i FROM $prev),
          |p$k AS (SELECT a, b, sum(n) AS cnt FROM (
          |    SELECT w, n, s AS a, lead(s) OVER (PARTITION BY w ORDER BY i) AS b FROM e$k)
          |  WHERE b IS NOT NULL GROUP BY a, b),
-         |b$k AS (SELECT a, b FROM p$k ORDER BY cnt DESC, a, b LIMIT 1),
+         |b$k AS MATERIALIZED (SELECT a, b FROM p$k ORDER BY cnt DESC, a, b LIMIT 1),
          |f$k AS (SELECT e.w, e.n, e.i, e.s,
          |    coalesce(e.s = b$k.a AND lead(e.s) OVER (PARTITION BY e.w ORDER BY e.i) = b$k.b, false) AS m
          |  FROM e$k e CROSS JOIN b$k),
@@ -553,11 +560,11 @@ object Corpus {
          |    coalesce(lag(sel) OVER (PARTITION BY w ORDER BY i), false) AS psel,
          |    lead(s) OVER (PARTITION BY w ORDER BY i) AS ns
          |  FROM g$k),
-         |s$k AS (SELECT w, any_value(n) AS n,
+         |s$k AS MATERIALIZED (SELECT w, any_value(n) AS n,
          |    list(CASE WHEN sel THEN s || ns ELSE s END ORDER BY i) AS syms
          |  FROM h$k WHERE NOT psel GROUP BY w)""".stripMargin
     }
-    s"""v AS (SELECT w, count(*) AS n FROM (SELECT unnest(${Sql.toks()}) AS w FROM documents) GROUP BY w),
+    s"""v AS MATERIALIZED (SELECT w, count(*) AS n FROM (SELECT unnest(${Sql.toks()}) AS w FROM documents) GROUP BY w),
        |s0 AS (SELECT w, n, string_split(w, '') AS syms FROM v),
        |${stages.mkString(",\n")}""".stripMargin
   }

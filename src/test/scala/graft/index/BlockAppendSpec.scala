@@ -1,6 +1,9 @@
 package graft.index
 
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
+import scala.jdk.CollectionConverters._
 import graft.TestSpark
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -40,6 +43,57 @@ class BlockAppendSpec extends AnyFunSuite {
 
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Spark jobs `body` starts. A listener counts the job starts of a job
+    * group of its own; a marker job run after the body in the same group
+    * ends the count, since the listener bus delivers events in order. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime}"
+    val started = new LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties)
+          .filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => started.put(String.valueOf(p.getProperty("spark.job.description"))))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "search")
+    try {
+      body
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      Iterator.continually(started.poll(60, TimeUnit.SECONDS))
+        .map { d => assert(d != null, "the marker job never reached the listener"); d }
+        .takeWhile(_ != "marker").size
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("IVF and IVF-SQ: a loaded index serves a local query batch in one job") {
+    def local(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+    val q = local(queries)
+    val allowed = local(base.filter(col("vec_id") % 3 === 0).select(col("vec_id")))
+    val dirIvf = tmp("graft_jobs_ivf")
+    IvfIndex.save(IvfIndex.build(base, "vec_id", "embedding", k = 4), dirIvf)
+    val dirSq = tmp("graft_jobs_ivfsq")
+    IvfSq.save(IvfSq.build(base, "vec_id", "embedding", kCoarse = 4), dirSq)
+    val ivf = IvfIndex.load(spark, dirIvf, "vec_id", "embedding")
+    val sq = IvfSq.load(spark, dirSq, "vec_id")
+    val searches = Seq[Option[DataFrame] => DataFrame](
+      a => ivf.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a),
+      a => sq.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a))
+    for (search <- searches) {
+      var n = 0
+      assert(jobsOf { n = search(None).collect().length } === 1)
+      assert(n === 50)
+      assert(jobsOf { n = search(Some(allowed)).collect().length } <= 2)
+      assert(n === 50)
+    }
+  }
 
   test("IVF: appendToSaved leaves existing blocks untouched, search == in-memory insert") {
     val dir = tmp("graft_blk_ivf")

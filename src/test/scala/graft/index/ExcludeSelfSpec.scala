@@ -43,6 +43,19 @@ class ExcludeSelfSpec extends AnyFunSuite {
       m.search(external, "qid", "qv", k = 5, nprobe = 4))
   }
 
+  test("IVF and IVF-SQ search reject a streaming query frame") {
+    val stream = spark.readStream.format("rate").load()
+      .select(col("value").as("qid"), array(lit(0.0)).as("qv"))
+    val ivf = IvfIndex.build(emb, "vec_id", "embedding", k = 4)
+    val sq = IvfSq.build(emb, "vec_id", "embedding", kCoarse = 4)
+    for (search <- Seq[() => DataFrame](
+        () => ivf.search(stream, "qid", "qv", k = 5, nprobe = 2),
+        () => sq.search(stream, "qid", "qv", k = 5, nprobe = 2))) {
+      val e = intercept[IllegalArgumentException](search())
+      assert(e.getMessage.contains("foreachBatch"))
+    }
+  }
+
   test("GANN excludeSelf knob") {
     val m = GannIndex.build(emb, "vec_id", "embedding", leafSize = 64)
     checkBoth(

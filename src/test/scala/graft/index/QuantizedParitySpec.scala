@@ -6,12 +6,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the six quantized indexes (BQ, SQ, PQ, each flat and over the
-  * IVF coarse layer) to fixed outputs on a seeded 600×16 table, for both
-  * metrics. Per (kind, metric) it digests the sorted code rows, the
-  * unfiltered and filtered `search` output, the `searchRerank` output
-  * and the code rows `appendToSaved` writes for a 50-row batch, and it
-  * compares the saved directory's layout (param dirs, `codes`, and the
-  * `cluster=` partitions of the IVF kinds) literally. Any change to
+  * IVF coarse layer) and IVF-flat ([[IvfIndex]]) to fixed outputs on a
+  * seeded 600×16 table, for both metrics. Per (kind, metric) it digests
+  * the sorted code rows, the unfiltered and filtered `search` output,
+  * the `searchRerank` output (IVF-flat has none) and the code rows
+  * `appendToSaved` writes for a 50-row batch, and it compares the saved
+  * directory's layout (param dirs, the code dir — `assign` on IVF-flat —
+  * and the `cluster=` partitions of the IVF kinds) literally. Any change to
   * fitting, encoding, ranking or persistence moves a digest; a refactor
   * of the index code must leave every one of them in place. */
 class QuantizedParitySpec extends AnyFunSuite {
@@ -43,8 +44,11 @@ class QuantizedParitySpec extends AnyFunSuite {
 
   /** What the spec exercises of one built model. */
   private final class Ops(val codes: DataFrame,
-      val search: Option[DataFrame] => DataFrame, val rerank: DataFrame,
-      val save: String => Unit, val append: (String, DataFrame) => Unit)
+      val search: Option[DataFrame] => DataFrame, rerank: => DataFrame,
+      val save: String => Unit, val append: (String, DataFrame) => Unit,
+      val codesDir: String = "codes", val reranks: Boolean = true) {
+    def rerankOut: Option[DataFrame] = if (reranks) Some(rerank) else None
+  }
 
   private val kinds: Seq[(String, String => Ops)] = Seq(
     "bq" -> { metric =>
@@ -95,10 +99,20 @@ class QuantizedParitySpec extends AnyFunSuite {
         m.searchRerank(queries, "qid", "qv", K, nprobe = NProbe,
           shortlist = Shortlist, vectors = base, vecCol = "embedding"),
         IvfPq.save(m, _), IvfPq.appendToSaved(m, _, _, "embedding"))
+    },
+    "ivf" -> { metric =>
+      val m = IvfIndex.build(base, "vec_id", "embedding", k = 4,
+        metric = metric)
+      new Ops(m.assign,
+        a => m.search(queries, "qid", "qv", K, NProbe, allowedIds = a),
+        sys.error("IVF-flat has no searchRerank"),
+        IvfIndex.save(m, _), IvfIndex.appendToSaved(m, _, _),
+        codesDir = "assign", reranks = false)
     })
 
-  /** (codes, search, filtered search, rerank, appended codes) digests and
-    * the saved layout, per kind/metric. */
+  /** (codes, search, filtered search, rerank, appended codes) digests —
+    * no rerank digest for IVF-flat — and the saved layout, per
+    * kind/metric. */
   private val expected: Map[String, (Seq[String], String)] = Map(
     "bq/l2" -> (Seq("7dbccb99ac1816c9", "50906d68735e074d", "909bf9f01aaadf16",
       "c3ebbfa677bd59e9", "6833927635d33401"),
@@ -135,7 +149,13 @@ class QuantizedParitySpec extends AnyFunSuite {
       "centroids,codebooks,codes,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
     "ivfpq/cosine" -> (Seq("ea75a02230f26fbc", "8fc1759a6376d9c0", "64ccdf7be5a180cf",
       "fe2fae8201b03c8d", "0b3d41bd8dc14646"),
-      "centroids,codebooks,codes,meta|cluster=0,cluster=1,cluster=2,cluster=3"))
+      "centroids,codebooks,codes,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
+    "ivf/l2" -> (Seq("43f9b8e6f55eb834", "c96959047a8389eb", "7177fd0754585fc8",
+      "3354f0a874fc5f18"),
+      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
+    "ivf/cosine" -> (Seq("3b00b5894e4bf41c", "9a98c79832fd4675", "f5624aab56941d50",
+      "e7897bfb52e494a6"),
+      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"))
 
   private def render(v: Any): String = v match {
     case null => "null"
@@ -156,11 +176,12 @@ class QuantizedParitySpec extends AnyFunSuite {
     md.digest().take(8).map(x => f"${x & 0xff}%02x").mkString
   }
 
-  /** Top-level dirs of a saved index, then the partition dirs of `codes`. */
-  private def layout(dir: String): String = {
+  /** Top-level dirs of a saved index, then the partition dirs of its
+    * code dir. */
+  private def layout(dir: String, codesDir: String): String = {
     def dirs(d: String) = Option(new java.io.File(d).listFiles()).toSeq
       .flatten.filter(_.isDirectory).map(_.getName).sorted
-    dirs(dir).mkString(",") + "|" + dirs(s"$dir/codes").mkString(",")
+    dirs(dir).mkString(",") + "|" + dirs(s"$dir/$codesDir").mkString(",")
   }
 
   for ((kind, build) <- kinds; metric <- Seq("l2", "cosine"))
@@ -170,11 +191,11 @@ class QuantizedParitySpec extends AnyFunSuite {
         .createTempDirectory(s"graft_parity_$kind").toString
       ops.save(dir)
       ops.append(dir, batch)
-      val appended = spark.read.parquet(s"$dir/codes")
+      val appended = spark.read.parquet(s"$dir/${ops.codesDir}")
         .filter(col("vec_id") >= 600)
       val got = (Seq(digest(ops.codes), digest(ops.search(None)),
-        digest(ops.search(Some(allowed))), digest(ops.rerank),
-        digest(appended)), layout(dir))
+        digest(ops.search(Some(allowed)))) ++ ops.rerankOut.map(digest) :+
+        digest(appended), layout(dir, ops.codesDir))
       assert(got === expected(s"$kind/$metric"))
     }
 }
