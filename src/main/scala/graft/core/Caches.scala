@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped registry of every DataFrame the engine pins with
   * `.cache()` outside a locally-unpersisted scope (dedup shingle/signature
-  * tables, LSH hash tables, index leaf assignments, workflow stage
-  * caches), plus eviction hooks for memoized index models.
+  * tables, LSH hash tables, index posting and code tables, workflow
+  * stage caches), plus eviction hooks for memoized index models.
   *
   * Why not just `spark.catalog.clearCache()`: that drops the storage but
-  * leaves memoized [[graft.index.GannIndex.Model]]/[[graft.index.IvfIndex.Model]]
-  * entries pointing at now-uncached assignment frames — the next search
-  * silently recomputes the assignment per probe instead of rebuilding the
-  * index once. [[clear]] releases the storage AND runs the owners'
+  * leaves memoized index models ([[graft.index.GannIndex.Model]], and the
+  * [[graft.index.Quantized]] core's models, IVF-flat's included)
+  * pointing at now-uncached posting or code frames — the next search
+  * silently recomputes the encode pass per probe instead of rebuilding
+  * the index once. [[clear]] releases the storage AND runs the owners'
   * eviction hooks, so the next call rebuilds into a fresh cache.
   *
   * A one-shot job never needs this (executors die with the session — the

@@ -3,8 +3,9 @@ package graft.index
 import org.apache.spark.sql.DataFrame
 
 /** Append-with-compaction for every in-memory index insert path
-  * ([[GannIndex.insert]], [[IvfIndex.insert]], and
-  * [[Quantized.Family.insert]] for the six quantized indexes).
+  * ([[GannIndex.insert]], and the [[Quantized]] core's insert behind
+  * [[IvfIndex.insert]] and [[Quantized.Family.insert]] for the six
+  * compressed indexes).
   *
   * A continuous-ingest loop (the StreamingIngestSpec shape) appends a
   * batch per micro-batch; a naive `cached(old.union(new))` grows BOTH the

@@ -4,7 +4,6 @@ import graft.functions.{TextF, TopKAgg, VectorF}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** Distributed GANN-equivalent: a FOREST of hyperplane spill trees built as
   * iterative DataFrame jobs, searched via a broadcast forest probe + (tree,
@@ -185,7 +184,7 @@ object GannIndex {
     def search(queries: DataFrame, qid: String, qvec: String, k: Int,
         excludeSelf: Boolean = true, beam: Int = 1,
         allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = requireIntegralId(assign, idCol)
+      val idType = Search.requireIntegralId(assign, idCol)
       val spark = queries.sparkSession
       val bc = spark.sparkContext.broadcast(trees)
       val bm = beam
@@ -208,17 +207,6 @@ object GannIndex {
           .agg(min(col("dist")).as("dist")),
         qid, idCol, idType, k)
     }
-  }
-
-  /** TopKAgg carries ids as long — reject id columns that would silently
-    * null out under the cast, and hand back the type to restore on
-    * output. Shared with IvfIndex. */
-  private[index] def requireIntegralId(assign: DataFrame, idCol: String): DataType = {
-    val t = assign.schema(idCol).dataType
-    require(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains(t),
-      s"search requires an integral id column; '$idCol' is ${t.simpleString}. " +
-        "Join a dense_rank surrogate key first for string/decimal ids.")
-    t
   }
 
   private def dotd(a: Array[Double], b: Array[Double]): Double = {

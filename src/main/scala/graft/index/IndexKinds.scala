@@ -35,7 +35,7 @@ object IndexKinds {
 
   private def quantized(m: Quantized.Indexed[_]): Handle = new Handle {
     private val c = m.core
-    def save(path: String): String = { c.save(path); "codes" }
+    def save(path: String): String = { c.save(path); c.codesDir }
     def search(queries: DataFrame, qid: String, qvec: String, k: Int,
         nprobe: Int, allowedIds: Option[DataFrame]): DataFrame =
       c.search(queries, qid, qvec, k, nprobe, excludeSelf = true, allowedIds)
@@ -44,13 +44,6 @@ object IndexKinds {
         vecCol: String, allowedIds: Option[DataFrame]): DataFrame =
       c.searchRerank(queries, qid, qvec, k, nprobe, shortlist, vectors,
         vecCol, excludeSelf = true, allowedIds)
-  }
-
-  private def ivf(m: IvfIndex.Model): Handle = new Handle {
-    def save(path: String): String = { IvfIndex.save(m, path); "assign" }
-    def search(queries: DataFrame, qid: String, qvec: String, k: Int,
-        nprobe: Int, allowedIds: Option[DataFrame]): DataFrame =
-      m.search(queries, qid, qvec, k, nprobe, allowedIds = allowedIds)
   }
 
   private def gann(m: GannIndex.Model): Handle = new Handle {
@@ -68,8 +61,8 @@ object IndexKinds {
         nTrees = int(p, "nTrees", 1))),
       (s, path, id, vec) => gann(GannIndex.load(s, path, id, vec))),
     "ivf" -> Kind(
-      (df, id, vec, p) => ivf(IvfIndex.build(df, id, vec, k = int(p, "k", 16))),
-      (s, path, id, vec) => ivf(IvfIndex.load(s, path, id, vec))),
+      (df, id, vec, p) => quantized(IvfIndex.build(df, id, vec, k = int(p, "k", 16))),
+      (s, path, id, vec) => quantized(IvfIndex.load(s, path, id, vec))),
     "pq" -> Kind(
       (df, id, vec, p) => quantized(PqIndex.build(df, id, vec,
         m = int(p, "m", 8), ksub = int(p, "ksub", 16))),

@@ -29,8 +29,8 @@ object IvfBq extends Quantized.Family {
       idCol: String, metric: String): Model =
     Model(Quantized.readCentroids(spark, path), codes, idCol, metric = metric)
 
-  /** Coarse-quantize ([[IvfIndex]]), then sign-encode the residuals in
-    * one distributed pass off the IVF assignment — no fit sample. */
+  /** Coarse-quantize ([[IvfIndex.fitCoarse]]), then sign-encode the
+    * residuals in one distributed pass — no fit sample. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, seed: Long = 42L, metric: String = "l2"): Model = {
     val f = Quantized.fit("IvfBq", df, idCol, vecCol, metric, 0,

@@ -3,7 +3,6 @@ package graft.index
 import graft.functions.VectorF
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) ANN index: seeded k-means++ coarse quantizer →
@@ -15,15 +14,23 @@ import org.apache.spark.sql.functions._
   * nprobe/k of the data; the centroid table is tiny, and the probe runs
   * on the driver. The brute-force path (VectorSearch.q_knn_*) is the
   * recall oracle.
-  */
+  *
+  * IVF-flat is the [[Quantized]] core over the identity [[Codec]]:
+  * search, encode, insert, append, save and load are the core's. This
+  * object keeps the coarse fit ([[fitCoarse]]) the whole IVF family
+  * shares, and the verbs of a stream-maintained IVF-flat index. */
 object IvfIndex {
 
   final case class Model(centroids: Array[(Int, Array[Double])],
       assign: DataFrame, idCol: String, vecCol: String,
-      appends: Int = 0, metric: String = "l2") {
+      appends: Int = 0, metric: String = "l2")
+      extends Quantized.Indexed[Model] {
 
-    def nearestClusters(v: Array[Double], nprobe: Int): Seq[Int] =
-      Coarse.nearestK(v, centroids, nprobe).map(centroids(_)._1).toSeq
+    def codes: DataFrame = assign
+    private[index] def core = new Quantized.Core(Codec(vecCol),
+      Some(centroids), assign, idCol, metric)
+    private[index] def withCodes(codes: DataFrame, appends: Int) =
+      copy(assign = codes, appends = appends)
 
     /** Batch search: probe the `nprobe` nearest clusters per query and
       * rank their posting lists exactly, by the L2Distance fold, into the
@@ -32,7 +39,7 @@ object IvfIndex {
       * frame, so the query batch and its k·|queries| rows must fit on the
       * driver; a streaming query frame is rejected. `idCol` must be
       * integral (ranked as a long, cast back on output — see
-      * GannIndex.requireIntegralId). `excludeSelf` follows the id-domain
+      * [[Search.requireIntegralId]]). `excludeSelf` follows the id-domain
       * convention in [[Search.selfFilter]].
       *
       * `allowedIds` is the filtered-search contract (the reference's
@@ -44,19 +51,21 @@ object IvfIndex {
       * top-k. The semi join may cost the search one more job. */
     def search(queries: DataFrame, qid: String, qvec: String,
         k: Int, nprobe: Int, excludeSelf: Boolean = true,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      Search.scan(queries, qid, qvec, k, metric, excludeSelf, assign, idCol,
-          col(vecCol).cast("array<double>"), clustered = true, allowedIds,
-          L2Kernel) { v =>
-        Coarse.nearestK(v, centroids, nprobe).toSeq.map(p => (centroids(p)._1, v))
-      }
-    }
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      core.search(queries, qid, qvec, k, nprobe, excludeSelf, allowedIds)
   }
 
-  /** √Σ(qᵢ − vᵢ)² over the raw vectors: the same sequential fold as the
-    * codegen'd [[graft.functions.L2Distance]], so distances are
-    * bit-identical to `VectorF.l2Dist`. */
-  private object L2Kernel extends Search.Kernel[Array[Double], Array[Double]] {
+  /** The identity codec: the code is the metric-prepped vector under its
+    * own column name (`codeCol` is the vector column) and input type;
+    * no params. The kernel is √Σ(qᵢ − vᵢ)² over the raw vectors, the
+    * same sequential fold as the codegen'd
+    * [[graft.functions.L2Distance]], so distances are bit-identical to
+    * `VectorF.l2Dist`. */
+  private[index] final case class Codec(codeCol: String)
+      extends Quantized.Codec[Seq[Double], Array[Double], Array[Double]] {
+    override def raw = true
+    def encode(v: IndexedSeq[Double]): Seq[Double] = v
+    def query(v: IndexedSeq[Double]): Array[Double] = v.toArray
     def read(row: InternalRow, ord: Int): Array[Double] = {
       val a = Search.arrayAt(row, ord)
       if (a == null) null else a.toDoubleArray()
@@ -68,6 +77,7 @@ object IvfIndex {
         while (i < v.length) { s = s + (q(i) - v(i)) * (q(i) - v(i)); i += 1 }
         math.sqrt(s)
       }
+    def write(spark: SparkSession, path: String): Unit = ()
   }
 
   /** Incremental insert — the streaming-ingest half of the reference's
@@ -77,28 +87,16 @@ object IvfIndex {
     * quantizer is fit statistics, not per-row state) and appended to the
     * posting lists. Cluster balance drifts only as far as the data
     * does; rebuild when it matters. */
-  def insert(model: Model, df: DataFrame): Model = {
-    val newAssign = encodeWith(model, df)
-    model.copy(
-      assign = Compact.append(model.assign, newAssign, model.appends),
-      appends = model.appends + 1)
-  }
-
-  /** Encode a batch against the FROZEN quantizer into assignment rows
-    * with the model's column layout — shared by the in-memory insert and
-    * the persisted block append ([[Blocks]]). */
-  private[index] def encodeWith(model: Model, df: DataFrame): DataFrame =
-    assignNearest(Search.prepVectors(df, model.vecCol, model.metric),
-        model.centroids, model.idCol, model.vecCol)
-      .select(model.assign.columns.map(col).toIndexedSeq: _*)
+  def insert(model: Model, df: DataFrame): Model =
+    model.inserted(df, model.vecCol)
 
   /** Deterministic, storage-order-INDEPENDENT fit sample: the first n
     * rows in xxhash64(id) order — a spread sample at TakeOrdered cost
     * (orderBy+limit never materializes a full sort), where a bare
     * `.limit(n)` takes whole partitions in storage order and trains the
     * quantizer on however the corpus happens to be laid out (e.g. one
-    * shard of a time-partitioned 100 TB table). Shared by the PQ / IVF-PQ
-    * / balanced-IVF fits; storage-order independence is pinned in
+    * shard of a time-partitioned 100 TB table). Shared by the coarse fit
+    * and every codec fit; storage-order independence is pinned in
     * FitSampleSpec. */
   private[index] def hashSample(df: DataFrame, idCol: String, vec: Column,
       n: Int): Array[Array[Double]] =
@@ -107,37 +105,13 @@ object IvfIndex {
       .limit(n)
       .collect().map(_.getSeq[Double](0).toArray)
 
-  /** One broadcast-probe pass: nearest frozen centroid per row. */
-  private def assignNearest(df: DataFrame, centroids: Array[(Int, Array[Double])],
-      idCol: String, vecCol: String): DataFrame = {
-    val bc = df.sparkSession.sparkContext.broadcast(centroids)
-    val assignUdf = udf { (v: Seq[Double]) =>
-      val cs = bc.value
-      cs(Coarse.nearest1(v.toArray, cs))._1
-    }
-    df.select(col(idCol), col(vecCol))
-      .withColumn("cluster", assignUdf(col(vecCol).cast("array<double>")))
-  }
-
   /** Persist centroids + cluster-partitioned posting lists (the IVF twin
     * of GannIndex.save — probes prune to nprobe partitions). */
-  def save(model: Model, path: String): Unit = {
-    val spark = model.assign.sparkSession
-    import spark.implicits._
-    model.centroids.toSeq.toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    Blocks.writeMeta(spark, path, model.metric)
-    model.assign.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$path/assign")
-  }
+  def save(model: Model, path: String): Unit = model.core.save(path)
 
-  def load(spark: SparkSession, path: String, idCol: String, vecCol: String): Model = {
-    val centroids = spark.read.parquet(s"$path/centroids").collect()
-      .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
-      .sortBy(_._1)
-    Model(centroids, spark.read.parquet(s"$path/assign"), idCol, vecCol,
-      metric = Blocks.readMetric(spark, path))
-  }
+  def load(spark: SparkSession, path: String, idCol: String, vecCol: String): Model =
+    Model(Quantized.readCentroids(spark, path), spark.read.parquet(s"$path/assign"),
+      idCol, vecCol, metric = Blocks.readMetric(spark, path))
 
   /** O(batch) persisted insert: encode the batch against the FROZEN
     * centroids and append it as new parquet files under the saved
@@ -147,8 +121,7 @@ object IvfIndex {
     * [[Compact.append]], whose per-insert materialization is O(corpus)).
     * Reload with [[load]] to search the grown index. */
   def appendToSaved(model: Model, path: String, df: DataFrame): Unit =
-    encodeWith(model, df).write.mode("append")
-      .partitionBy("cluster").parquet(s"$path/assign")
+    model.core.appendToSaved(path, df, model.vecCol)
 
   /** IDEMPOTENT streaming block append — the IVF twin of
     * [[GannIndex.appendStreamBlock]]: the batch lands under a
@@ -163,7 +136,7 @@ object IvfIndex {
     * them into the cluster-partitioned base. */
   def appendStreamBlock(model: Model, path: String, df: DataFrame,
       batchId: Long): Unit =
-    encodeWith(model, df).write.mode("overwrite")
+    model.core.encodeWith(df, model.vecCol).write.mode("overwrite")
       .parquet(s"$path/assign_stream/batch=$batchId")
 
   /** Serving view of a stream-maintained IVF index: base posting lists
@@ -232,20 +205,16 @@ object IvfIndex {
   def refitCompact(spark: SparkSession, path: String, idCol: String,
       vecCol: String, seed: Long = 42L, fitSample: Int = 100000,
       balance: Boolean = false): Model = {
-    import spark.implicits._
     val serving = loadServing(spark, path, idCol, vecCol)
     val k = math.max(serving.centroids.length, 1)
     val fresh = build(serving.assign.select(col(idCol), col(vecCol)),
       idCol, vecCol, k = k, seed = seed, fitSample = fitSample,
       balance = balance, metric = serving.metric)
     val staging = s"$path/refit_stage"
-    fresh.centroids.toSeq.toDF("cluster", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$staging/centroids")
     // materializes the re-encoded union INTO staging before anything
     // live is deleted — the read side of this write still points at the
     // live dirs
-    fresh.assign.write.mode("overwrite")
-      .partitionBy("cluster").parquet(s"$staging/assign")
+    save(fresh, staging)
     fresh.assign.unpersist(false)
     val conf = spark.sparkContext.hadoopConfiguration
     def pth(s: String) = new org.apache.hadoop.fs.Path(s)
@@ -416,13 +385,14 @@ object IvfIndex {
       Coarse.nearestK(sample(qi), cand, 11).filter(_ != qi).take(10))
   }
 
-  /** Train the coarse quantizer (seeded → deterministic) and assign every
-    * vector to its cluster. The quantizer fits DRIVER-SIDE on a bounded
-    * sample (`fitSample` rows; ≤100k × dim doubles ≈ tens of MB) — at
-    * 100 TB the centroids converge on a fraction of the data (the
-    * reference's VC-bound subsampling idea,
+  /** Train the coarse quantizer (seeded → deterministic) over the
+    * metric-prepped vectors: the `k` centroids of the IVF layer, id
+    * order, or none on an empty input. The quantizer fits DRIVER-SIDE on
+    * a bounded sample (`fitSample` rows; ≤100k × dim doubles ≈ tens of
+    * MB) — at 100 TB the centroids converge on a fraction of the data
+    * (the reference's VC-bound subsampling idea,
     * radient/tasks/sinks/local/_gkmeans.py:26-36); the full table is only
-    * touched by the single distributed assignment pass. The fit is
+    * touched by the core's single distributed encode pass. The fit is
     * 8 seeded multi-starts of k-means++ + 12 Lloyd rounds over the
     * hash-ordered sample (probe-recall-selected):
     * bit-deterministic AND partition-count independent, where the MLlib
@@ -433,74 +403,73 @@ object IvfIndex {
     * the exact re-rank inside probed clusters absorbs centroid noise).
     * With `balance = true` the quantizer is the GKMeans-parity
     * size-penalized fit ([[balancedLloyd]]) instead. */
+  private[index] def fitCoarse(df: DataFrame, idCol: String, vecCol: String,
+      k: Int, seed: Long, fitSample: Int = 100000, balance: Boolean = false,
+      sizeDecay: Double = 1.0): Quantized.Centroids = {
+    val sample = hashSample(df, idCol,
+      col(vecCol).cast("array<double>"), fitSample)
+    if (sample.isEmpty) return Array.empty
+    val cents =
+      if (balance) {
+        // multi-start over a few init seeds, keep the fit with the lowest
+        // quantization error (Σ min-d² over the sample — the part of the
+        // GKMeans objective that drives recall; balance is enforced
+        // inside each fit's greedy assignment). Deterministic,
+        // sample-order independent given the canonical hash-ordered
+        // sample, and the fit runs on a bounded driver-side sample so 3x
+        // cost is trivial.
+        Seq(seed, seed + 1, seed + 2).map { s0 =>
+          val c = balancedLloyd(sample, k, iters = 8, seed = s0,
+            sizeDecay = sizeDecay)
+          val err = sample.map { p =>
+            c.map { cc =>
+              var s = 0.0; var j = 0
+              while (j < p.length) { val d = p(j) - cc(j); s += d * d; j += 1 }
+              s
+            }.min
+          }.sum
+          (err, c)
+        }.minBy(_._1)._2
+      } else {
+        // Multi-start k-means++ + Lloyd, keep the fit with the HIGHEST
+        // probe-recall score ([[probeScore]] at 3k/8-width probes — the
+        // criterion the index is actually graded on; see its scaladoc
+        // for why quantization error picks wrong). The whole fit is
+        // driver-side arithmetic over the bounded sample, no
+        // per-iteration Spark job. Scoring the 8 starts cost 4-6 s when
+        // each start re-sorted its queries' candidates by recomputed
+        // distances; with the neighbour lists computed once it costs
+        // ~0.05 s, leaving the 8 k-means++ + Lloyd fits: ~0.2 s at 2000
+        // 64-d rows, 6-13 s at the 100k cap (k = 8-16; one core of a
+        // 4-vCPU VM). Seeded k-means++ init: plain random init dropped
+        // recall@10 below the 0.7 floor (0.635) on the embeddings table;
+        // D²-weighted seeding restores the spread. Ties broken by seed
+        // order → deterministic.
+        val selNp = math.max(1, (3 * k) / 8)
+        val neighbours = probeNeighbours(sample)
+        (seed to seed + 7).map { s0 =>
+          val c = lloyd(sample, kppInit(sample, k, s0), iters = 12)
+          (probeScore(sample, neighbours, c, selNp), c)
+        }.maxBy(_._1)._2
+      }
+    cents.zipWithIndex.map { case (c, i) => (i, c) }
+  }
+
+  /** IVF-flat: fit the coarse quantizer ([[fitCoarse]]), then encode
+    * every vector to its nearest centroid's posting list in the core's
+    * one pass — the posting table, cached (tracked), is the one frame
+    * the build caches (build-once / search-many; at 100 TB the same
+    * role is played by save()'s cluster-partitioned parquet layout). An
+    * empty input gives an empty, searchable model. */
   def build(df0: DataFrame, idCol: String, vecCol: String,
       k: Int = 16, seed: Long = 42L, fitSample: Int = 100000,
       balance: Boolean = false, sizeDecay: Double = 1.0,
       metric: String = "l2"): Model = {
     Search.checkMetric(metric)
     val df = Search.prepVectors(df0, vecCol, metric)
-    if (balance) {
-      val sample = hashSample(df, idCol,
-        col(vecCol).cast("array<double>"), fitSample)
-      if (sample.isEmpty)
-        return Model(Array.empty,
-          df.select(col(idCol), col(vecCol)).withColumn("cluster", lit(0)),
-          idCol, vecCol, metric = metric)
-      // multi-start over a few init seeds, keep the fit with the lowest
-      // quantization error (Σ min-d² over the sample — the part of the
-      // GKMeans objective that drives recall; balance is enforced inside
-      // each fit's greedy assignment). Deterministic, sample-order
-      // independent given the canonical hash-ordered sample, and the fit
-      // runs on a bounded driver-side sample so 3x cost is trivial.
-      val cents = Seq(seed, seed + 1, seed + 2).map { s0 =>
-        val c = balancedLloyd(sample, k, iters = 8, seed = s0,
-          sizeDecay = sizeDecay)
-        val err = sample.map { p =>
-          c.map { cc =>
-            var s = 0.0; var j = 0
-            while (j < p.length) { val d = p(j) - cc(j); s += d * d; j += 1 }
-            s
-          }.min
-        }.sum
-        (err, c)
-      }.minBy(_._1)._2
-      val centroids = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      val assign = graft.core.Caches.cached(
-        assignNearest(df, centroids, idCol, vecCol))
-      return Model(centroids, assign, idCol, vecCol, metric = metric)
-    }
-    val sample = hashSample(df, idCol,
-      col(vecCol).cast("array<double>"), fitSample)
-    if (sample.isEmpty)
-      return Model(Array.empty,
-        df.select(col(idCol), col(vecCol)).withColumn("cluster", lit(0)),
-        idCol, vecCol, metric = metric)
-    // Multi-start k-means++ + Lloyd, keep the fit with the HIGHEST
-    // probe-recall score ([[probeScore]] at 3k/8-width probes — the
-    // criterion the index is actually graded on; see its scaladoc for
-    // why quantization error picks wrong). The whole fit is driver-side
-    // arithmetic over the bounded sample, no per-iteration Spark job.
-    // Scoring the 8 starts cost 4-6 s when each start re-sorted its
-    // queries' candidates by recomputed distances; with the neighbour
-    // lists computed once it costs ~0.05 s, leaving the 8 k-means++ +
-    // Lloyd fits: ~0.2 s at 2000 64-d rows, 6-13 s at the 100k cap
-    // (k = 8-16; one core of a 4-vCPU VM). Seeded
-    // k-means++ init: plain random init dropped recall@10 below the 0.7
-    // floor (0.635) on the embeddings table; D²-weighted seeding
-    // restores the spread. Ties broken by seed order → deterministic.
-    val selNp = math.max(1, (3 * k) / 8)
-    val neighbours = probeNeighbours(sample)
-    val cents = (seed to seed + 7).map { s0 =>
-      val c = lloyd(sample, kppInit(sample, k, s0), iters = 12)
-      (probeScore(sample, neighbours, c, selNp), c)
-    }.maxBy(_._1)._2
-    val centroids = cents.zipWithIndex.map { case (c, i) => (i, c) }
-    // cached (tracked): the index is build-once / search-many, and every
-    // search equi-joins the posting lists — uncached, each probe would
-    // re-run the scan + assignment. At 100 TB the same role is played by
-    // save()'s cluster-partitioned parquet layout.
-    val assign = graft.core.Caches.cached(
-      assignNearest(df, centroids, idCol, vecCol))
-    Model(centroids, assign, idCol, vecCol, metric = metric)
+    val cents = fitCoarse(df, idCol, vecCol, k, seed, fitSample, balance,
+      sizeDecay)
+    Model(cents, new Quantized.Rows(df, idCol, vecCol, Some(cents))
+      .codes(Codec(vecCol)), idCol, vecCol, metric = metric)
   }
 }

@@ -32,8 +32,8 @@ object IvfPq extends Quantized.Family {
       c.codebooks, codes, idCol, metric = metric)
   }
 
-  /** Coarse-quantize ([[IvfIndex]]), train the codebooks on a bounded
-    * residual sample, then encode every residual in one pass. */
+  /** Coarse-quantize ([[IvfIndex.fitCoarse]]), train the codebooks on a
+    * bounded residual sample, then encode every residual in one pass. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, m: Int = 8, ksub: Int = 16, seed: Long = 42L,
       fitSample: Int = 4096, iters: Int = 10,

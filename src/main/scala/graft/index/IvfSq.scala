@@ -32,8 +32,8 @@ object IvfSq extends Quantized.Family {
       idCol, metric = metric)
   }
 
-  /** Coarse-quantize ([[IvfIndex]]), fit the residual grid on a spread
-    * residual sample, then encode every residual in one pass. */
+  /** Coarse-quantize ([[IvfIndex.fitCoarse]]), fit the residual grid on
+    * a spread residual sample, then encode every residual in one pass. */
   def build(df: DataFrame, idCol: String, vecCol: String,
       kCoarse: Int = 8, seed: Long = 42L, fitSample: Int = 4096,
       metric: String = "l2"): Model = {

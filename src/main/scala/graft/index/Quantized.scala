@@ -2,42 +2,50 @@ package graft.index
 
 import scala.collection.immutable.ArraySeq
 import scala.reflect.runtime.universe.TypeTag
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The quantized-index core: a fine-quantizer [[Quantized.Codec]] over
-  * an optional IVF coarse layer. Six index objects are its instances —
-  * [[BqIndex]], [[SqIndex]], [[PqIndex]] (flat) and [[IvfBq]],
-  * [[IvfSq]], [[IvfPq]] (coarse layer on, codes of the residual
-  * `x − centroid(cluster)`) — the parameterized IVF_FLAT / IVF_SQ8 /
+  * an optional IVF coarse layer. Seven index objects are its instances —
+  * [[BqIndex]], [[SqIndex]], [[PqIndex]] (flat); [[IvfBq]], [[IvfSq]],
+  * [[IvfPq]] (coarse layer on, codes of the residual
+  * `x − centroid(cluster)`); and [[IvfIndex]], IVF-flat (coarse layer
+  * on, the identity codec) — the parameterized IVF_FLAT / IVF_SQ8 /
   * IVF_PQ family of the reference's Milvus sink
   * (radient/tasks/sinks/milvus.py:83-122). Each object keeps only its
   * fit step; search, rerank, encode, insert, append, save and load are
   * written once here.
   *
-  * | codec | bits/dim | vs float32       | code column                     | param dir     |
-  * |-------|----------|------------------|---------------------------------|---------------|
-  * | SQ8   | 8        | 4x               | `sig` binary, a byte per dim    | `grid/`       |
-  * | PQ    | 8·m/dim  | 32x at 64-d, m=8 | `codes` array<int>, m codes     | `codebooks/`  |
-  * | BQ    | 1        | 32x              | `sig` array<long>, ⌈dim/64⌉ words | `thresholds/` |
+  * | codec    | bits/dim | vs float32       | code column                       | param dir     |
+  * |----------|----------|------------------|-----------------------------------|---------------|
+  * | identity | 32 or 64 | 1x               | the raw vector, in `assign/`      | none          |
+  * | SQ8      | 8        | 4x               | `sig` binary, a byte per dim      | `grid/`       |
+  * | PQ       | 8·m/dim  | 32x at 64-d, m=8 | `codes` array<int>, m codes       | `codebooks/`  |
+  * | BQ       | 1        | 32x              | `sig` array<long>, ⌈dim/64⌉ words | `thresholds/` |
   *
-  * IVF-BQ persists no thresholds: its residuals are centred, so they
-  * are all 0. Every saved index also has `meta/` (the metric,
-  * [[Blocks]]) and `codes/`; the IVF kinds add `centroids/` and
-  * partition `codes/` by `cluster`, so a probe reads nprobe of the
-  * posting lists.
+  * The identity codec stores the metric-prepped vector itself under the
+  * vector column's name and input type, takes no residual and ranks
+  * exactly, so IVF-flat has no rerank. IVF-BQ persists no thresholds:
+  * its residuals are centred, so they are all 0. Every saved index also
+  * has `meta/` (the metric, [[Blocks]]) and its code dir (`codes/`, or
+  * `assign/` for the identity codec); the IVF kinds add `centroids/`
+  * and partition the code dir by `cluster`, so a probe reads nprobe of
+  * the posting lists.
   *
-  * Search prepares each query once on the driver (SQ: the raw vector;
-  * BQ: its sign code; PQ: its ADC distance table — per probed cluster,
-  * from the query's residual, on the IVF kinds), then scores only the
-  * probed posting lists in one Spark job with the codec's scalar kernel
-  * and one bounded heap per query per partition, and merges the heaps
-  * on the driver into a local frame ([[Search.scan]]); `searchRerank`
-  * re-ranks that shortlist exactly against the raw vectors by id
-  * equi-join ([[Search.rerank]]). The IVF probe and assign-on-encode
-  * are the [[Coarse]] scans. Fits are driver-side over a deterministic spread
-  * sample ([[IvfIndex.hashSample]]) and the full table is touched by one
-  * distributed encode pass; inserts encode against the FROZEN fit. */
+  * Search prepares each query once on the driver (identity and SQ: the
+  * raw vector; BQ: its sign code; PQ: its ADC distance table — per
+  * probed cluster, from the query's residual, on the compressed IVF
+  * kinds), then scores only the probed posting lists in one Spark job
+  * with the codec's scalar kernel and one bounded heap per query per
+  * partition, and merges the heaps on the driver into a local frame
+  * ([[Search.scan]]); `searchRerank` re-ranks that shortlist exactly
+  * against the raw vectors by id equi-join ([[Search.rerank]]). The IVF
+  * probe and assign-on-encode are the [[Coarse]] scans. Fits are
+  * driver-side over a deterministic spread sample
+  * ([[IvfIndex.hashSample]]) — on the IVF layout the coarse fit
+  * ([[IvfIndex.fitCoarse]]) comes first — and the full table is touched
+  * by one distributed encode pass, whose codes are the one frame a
+  * build caches; inserts encode against the FROZEN fit. */
 object Quantized {
 
   type Centroids = Array[(Int, Array[Double])]
@@ -52,6 +60,10 @@ object Quantized {
     def query(v: IndexedSeq[Double]): Q
     /** Persist the fitted params under `path`. */
     def write(spark: SparkSession, path: String): Unit
+    /** The identity codec ([[IvfIndex.Codec]]): the stored code is the
+      * prepped vector column itself, at its input type, in `assign/`;
+      * queries and codes take no residual, and the ranking is exact. */
+    def raw: Boolean = false
   }
 
   /** One-file overwrite of a small param table. */
@@ -72,6 +84,9 @@ object Quantized {
       coarse: Option[Centroids], codes: DataFrame, idCol: String,
       metric: String) {
 
+    /** The saved code dir. */
+    def codesDir: String = if (codec.raw) "assign" else "codes"
+
     /** Top-k by the codec distance over the codes (coarse stage), only
       * the probed clusters' posting lists on the IVF layout, in one Spark
       * job ([[Search.scan]]). Each query is prepared once per probed
@@ -83,13 +98,16 @@ object Quantized {
     def search(queries: DataFrame, qid: String, qvec: String, k: Int,
         nprobe: Int, excludeSelf: Boolean,
         allowedIds: Option[DataFrame]): DataFrame = {
+      val code =
+        if (codec.raw) col(codec.codeCol).cast("array<double>") else col(codec.codeCol)
       Search.scan(queries, qid, qvec, k, metric, excludeSelf, codes, idCol,
-          col(codec.codeCol), coarse.isDefined, allowedIds, codec) { v =>
+          code, coarse.isDefined, allowedIds, codec) { v =>
         coarse match {
           case None => Seq((0, codec.query(ArraySeq.unsafeWrapArray(v))))
           case Some(cents) => Coarse.nearestK(v, cents, nprobe).toSeq.map { p =>
             val (cid, cent) = cents(p)
-            (cid, codec.query(residual(v, cent)))
+            (cid, codec.query(
+              if (codec.raw) ArraySeq.unsafeWrapArray(v) else residual(v, cent)))
           }
         }
       }
@@ -97,42 +115,27 @@ object Quantized {
 
     /** Shortlist of `shortlist` by [[search]], then exact rerank against
       * the raw (idCol, vecCol) vectors — only shortlist·|queries| of them
-      * are read. The allowed-id filter applies at the shortlist stage. */
+      * are read. The allowed-id filter applies at the shortlist stage.
+      * The identity codec ranks exactly, so its search is its rerank. */
     def searchRerank(queries: DataFrame, qid: String, qvec: String, k: Int,
         nprobe: Int, shortlist: Int, vectors: DataFrame, vecCol: String,
-        excludeSelf: Boolean, allowedIds: Option[DataFrame]): DataFrame = {
-      val idType = GannIndex.requireIntegralId(codes, idCol)
-      val cand = search(queries, qid, qvec, shortlist, nprobe, excludeSelf,
-        allowedIds)
-      Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
-        idType, metric)
-    }
-
-    /** Encode a batch against the FROZEN fit (Coarse.nearest1 assign on
-      * the IVF layout) into code rows with the model's column layout —
-      * shared by the in-memory insert and the persisted block append. */
-    def encodeWith(df: DataFrame, vecCol: String): DataFrame = {
-      val v = Search.prepVectors(
-        df.select(col(idCol), col(vecCol).cast("array<double>").as(vecCol)),
-        vecCol, metric)
-      val rows = coarse match {
-        case None =>
-          v.select(col(idCol),
-            encodeUdf(df.sparkSession, codec).apply(col(vecCol)).as(codec.codeCol))
-        case Some(cents) =>
-          val bc = df.sparkSession.sparkContext.broadcast((cents, codec))
-          val encUdf = udf { (x: Seq[Double]) =>
-            val arr = x.toArray
-            val (cs, cd) = bc.value
-            val (cid, cent) = cs(Coarse.nearest1(arr, cs))
-            (cid, cd.encode(residual(arr, cent)))
-          }
-          v.select(col(idCol), encUdf(col(vecCol)).as("e"))
-            .select(col(idCol), col("e._1").as("cluster"),
-              col("e._2").as(codec.codeCol))
+        excludeSelf: Boolean, allowedIds: Option[DataFrame]): DataFrame =
+      if (codec.raw) search(queries, qid, qvec, k, nprobe, excludeSelf, allowedIds)
+      else {
+        val idType = Search.requireIntegralId(codes, idCol)
+        val cand = search(queries, qid, qvec, shortlist, nprobe, excludeSelf,
+          allowedIds)
+        Search.rerank(cand, queries, qid, qvec, k, vectors, idCol, vecCol,
+          idType, metric)
       }
-      rows.select(codes.columns.map(col).toIndexedSeq: _*)
-    }
+
+    /** Encode a batch against the FROZEN fit into code rows with the
+      * model's column layout — shared by the in-memory insert and the
+      * persisted block append. */
+    def encodeWith(df: DataFrame, vecCol: String): DataFrame =
+      new Rows(Search.prepVectors(df.select(col(idCol), col(vecCol)), vecCol,
+        metric), idCol, vecCol, coarse).encode(codec)
+        .select(codes.columns.map(col).toIndexedSeq: _*)
 
     /** O(batch) persisted insert: new parquet files under the saved codes
       * dir — existing blocks are never read or rewritten ([[Blocks]]). */
@@ -150,10 +153,10 @@ object Quantized {
       writeCodes(codes, "overwrite", path)
     }
 
-    /** `codes/`, partitioned by cluster on the IVF layout. */
+    /** The code dir, partitioned by cluster on the IVF layout. */
     private def writeCodes(df: DataFrame, mode: String, path: String): Unit = {
       val w = df.write.mode(mode)
-      (if (coarse.isEmpty) w else w.partitionBy("cluster")).parquet(s"$path/codes")
+      (if (coarse.isEmpty) w else w.partitionBy("cluster")).parquet(s"$path/$codesDir")
     }
   }
 
@@ -163,6 +166,12 @@ object Quantized {
     def appends: Int
     private[index] def core: Core[_, _, _]
     private[index] def withCodes(codes: DataFrame, appends: Int): M
+
+    /** Incremental insert against the FROZEN fit: encode the batch and
+      * append it through [[Compact.append]]. */
+    private[index] def inserted(df: DataFrame, vecCol: String): M =
+      withCodes(Compact.append(codes, core.encodeWith(df, vecCol), appends),
+        appends + 1)
   }
 
   /** Search verbs of a flat (no coarse layer) model. */
@@ -206,13 +215,9 @@ object Quantized {
     protected def restore(spark: SparkSession, path: String, codes: DataFrame,
         idCol: String, metric: String): Model
 
-    /** Incremental insert against the FROZEN fit: encode the batch and
-      * append through [[Compact.append]]. */
+    /** Incremental insert against the FROZEN fit ([[Indexed]]). */
     def insert(model: Model, df: DataFrame, vecCol: String): Model =
-      model.withCodes(
-        Compact.append(model.codes, model.core.encodeWith(df, vecCol),
-          model.appends),
-        model.appends + 1)
+      model.inserted(df, vecCol)
 
     /** O(batch) persisted insert (see [[Blocks]]). */
     def appendToSaved(model: Model, path: String, df: DataFrame,
@@ -231,55 +236,65 @@ object Quantized {
       .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
       .sortBy(_._1)
 
-  /** The frame a build encodes: (idCol, v) over the metric-prepped
-    * vectors, or (idCol, cluster, v) over their residuals to the IVF
-    * assignment. */
-  private[index] final class Fit(name: String, rows: DataFrame,
-      keys: Seq[String], v: Column, idCol: String, fitSample: Int,
-      val coarse: Option[Centroids]) {
+  /** The rows a build or an insert encodes: the metric-prepped
+    * (idCol, vecCol) frame `p`, plus on the IVF layout each row's nearest
+    * frozen centroid as `cluster` ([[Coarse.nearest1]]). `v` is what a
+    * codec encodes: the vector, or on the IVF layout its residual to
+    * that centroid. */
+  private[index] final class Rows(p: DataFrame, idCol: String,
+      vecCol: String, val coarse: Option[Centroids], fitSample: Int = 0) {
 
-    /** Spread fit sample of the rows' v (flat: vectors; IVF: residuals). */
+    private val (rows, v) = {
+      val vd = col(vecCol).cast("array<double>")
+      coarse match {
+        case None => (p.select(col(idCol), col(vecCol)), vd)
+        case Some(cents) =>
+          val bc = p.sparkSession.sparkContext.broadcast((cents, cents.toMap))
+          val assign = udf { (x: Seq[Double]) =>
+            val cs = bc.value._1
+            cs(Coarse.nearest1(x.toArray, cs))._1
+          }
+          val resid = udf { (x: Seq[Double], cluster: Int) =>
+            val cent = bc.value._2(cluster)
+            Seq.tabulate(x.length)(i => x(i) - cent(i))
+          }
+          (p.select(col(idCol), col(vecCol), assign(vd).as("cluster")),
+            resid(vd, col("cluster")))
+      }
+    }
+
+    /** Spread fit sample of `fitSample` rows' v. */
     lazy val sample: Array[Array[Double]] =
       IvfIndex.hashSample(rows, idCol, v, fitSample)
 
-    require(coarse.fold(sample.nonEmpty)(_.nonEmpty), s"$name.build: empty input")
-
     def dim: Int = coarse.fold(sample(0).length)(_(0)._2.length)
 
-    /** Every row's code in one distributed pass; cached (tracked):
-      * build-once / search-many, every search scans the codes. */
+    /** (idCol, code) rows, (idCol, cluster, code) on the IVF layout, in
+      * one distributed pass. The identity codec's code rows are the rows
+      * themselves: its code is the vector column, at its input type. */
+    def encode[C: TypeTag, K, Q](codec: Codec[C, K, Q]): DataFrame =
+      if (codec.raw) rows
+      else rows.select(col(idCol) +: coarse.map(_ => col("cluster")).toSeq :+
+        encodeUdf(p.sparkSession, codec).apply(v).as(codec.codeCol): _*)
+
+    /** [[encode]], cached (tracked): build-once / search-many, every
+      * search scans the codes. It is the one frame a build caches. */
     def codes[C: TypeTag, K, Q](codec: Codec[C, K, Q]): DataFrame =
-      graft.core.Caches.cached(rows.select(
-        keys.map(col) :+ encodeUdf(rows.sparkSession, codec).apply(v).as(codec.codeCol): _*))
+      graft.core.Caches.cached(encode(codec))
   }
 
-  /** The shared fit path of the six builds. With `ivf = Some((kCoarse,
-    * seed))` the vectors are coarse-quantized first ([[IvfIndex.build]])
-    * and the rows become residuals off the IVF assignment — the cluster
-    * is already known per row, so there is no second nearest-centroid
-    * scan. */
+  /** The shared fit path of the six compressed builds. With
+    * `ivf = Some((kCoarse, seed))` the coarse quantizer is fit first
+    * ([[IvfIndex.fitCoarse]]) and the rows are encoded as residuals to
+    * their nearest centroid. */
   private[index] def fit(name: String, df: DataFrame, idCol: String,
       vecCol: String, metric: String, fitSample: Int,
-      ivf: Option[(Int, Long)] = None): Fit = {
+      ivf: Option[(Int, Long)] = None): Rows = {
     Search.checkMetric(metric)
-    ivf match {
-      case None =>
-        new Fit(name, Search.prepVectors(df, vecCol, metric), Seq(idCol),
-          col(vecCol).cast("array<double>"), idCol, fitSample, None)
-      case Some((kCoarse, seed)) =>
-        // metric rides on the IVF build: its assign table holds the
-        // (normalized, for cosine) vectors the residual pass reads
-        val m = IvfIndex.build(df, idCol, vecCol, k = kCoarse, seed = seed,
-          metric = metric)
-        val bc = df.sparkSession.sparkContext.broadcast(m.centroids.toMap)
-        val residUdf = udf { (v: Seq[Double], cluster: Int) =>
-          val cent = bc.value(cluster)
-          Seq.tabulate(v.length)(i => v(i) - cent(i))
-        }
-        val rows = m.assign.select(col(idCol), col("cluster"),
-          residUdf(col(vecCol).cast("array<double>"), col("cluster")).as("res"))
-        new Fit(name, rows, Seq(idCol, "cluster"), col("res"), idCol,
-          fitSample, Some(m.centroids))
-    }
+    val p = Search.prepVectors(df, vecCol, metric)
+    val f = new Rows(p, idCol, vecCol, ivf.map { case (k, seed) =>
+      IvfIndex.fitCoarse(p, idCol, vecCol, k, seed) }, fitSample)
+    require(f.coarse.fold(f.sample.nonEmpty)(_.nonEmpty), s"$name.build: empty input")
+    f
   }
 }

@@ -10,11 +10,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Shared search-side plumbing for the eight index kinds
-  * ([[IndexKinds]]: GANN, IVF, and the [[Quantized]] SQ / PQ / BQ
-  * codecs flat and over IVF): the one-pass probed scan of IVF and the
-  * quantized kinds ([[scan]]), GANN's bounded-heap top-k output shape
-  * ([[topKOut]]), the exact-rerank stage, the optional self-exclusion
-  * filter, and the l2/cosine metric prep.
+  * ([[IndexKinds]]: GANN, and the seven [[Quantized]] core kinds —
+  * IVF-flat's identity codec over IVF, and the SQ / PQ / BQ codecs flat
+  * and over IVF): the one-pass probed scan of the core kinds
+  * ([[scan]]), GANN's bounded-heap top-k output shape ([[topKOut]]),
+  * the integral-id rule of every ranking ([[requireIntegralId]]), the
+  * exact-rerank stage, the optional self-exclusion filter, and the
+  * l2/cosine metric prep.
   *
   * Metric semantics (reference: radient's GKMeans supports
   * euclidean/cosine/lp, radient/tasks/sinks/local/_gkmeans.py:125-133,
@@ -69,6 +71,18 @@ private[index] object Search {
     allowedIds.fold(table)(ids =>
       table.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
 
+  /** Every index ranks ids as longs (in [[scan]]'s heaps and
+    * [[topKOut]]'s TopKAgg) and casts them back on output: reject an id
+    * column that would null out under the cast, and hand back the type
+    * to restore. */
+  def requireIntegralId(df: DataFrame, idCol: String): DataType = {
+    val t = df.schema(idCol).dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains(t),
+      s"search requires an integral id column; '$idCol' is ${t.simpleString}. " +
+        "Join a dense_rank surrogate key first for string/decimal ids.")
+    t
+  }
+
   /** Self-exclusion: the id-domain convention of the self-kNN query
     * entries (qid and idCol share the corpus id space, so a query's own
     * row is dropped from its candidates). For an EXTERNAL query batch
@@ -83,8 +97,9 @@ private[index] object Search {
   /** (qid, idCol, dist) candidates → per-query top-k rows
     * (qid, idCol, dist, rnk): bounded-heap TopKAgg (≤k pairs per
     * partition per query reach the final shuffle), posexplode, id cast
-    * back to its input type. GANN's search ranks through it; IVF and the
-    * quantized kinds rank inside [[scan]] with the same heap order. */
+    * back to its input type. GANN's search ranks through it; the
+    * [[Quantized]] core kinds rank inside [[scan]] with the same heap
+    * order. */
   def topKOut(cand: DataFrame, qid: String, idCol: String,
       idType: DataType, k: Int): DataFrame =
     cand.groupBy(col(qid))
@@ -117,7 +132,7 @@ private[index] object Search {
     * `excludeSelf` drops (its qid) and its kernel-side form. */
   private final case class Probe[Q](slot: Int, self: Long, q: Q)
 
-  /** Top-k search of IVF and the quantized kinds in one Spark job.
+  /** Top-k search of the [[Quantized]] core kinds in one Spark job.
     *
     *  1. Driver: collect the query batch, prep each vector
     *     ([[prepVector]]) and `probe` it into (cluster, prepared query)
@@ -144,8 +159,8 @@ private[index] object Search {
       kernel: Kernel[K, Q])(probe: Array[Double] => Seq[(Int, Q)]): DataFrame = {
     require(!queries.isStreaming,
       "index search takes a batch query frame; serve a stream through foreachBatch")
-    val idType = GannIndex.requireIntegralId(table, idCol)
-    if (excludeSelf) GannIndex.requireIntegralId(queries, qid)
+    val idType = requireIntegralId(table, idCol)
+    if (excludeSelf) requireIntegralId(queries, qid)
     val slots = scala.collection.mutable.LinkedHashMap.empty[Any, Int]
     val probed = queries.select(col(qid), col(qvec).cast("array<double>"))
       .collect().toSeq.flatMap { r =>
@@ -244,8 +259,8 @@ private[index] object Search {
 }
 
 /** Driver/executor-side coarse-quantizer scans shared by the IVF family
-  * (IvfIndex assign + probe and fit scoring; the [[Quantized]] core's
-  * IVF-SQ / IVF-PQ / IVF-BQ probe + assign-on-encode): bounded
+  * (the [[Quantized]] core's probe + assign-on-encode for IVF-flat,
+  * IVF-SQ, IVF-PQ and IVF-BQ; [[IvfIndex]]'s fit scoring): bounded
   * partial selection of the nprobe nearest centroids instead of a full
   * sort, and early-abandon partial distances — O(kCoarse·dim) worst
   * case like the naive scan, but the abandon check skips most of each

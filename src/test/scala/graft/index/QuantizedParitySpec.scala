@@ -7,12 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Pins the six quantized indexes (BQ, SQ, PQ, each flat and over the
   * IVF coarse layer) and IVF-flat ([[IvfIndex]]) to fixed outputs on a
-  * seeded 600×16 table, for both metrics. Per (kind, metric) it digests
-  * the sorted code rows, the unfiltered and filtered `search` output,
-  * the `searchRerank` output (IVF-flat has none) and the code rows
+  * seeded 600×16 table, for both metrics, and IVF-flat also over an
+  * `array<float>` copy of it. Per (kind, metric) it digests the sorted
+  * code rows, the unfiltered and filtered `search` output, the
+  * `searchRerank` output (IVF-flat has none) and the code rows
   * `appendToSaved` writes for a 50-row batch, and it compares the saved
   * directory's layout (param dirs, the code dir — `assign` on IVF-flat —
-  * and the `cluster=` partitions of the IVF kinds) literally. Any change to
+  * and the `cluster=` partitions of the IVF kinds) literally; on the
+  * float copy it also pins the saved vector type. Any change to
   * fitting, encoding, ranking or persistence moves a digest; a refactor
   * of the index code must leave every one of them in place. */
 class QuantizedParitySpec extends AnyFunSuite {
@@ -42,11 +44,19 @@ class QuantizedParitySpec extends AnyFunSuite {
   private lazy val allowed = base.filter(col("vec_id") % 3 === 0)
     .select(col("vec_id"))
 
+  /** The fixture with `array<float>` vectors: every other input is
+    * `array<double>`, so only this one sees a stored vector widen. */
+  private def floats(df: DataFrame, v: String): DataFrame =
+    df.withColumn(v, col(v).cast("array<float>"))
+  private lazy val floatBase = floats(base, "embedding").cache()
+  private lazy val floatQueries = floats(queries, "qv")
+
   /** What the spec exercises of one built model. */
   private final class Ops(val codes: DataFrame,
       val search: Option[DataFrame] => DataFrame, rerank: => DataFrame,
       val save: String => Unit, val append: (String, DataFrame) => Unit,
-      val codesDir: String = "codes", val reranks: Boolean = true) {
+      val codesDir: String = "codes", val reranks: Boolean = true,
+      val appended: DataFrame = batch) {
     def rerankOut: Option[DataFrame] = if (reranks) Some(rerank) else None
   }
 
@@ -100,15 +110,23 @@ class QuantizedParitySpec extends AnyFunSuite {
           shortlist = Shortlist, vectors = base, vecCol = "embedding"),
         IvfPq.save(m, _), IvfPq.appendToSaved(m, _, _, "embedding"))
     },
-    "ivf" -> { metric =>
-      val m = IvfIndex.build(base, "vec_id", "embedding", k = 4,
-        metric = metric)
-      new Ops(m.assign,
-        a => m.search(queries, "qid", "qv", K, NProbe, allowedIds = a),
-        sys.error("IVF-flat has no searchRerank"),
-        IvfIndex.save(m, _), IvfIndex.appendToSaved(m, _, _),
-        codesDir = "assign", reranks = false)
-    })
+    "ivf" -> (ivf(base, queries, batch, _)),
+    "ivf-float" -> (ivf(floatBase, floatQueries, floats(batch, "embedding"), _)))
+
+  private def ivf(in: DataFrame, qs: DataFrame, more: DataFrame,
+      metric: String): Ops = {
+    val m = IvfIndex.build(in, "vec_id", "embedding", k = 4, metric = metric)
+    new Ops(m.assign,
+      a => m.search(qs, "qid", "qv", K, NProbe, allowedIds = a),
+      sys.error("IVF-flat has no searchRerank"),
+      IvfIndex.save(m, _), IvfIndex.appendToSaved(m, _, _),
+      codesDir = "assign", reranks = false, appended = more)
+  }
+
+  /** The saved vector type of the float input: l2 keeps the input's
+    * float, cosine stores the normalized doubles. */
+  private val storedType = Map(
+    "ivf-float/l2" -> "array<float>", "ivf-float/cosine" -> "array<double>")
 
   /** (codes, search, filtered search, rerank, appended codes) digests —
     * no rerank digest for IVF-flat — and the saved layout, per
@@ -155,6 +173,12 @@ class QuantizedParitySpec extends AnyFunSuite {
       "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
     "ivf/cosine" -> (Seq("3b00b5894e4bf41c", "9a98c79832fd4675", "f5624aab56941d50",
       "e7897bfb52e494a6"),
+      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
+    "ivf-float/l2" -> (Seq("34405b3d37795b4e", "13669a365e8bebfd",
+      "9e50d7b74e2af502", "13aee2155cc23285"),
+      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
+    "ivf-float/cosine" -> (Seq("9b8f79962007434c", "0ca2058f2bf3a57b",
+      "38352fd21f8d39d2", "d9a8f9a1dd73266d"),
       "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"))
 
   private def render(v: Any): String = v match {
@@ -190,12 +214,31 @@ class QuantizedParitySpec extends AnyFunSuite {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_parity_$kind").toString
       ops.save(dir)
-      ops.append(dir, batch)
-      val appended = spark.read.parquet(s"$dir/${ops.codesDir}")
-        .filter(col("vec_id") >= 600)
+      ops.append(dir, ops.appended)
+      val saved = spark.read.parquet(s"$dir/${ops.codesDir}")
+      val appended = saved.filter(col("vec_id") >= 600)
       val got = (Seq(digest(ops.codes), digest(ops.search(None)),
         digest(ops.search(Some(allowed)))) ++ ops.rerankOut.map(digest) :+
         digest(appended), layout(dir, ops.codesDir))
       assert(got === expected(s"$kind/$metric"))
+      storedType.get(s"$kind/$metric").foreach(t =>
+        assert(saved.schema("embedding").dataType.simpleString === t))
     }
+
+  test("each IVF-family build caches one frame: its posting table") {
+    val builds = Seq[(String, () => DataFrame)](
+      "ivf" -> (() => IvfIndex.build(base, "vec_id", "embedding", k = 4).assign),
+      "ivfsq" -> (() => IvfSq.build(base, "vec_id", "embedding", kCoarse = 4).codes),
+      "ivfpq" -> (() => IvfPq.build(base, "vec_id", "embedding", kCoarse = 4,
+        m = 4, ksub = 16).codes),
+      "ivfbq" -> (() => IvfBq.build(base, "vec_id", "embedding", kCoarse = 4).codes))
+    base.count()
+    val sc = spark.sparkContext
+    val added = builds.map { case (kind, build) =>
+      val before = sc.getPersistentRDDs.keySet
+      build().count()
+      kind -> (sc.getPersistentRDDs.keySet -- before).size
+    }
+    assert(added === builds.map(_._1 -> 1))
+  }
 }
