@@ -33,15 +33,36 @@ final class TopKBuffer(val k: Int) {
       }
     } else if (k > 0 && worse(dists(0), ids(0), d, id)) {
       dists(0) = d; ids(0) = id
+      siftDown(0)
+    }
+  }
+
+  /** [[insert]] under the one-copy-per-id rule: the heap holds each id at
+    * most once, at its smallest distance. A pair no better than the
+    * current worst of a full heap is rejected before any lookup; an id
+    * the heap already holds is replaced only by a smaller distance.
+    * Inserting any stream — or the contents of several such heaps — this
+    * way keeps exactly the k best of "min distance per id, then
+    * (dist, id)": an id's minimum survives every heap that saw it unless
+    * k distinct ids beat it, and an evicted larger copy cannot re-enter,
+    * since k distinct ids already beat its minimum. */
+  def insertMin(d: Double, id: Long): Unit =
+    if (k > 0 && (size < k || worse(dists(0), ids(0), d, id))) {
       var i = 0
-      var done = false
-      while (!done) {
-        val l = 2 * i + 1; val r = 2 * i + 2
-        var m = i
-        if (l < size && worse(dists(l), ids(l), dists(m), ids(m))) m = l
-        if (r < size && worse(dists(r), ids(r), dists(m), ids(m))) m = r
-        if (m == i) done = true else { swap(i, m); i = m }
-      }
+      while (i < size && ids(i) != id) i += 1
+      if (i == size) insert(d, id)
+      else if (d < dists(i)) { dists(i) = d; siftDown(i) }
+    }
+
+  private def siftDown(from: Int): Unit = {
+    var i = from
+    var done = false
+    while (!done) {
+      val l = 2 * i + 1; val r = 2 * i + 2
+      var m = i
+      if (l < size && worse(dists(l), ids(l), dists(m), ids(m))) m = l
+      if (r < size && worse(dists(r), ids(r), dists(m), ids(m))) m = r
+      if (m == i) done = true else { swap(i, m); i = m }
     }
   }
 

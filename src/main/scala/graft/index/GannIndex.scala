@@ -1,13 +1,12 @@
 package graft.index
 
-import graft.functions.{TextF, TopKAgg, VectorF}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import graft.functions.{TextF, VectorF}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed GANN-equivalent: a FOREST of hyperplane spill trees built as
-  * iterative DataFrame jobs, searched via a broadcast forest probe + (tree,
-  * leaf) equi-join + exact re-rank with cross-tree candidate dedup.
+  * iterative DataFrame jobs, whose (tree, leaf) posting lists are searched
+  * in one probed scan with exact ranking and cross-tree candidate dedup.
   *
   * Reference semantics (radient/tasks/sinks/local/gann.py:113-193 +
   * _gkmeans.py): per level, fit 2 centers per node, hyperplane = the
@@ -17,11 +16,13 @@ import org.apache.spark.sql.functions._
   * gann.py:150-166), recurse until leaves ≤ leafSize (MAX_LEAF_SIZE=200,
   * gann.py:15). `nTrees` mirrors the reference's `n_trees` recall knob
   * (gann.py:201): the C kernel searches every tree and de-duplicates
-  * candidates across trees in an open-addressing set
+  * candidates across trees in an open-addressing set inside the scan
   * (gann.c:851-869, 944-993, one pthread per tree); here each tree gets
-  * its own seed (sampling salt + sample order), the probe routes through
-  * every tree, and the (query, id) min-dist aggregate performs the
-  * cross-tree dedup before ranking.
+  * its own seed (sampling salt + sample order), the driver routes each
+  * query through every tree to its (tree, leaf) keys, and
+  * [[Search.scan]] scores only those posting lists, its per-query heaps
+  * holding each id once at its smallest distance — the cross-tree and
+  * spill dedup happens inside the scan, as in the C kernel.
   *
   * Divergences (documented, SURVEY.md §7.4): centers come from a
   * deterministic driver-side 2-means over a hash-sampled subset (VC-bound
@@ -39,9 +40,9 @@ import org.apache.spark.sql.functions._
   * level's plan, growing the Catalyst plan ~3^depth — at sf0.1 that hit
   * the 2 GB plan-string ceiling and spent 35 minutes in analysis alone.)
   * Only per-node statistics (counts, samples, quantiles) ever reach the
-  * driver. The final assignment table is the index; at cluster scale it
-  * would be written partitioned by `(tree, leaf)` so searches prune to the
-  * probed leaves.
+  * driver. The final assignment table is the index; it is saved
+  * partitioned by `(tree, leaf)`, so a search reads only the probed
+  * leaves' directories.
   */
 object GannIndex {
 
@@ -152,23 +153,26 @@ object GannIndex {
     /** Single-tree view (forest of 1) — kept for tree-shape inspection. */
     def nodes: Map[Int, Node] = trees.head
 
-    /** (tree, leaf) ids a query vector routes to. */
-    def route(v: Array[Double]): Seq[(Int, Int)] = routeForest(trees, v)
-
-    /** Exact-rank top-k over the union of probed leaves of EVERY tree for
-      * a batch of queries (qid, qvec). With spill > 0 (or nTrees > 1) a
-      * candidate can be reached via several probed leaves, so candidates
-      * are de-duplicated per (query, id) before ranking — the DataFrame
-      * twin of the C kernel's open-addressing candidate set across trees
-      * (gann.c:944-993). The rank itself is the bounded-heap TopKAgg
-      * (gann.c:498-574's max-heap): partial aggregation ships ≤k pairs per
-      * partition per query into the final shuffle, where a window rank
-      * would ship every candidate.
+    /** Exact-rank top-k (qid, idCol, dist, rnk) over the union of the
+      * probed leaves of EVERY tree for a batch of queries (qid, qvec), in
+      * one Spark job ([[Search.scan]]): the driver routes each prepped
+      * query through the forest ([[routeForestBeam]]) to its (tree, leaf)
+      * keys, and the scan scores only those posting lists with the L2
+      * fold of IVF-flat's identity codec ([[IvfIndex.Codec]], bit-identical
+      * to `VectorF.l2Dist`). With spill > 0 or nTrees > 1 a row can be
+      * reached through several probed leaves; the scan's heaps hold each
+      * id once, at its smallest distance — the twin of the C kernel's
+      * open-addressing candidate set across trees (gann.c:944-993) and its
+      * k-sized max-heap (gann.c:498-574).
       *
-      * Contract: `idCol` must be an integral column (it rides through the
-      * top-k heap as a long and is cast back to its input type on output);
-      * a non-numeric id would cast to null and silently vanish, so it is
-      * rejected here instead.
+      * It runs when called and returns a local frame, so the query batch
+      * and its k·|queries| rows must fit on the driver; a streaming query
+      * frame is rejected (serve a stream through `foreachBatch`). A query
+      * whose vector is null or holds a null element gets no rows.
+      * `idCol` must be integral (ranked as a long, cast back on output —
+      * [[Search.requireIntegralId]]), and so must the qid under
+      * `excludeSelf`, which follows the id-domain convention of
+      * [[Search.scan]].
       *
       * `beam` > 1 probes up to that many leaves PER TREE (natural spill
       * set first, then next-nearest by path slack — routeLeavesBeam);
@@ -177,36 +181,19 @@ object GannIndex {
       *
       * `allowedIds` is the filtered-search contract (Milvus `filter=`,
       * radient/tasks/sinks/milvus.py:122), same semantics as
-      * [[IvfIndex.Model.search]]: the id frame semi-joins the leaf
-      * assignments BEFORE the distance fold — pre-filter, so the k
-      * returned are the true top-k of the allowed set within probed
-      * leaves, and the semi join ships ids only. */
+      * [[IvfIndex.Model.search]] ([[Search.allowedOnly]]): the id frame
+      * semi-joins the probed leaves BEFORE the distance fold — pre-filter,
+      * so the k returned are the true top-k of the allowed set within
+      * probed leaves. */
     def search(queries: DataFrame, qid: String, qvec: String, k: Int,
         excludeSelf: Boolean = true, beam: Int = 1,
-        allowedIds: Option[DataFrame] = None): DataFrame = {
-      val idType = Search.requireIntegralId(assign, idCol)
-      val spark = queries.sparkSession
-      val bc = spark.sparkContext.broadcast(trees)
-      val bm = beam
-      val routeUdf = udf { (v: Seq[Double]) => routeForestBeam(bc.value, v.toArray, bm) }
-      val qn = Search.prepVectors(
-        queries.select(col(qid), col(qvec).cast("array<double>").as(qvec)),
-        qvec, metric)
-      val probed = qn.select(col(qid), col(qvec),
-          explode(routeUdf(col(qvec))).as("tl"))
-        .select(col(qid), col(qvec),
-          col("tl._1").as("tree"), col("tl._2").as("leaf"))
-      val base = allowedIds.fold(assign)(ids =>
-        assign.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
-      Search.topKOut(
-        Search.selfFilter(probed.join(base.hint("shuffle_hash"),
-            Seq("tree", "leaf")), idCol, qid, excludeSelf)
-          .select(col(qid), col(idCol),
-            VectorF.l2Dist(col(qvec), col(vecCol)).as("dist"))
-          .groupBy(col(qid), col(idCol))
-          .agg(min(col("dist")).as("dist")),
-        qid, idCol, idType, k)
-    }
+        allowedIds: Option[DataFrame] = None): DataFrame =
+      Search.scan(queries, qid, qvec, k, metric, excludeSelf, assign, idCol,
+          col(vecCol).cast("array<double>"),
+          Some(shiftleft(col("tree").cast("long"), 32).bitwiseOR(col("leaf"))),
+          allowedIds, IvfIndex.Codec(vecCol)) { v =>
+        routeForestBeam(trees, v, beam).map { case (t, l) => ((t.toLong << 32) | l, v) }
+      }
   }
 
   private def dotd(a: Array[Double], b: Array[Double]): Double = {
@@ -254,13 +241,6 @@ object GannIndex {
     var i = 0; while (i < x.length) { x(i) *= f; i += 1 }
   }
 
-  /** Persist the index (GANN.index(path) parity,
-    * radient/tasks/sinks/local/gann.py:222-232: .npy dataset +
-    * leaves.json → here two parquet tables). The assignment is written
-    * PARTITIONED BY (tree, leaf) — at scale a search reads only the
-    * probed leaves' partitions (partition pruning on the (tree, leaf)
-    * equi-join keys), the distributed twin of the C loader's per-leaf
-    * files. */
   /** Incremental insert — the GANN half of the reference's
     * insert → index lifecycle (gann.py:196-216 insert buffers rows,
     * index() builds): new vectors route through the FROZEN forest with
@@ -340,6 +320,13 @@ object GannIndex {
     }
   }
 
+  /** Persist the index (GANN.index(path) parity,
+    * radient/tasks/sinks/local/gann.py:222-232: .npy dataset +
+    * leaves.json → here two parquet tables). The assignment is written
+    * PARTITIONED BY (tree, leaf) — at scale a search reads only the
+    * probed leaves' partitions (the scan's (tree, leaf) key filter
+    * prunes to them), the distributed twin of the C loader's per-leaf
+    * files. */
   def save(model: Model, path: String): Unit = {
     val spark = model.assign.sparkSession
     import spark.implicits._

@@ -40,7 +40,7 @@ object IvfIndex {
       * driver; a streaming query frame is rejected. `idCol` must be
       * integral (ranked as a long, cast back on output — see
       * [[Search.requireIntegralId]]). `excludeSelf` follows the id-domain
-      * convention in [[Search.selfFilter]].
+      * convention in [[Search.scan]].
       *
       * `allowedIds` is the filtered-search contract (the reference's
       * Milvus `filter=` search kwarg, radient/tasks/sinks/milvus.py:122):

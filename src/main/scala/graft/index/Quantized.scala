@@ -101,12 +101,12 @@ object Quantized {
       val code =
         if (codec.raw) col(codec.codeCol).cast("array<double>") else col(codec.codeCol)
       Search.scan(queries, qid, qvec, k, metric, excludeSelf, codes, idCol,
-          code, coarse.isDefined, allowedIds, codec) { v =>
+          code, coarse.map(_ => col("cluster")), allowedIds, codec) { v =>
         coarse match {
-          case None => Seq((0, codec.query(ArraySeq.unsafeWrapArray(v))))
+          case None => Seq((0L, codec.query(ArraySeq.unsafeWrapArray(v))))
           case Some(cents) => Coarse.nearestK(v, cents, nprobe).toSeq.map { p =>
             val (cid, cent) = cents(p)
-            (cid, codec.query(
+            (cid.toLong, codec.query(
               if (codec.raw) ArraySeq.unsafeWrapArray(v) else residual(v, cent)))
           }
         }
@@ -226,9 +226,15 @@ object Quantized {
 
     def save(model: Model, path: String): Unit = model.core.save(path)
 
-    def load(spark: SparkSession, path: String, idCol: String): Model =
-      restore(spark, path, spark.read.parquet(s"$path/codes"), idCol,
+    /** A `cluster`-partitioned read appends `cluster` last; the loaded
+      * code rows take the build's (idCol, cluster, code) order back. */
+    def load(spark: SparkSession, path: String, idCol: String): Model = {
+      val codes = spark.read.parquet(s"$path/codes")
+      val order = codes.columns.sortBy(c =>
+        if (c == idCol) 0 else if (c == "cluster") 1 else 2)
+      restore(spark, path, codes.select(order.map(col).toIndexedSeq: _*), idCol,
         Blocks.readMetric(spark, path))
+    }
   }
 
   private[index] def readCentroids(spark: SparkSession, path: String): Centroids =

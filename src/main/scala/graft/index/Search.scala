@@ -1,7 +1,7 @@
 package graft.index
 
 import scala.jdk.CollectionConverters._
-import graft.functions.{TopKAgg, TopKBuffer, VectorF}
+import graft.functions.{TopKBuffer, VectorF}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -10,13 +10,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Shared search-side plumbing for the eight index kinds
-  * ([[IndexKinds]]: GANN, and the seven [[Quantized]] core kinds —
-  * IVF-flat's identity codec over IVF, and the SQ / PQ / BQ codecs flat
-  * and over IVF): the one-pass probed scan of the core kinds
-  * ([[scan]]), GANN's bounded-heap top-k output shape ([[topKOut]]),
-  * the integral-id rule of every ranking ([[requireIntegralId]]), the
-  * exact-rerank stage, the optional self-exclusion filter, and the
-  * l2/cosine metric prep.
+  * ([[IndexKinds]]): the one-pass probed scan every kind ranks through
+  * ([[scan]]) — GANN over its (tree, leaf) posting lists, and the seven
+  * [[Quantized]] core kinds (IVF-flat's identity codec over IVF, and the
+  * SQ / PQ / BQ codecs flat and over IVF) over their `cluster` lists or
+  * their whole code table — the integral-id rule of every ranking
+  * ([[requireIntegralId]]), the pre-filter ([[allowedOnly]]), the
+  * exact-rerank stage and the l2/cosine metric prep.
   *
   * Metric semantics (reference: radient's GKMeans supports
   * euclidean/cosine/lp, radient/tasks/sinks/local/_gkmeans.py:125-133,
@@ -71,10 +71,9 @@ private[index] object Search {
     allowedIds.fold(table)(ids =>
       table.join(ids.select(col(idCol)), Seq(idCol), "left_semi"))
 
-  /** Every index ranks ids as longs (in [[scan]]'s heaps and
-    * [[topKOut]]'s TopKAgg) and casts them back on output: reject an id
-    * column that would null out under the cast, and hand back the type
-    * to restore. */
+  /** Every index ranks ids as longs in [[scan]]'s heaps and casts them
+    * back on output: reject an id column that would null out under the
+    * cast, and hand back the type to restore. */
   def requireIntegralId(df: DataFrame, idCol: String): DataType = {
     val t = df.schema(idCol).dataType
     require(Set[DataType](ByteType, ShortType, IntegerType, LongType).contains(t),
@@ -83,36 +82,11 @@ private[index] object Search {
     t
   }
 
-  /** Self-exclusion: the id-domain convention of the self-kNN query
-    * entries (qid and idCol share the corpus id space, so a query's own
-    * row is dropped from its candidates). For an EXTERNAL query batch
-    * whose qids are unrelated to corpus ids, pass excludeSelf = false —
-    * a colliding qid would otherwise silently lose its true nearest
-    * neighbor. The reference ranks every candidate and has no such
-    * exclusion (gann.c:999-1080). */
-  def selfFilter(cand: DataFrame, idCol: String, qid: String,
-      excludeSelf: Boolean): DataFrame =
-    if (excludeSelf) cand.filter(col(idCol) =!= col(qid)) else cand
-
-  /** (qid, idCol, dist) candidates → per-query top-k rows
-    * (qid, idCol, dist, rnk): bounded-heap TopKAgg (≤k pairs per
-    * partition per query reach the final shuffle), posexplode, id cast
-    * back to its input type. GANN's search ranks through it; the
-    * [[Quantized]] core kinds rank inside [[scan]] with the same heap
-    * order. */
-  def topKOut(cand: DataFrame, qid: String, idCol: String,
-      idType: DataType, k: Int): DataFrame =
-    cand.groupBy(col(qid))
-      .agg(TopKAgg.topK(col("dist"), col(idCol).cast("long"), k).as("top"))
-      .select(col(qid), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col(qid), col("s.id").cast(idType).as(idCol),
-        col("s.dist").as("dist"), (col("pos") + 1).cast("int").as("rnk"))
-
   /** The scalar distance kernel of a [[scan]]: `read` loads one row's
     * stored code (null when the code or any element of it is null: the
     * row is not scored), and `dist` scores it against one prepared query.
     * A NaN distance means none (a length mismatch, an out-of-range
-    * code): the pair is skipped, as TopKAgg skips a null distance. */
+    * code): the pair is skipped. */
   trait Kernel[K, Q] extends Serializable {
     def read(row: InternalRow, ord: Int): K
     def dist(code: K, q: Q): Double
@@ -132,31 +106,47 @@ private[index] object Search {
     * `excludeSelf` drops (its qid) and its kernel-side form. */
   private final case class Probe[Q](slot: Int, self: Long, q: Q)
 
-  /** Top-k search of the [[Quantized]] core kinds in one Spark job.
+  /** Top-k search of every index kind in one Spark job.
     *
     *  1. Driver: collect the query batch, prep each vector
-    *     ([[prepVector]]) and `probe` it into (cluster, prepared query)
-    *     pairs — one pair with cluster 0 on a flat layout.
-    *  1. One job over the probed posting lists only (a `cluster IN (…)`
-    *     filter on the `clustered` layout, which prunes the `cluster=`
-    *     directories of a saved index), after [[allowedOnly]]: every row
-    *     is scored by `kernel` against the queries that probe its cluster,
-    *     `excludeSelf` is applied in the loop, and each query keeps one
-    *     bounded [[graft.functions.TopKBuffer]] per partition.
+    *     ([[prepVector]]) and `probe` it into (posting-list key, prepared
+    *     query) pairs. `key` is the layout's posting-list key, a long
+    *     expression over its partition columns only: `cluster` on the IVF
+    *     layout, (`tree`, `leaf`) packed into one long on GANN's, none on
+    *     a flat layout (every row under key 0).
+    *  1. One job over the probed posting lists only (a `key IN (…)`
+    *     filter, which prunes the key directories of a saved index,
+    *     since it references partition columns alone), after
+    *     [[allowedOnly]]: every row is scored by `kernel`
+    *     against the queries that probe its list, `excludeSelf` is
+    *     applied in the loop, and each query keeps one bounded
+    *     [[graft.functions.TopKBuffer]] per partition.
     *  1. Driver: merge the partitions' heaps per query into a local frame
     *     of (qid, idCol cast back to its type, dist, rnk).
     *
+    * Every heap, per partition and on the driver, holds each id at most
+    * once, at its smallest distance
+    * ([[graft.functions.TopKBuffer.insertMin]]): a row reached through
+    * several probed lists (GANN's trees and spill band) or stored twice
+    * ranks once, at its smallest distance — the top-k of "min distance
+    * per id, then (dist, id)".
+    *
     * Queries sharing a qid share a heap, as `groupBy(qid)` merged them. A
-    * query whose vector is null or holds a null element gets no rows;
-    * under `excludeSelf` the qid must be integral ([[selfFilter]]) and a
-    * null qid gets no rows. The search runs when called, so the query
-    * batch and its k·|queries| result rows must fit on the driver; a
-    * streaming query frame is rejected (serve a stream through
-    * `foreachBatch`). */
+    * query whose vector is null or holds a null element gets no rows.
+    * `excludeSelf` is the id-domain convention of the self-kNN query
+    * entries: qid and idCol share the corpus id space, so a query's own
+    * row is dropped from its candidates; the qid must then be integral,
+    * and a null qid gets no rows. For an EXTERNAL query batch whose qids
+    * are unrelated to corpus ids, pass excludeSelf = false — a colliding
+    * qid would otherwise silently lose its true nearest neighbor (the
+    * reference ranks every candidate and has no such exclusion,
+    * gann.c:999-1080). The search runs when called, so the query batch
+    * and its k·|queries| result rows must fit on the driver; a streaming
+    * query frame is rejected (serve a stream through `foreachBatch`). */
   def scan[K, Q](queries: DataFrame, qid: String, qvec: String, k: Int,
       metric: String, excludeSelf: Boolean, table: DataFrame, idCol: String,
-      code: Column, clustered: Boolean, allowedIds: Option[DataFrame],
-      kernel: Kernel[K, Q])(probe: Array[Double] => Seq[(Int, Q)]): DataFrame = {
+      code: Column, key: Option[Column], allowedIds: Option[DataFrame],
+      kernel: Kernel[K, Q])(probe: Array[Double] => Seq[(Long, Q)]): DataFrame = {
     require(!queries.isStreaming,
       "index search takes a batch query frame; serve a stream through foreachBatch")
     val idType = requireIntegralId(table, idCol)
@@ -170,23 +160,23 @@ private[index] object Search {
           val slot = slots.getOrElseUpdate(r.get(0), slots.size)
           val self = if (excludeSelf) r.getAs[Number](0).longValue else 0L
           probe(prepVector(v.map(_.asInstanceOf[Double]).toArray, metric))
-            .map { case (c, q) => c -> Probe(slot, self, q) }
+            .map { case (k, q) => k -> Probe(slot, self, q) }
         }
       }
     val heaps = Array.fill(slots.size)(new TopKBuffer(k))
     if (probed.nonEmpty) {
-      val byCluster = probed.groupMap(_._1)(_._2).map { case (c, ps) => c -> ps.toArray }
+      val byKey = probed.groupMap(_._1)(_._2).map { case (k, ps) => k -> ps.toArray }
       val nSlots = slots.size
+      val keyL = key.map(_.cast("long"))
       val rows = allowedOnly(
-        if (clustered) table.filter(col("cluster").isin(byCluster.keys.toSeq: _*))
-        else table, idCol, allowedIds)
-        .select(col(idCol).cast("long"), code,
-          if (clustered) col("cluster") else lit(0))
+        keyL.fold(table)(c => table.filter(c.isin(byKey.keys.toSeq: _*))),
+        idCol, allowedIds)
+        .select(col(idCol).cast("long"), code, keyL.getOrElse(lit(0L)))
       rows.queryExecution.toRdd.mapPartitions { it =>
         val part = new Array[TopKBuffer](nSlots)
         it.foreach { row =>
           val ps = if (row.isNullAt(0) || row.isNullAt(2)) null
-            else byCluster.getOrElse(row.getInt(2), null)
+            else byKey.getOrElse(row.getLong(2), null)
           val c = if (ps == null) null.asInstanceOf[K] else kernel.read(row, 1)
           if (c != null) {
             val id = row.getLong(0)
@@ -197,7 +187,7 @@ private[index] object Search {
                 val d = kernel.dist(c, p.q)
                 if (!d.isNaN) {
                   if (part(p.slot) == null) part(p.slot) = new TopKBuffer(k)
-                  part(p.slot).insert(d, id)
+                  part(p.slot).insertMin(d, id)
                 }
               }
               i += 1
@@ -209,7 +199,7 @@ private[index] object Search {
         }
       }.collect().foreach { case (s, ds, ids) =>
         var i = 0
-        while (i < ds.length) { heaps(s).insert(ds(i), ids(i)); i += 1 }
+        while (i < ds.length) { heaps(s).insertMin(ds(i), ids(i)); i += 1 }
       }
     }
     val typed: Long => Any = idType match {

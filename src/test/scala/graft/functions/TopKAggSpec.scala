@@ -7,7 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
 /** TopKAgg must agree row-for-row with the window-rank formulation it
-  * replaces (same (dist, id) lexicographic order, including ties). */
+  * replaces (same (dist, id) lexicographic order, including ties), and
+  * `TopKBuffer.insertMin` — the one-copy-per-id rule of the index scan's
+  * heaps — must equal "min distance per id, then (dist, id) top-k". */
 class TopKAggSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -55,5 +57,31 @@ class TopKAggSpec extends AnyFunSuite {
       .agg(TopKAgg.topK(col("dist"), col("id"), 0).as("top"))
       .select(size(col("top"))).head().getInt(0)
     assert(got == 0)
+  }
+
+  test("insertMin: merged partition heaps equal min per id, then (dist, id) top-k") {
+    def brute(pairs: Seq[(Double, Long)], k: Int): Seq[(Double, Long)] =
+      pairs.groupMapReduce(_._2)(_._1)(math.min).toSeq
+        .map { case (id, d) => (d, id) }.sortBy(identity).take(k)
+    def ruled(parts: Iterable[Seq[(Double, Long)]], k: Int): Seq[(Double, Long)] = {
+      val merged = new TopKBuffer(k)
+      for (part <- parts) {
+        val h = new TopKBuffer(k)
+        part.foreach { case (d, id) => h.insertMin(d, id) }
+        (0 until h.size).foreach(i => merged.insertMin(h.dists(i), h.ids(i)))
+      }
+      merged.sorted.toSeq
+    }
+    val rnd = new Random(29)
+    // few ids and coarse distance buckets: every id repeats, and ties on
+    // distance are common
+    val streams = Seq.fill(200) {
+      val nIds = 1 + rnd.nextInt(30)
+      Seq.fill(rnd.nextInt(120))(((rnd.nextInt(12) / 2).toDouble, rnd.nextInt(nIds).toLong))
+    } :+ Seq.fill(50)((rnd.nextInt(5).toDouble, 7L))  // all one id
+    for (s <- streams; k <- Seq(0, 1, 3, 10); nParts <- Seq(1, 4)) {
+      val parts = s.groupBy(_ => rnd.nextInt(nParts)).values
+      assert(ruled(parts, k) === brute(s, k))
+    }
   }
 }

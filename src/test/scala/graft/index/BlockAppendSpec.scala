@@ -72,20 +72,18 @@ class BlockAppendSpec extends AnyFunSuite {
     }
   }
 
-  test("IVF and IVF-SQ: a loaded index serves a local query batch in one job") {
-    def local(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
-    val q = local(queries)
-    val allowed = local(base.filter(col("vec_id") % 3 === 0).select(col("vec_id")))
-    val dirIvf = tmp("graft_jobs_ivf")
-    IvfIndex.save(IvfIndex.build(base, "vec_id", "embedding", k = 4), dirIvf)
-    val dirSq = tmp("graft_jobs_ivfsq")
-    IvfSq.save(IvfSq.build(base, "vec_id", "embedding", kCoarse = 4), dirSq)
-    val ivf = IvfIndex.load(spark, dirIvf, "vec_id", "embedding")
-    val sq = IvfSq.load(spark, dirSq, "vec_id")
-    val searches = Seq[Option[DataFrame] => DataFrame](
-      a => ivf.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a),
-      a => sq.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a))
+  /** A driver-local copy of `df`: collecting it starts no job. */
+  private def local(df: DataFrame): DataFrame =
+    spark.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  private lazy val localQueries = local(queries)
+  private lazy val localAllowed =
+    local(base.filter(col("vec_id") % 3 === 0).select(col("vec_id")))
+
+  /** Each search, unfiltered and with the local allowed ids, returns 5
+    * rows for each of the 10 queries in 1 job, or at most 2 filtered. */
+  private def assertOneJob(searches: Seq[Option[DataFrame] => DataFrame]): Unit = {
+    val allowed = localAllowed
     for (search <- searches) {
       var n = 0
       assert(jobsOf { n = search(None).collect().length } === 1)
@@ -93,6 +91,30 @@ class BlockAppendSpec extends AnyFunSuite {
       assert(jobsOf { n = search(Some(allowed)).collect().length } <= 2)
       assert(n === 50)
     }
+  }
+
+  test("IVF and IVF-SQ: a loaded index serves a local query batch in one job") {
+    val q = localQueries
+    val dirIvf = tmp("graft_jobs_ivf")
+    IvfIndex.save(IvfIndex.build(base, "vec_id", "embedding", k = 4), dirIvf)
+    val dirSq = tmp("graft_jobs_ivfsq")
+    IvfSq.save(IvfSq.build(base, "vec_id", "embedding", kCoarse = 4), dirSq)
+    val ivf = IvfIndex.load(spark, dirIvf, "vec_id", "embedding")
+    val sq = IvfSq.load(spark, dirSq, "vec_id")
+    assertOneJob(Seq(
+      a => ivf.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a),
+      a => sq.search(q, "qid", "qv", 5, nprobe = 2, allowedIds = a)))
+  }
+
+  test("GANN: a loaded index serves a local query batch in one job") {
+    val dir = tmp("graft_jobs_gann")
+    GannIndex.save(GannIndex.build(base, "vec_id", "embedding", leafSize = 64,
+      spill = 0.15, nTrees = 3), dir)
+    val gann = GannIndex.load(spark, dir, "vec_id", "embedding")
+    val q = localQueries
+    assertOneJob(Seq(
+      a => gann.search(q, "qid", "qv", 5, allowedIds = a),
+      a => gann.search(q, "qid", "qv", 5, beam = 4, allowedIds = a)))
   }
 
   test("IVF: appendToSaved leaves existing blocks untouched, search == in-memory insert") {

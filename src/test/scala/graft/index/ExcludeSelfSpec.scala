@@ -48,9 +48,11 @@ class ExcludeSelfSpec extends AnyFunSuite {
       .select(col("value").as("qid"), array(lit(0.0)).as("qv"))
     val ivf = IvfIndex.build(emb, "vec_id", "embedding", k = 4)
     val sq = IvfSq.build(emb, "vec_id", "embedding", kCoarse = 4)
+    val gann = GannIndex.build(emb, "vec_id", "embedding", leafSize = 64)
     for (search <- Seq[() => DataFrame](
         () => ivf.search(stream, "qid", "qv", k = 5, nprobe = 2),
-        () => sq.search(stream, "qid", "qv", k = 5, nprobe = 2))) {
+        () => sq.search(stream, "qid", "qv", k = 5, nprobe = 2),
+        () => gann.search(stream, "qid", "qv", k = 5))) {
       val e = intercept[IllegalArgumentException](search())
       assert(e.getMessage.contains("foreachBatch"))
     }

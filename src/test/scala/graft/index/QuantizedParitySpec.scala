@@ -3,20 +3,25 @@ package graft.index
 import graft.TestSpark
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the six quantized indexes (BQ, SQ, PQ, each flat and over the
-  * IVF coarse layer) and IVF-flat ([[IvfIndex]]) to fixed outputs on a
-  * seeded 600×16 table, for both metrics, and IVF-flat also over an
+/** Pins the eight index kinds — the six quantized ones (BQ, SQ, PQ,
+  * each flat and over the IVF coarse layer), IVF-flat ([[IvfIndex]])
+  * and GANN ([[GannIndex]], 3 trees of 64-row leaves at spill 0.15) — to fixed outputs on
+  * a seeded 600×16 table, for both metrics, and IVF-flat also over an
   * `array<float>` copy of it. Per (kind, metric) it digests the sorted
-  * code rows, the unfiltered and filtered `search` output, the
-  * `searchRerank` output (IVF-flat has none) and the code rows
-  * `appendToSaved` writes for a 50-row batch, and it compares the saved
-  * directory's layout (param dirs, the code dir — `assign` on IVF-flat —
-  * and the `cluster=` partitions of the IVF kinds) literally; on the
-  * float copy it also pins the saved vector type. Any change to
-  * fitting, encoding, ranking or persistence moves a digest; a refactor
-  * of the index code must leave every one of them in place. */
+  * code rows, the unfiltered and filtered `search` output, a second
+  * search (`searchRerank` on the compressed kinds, a `beam = 4` search
+  * on GANN, none on IVF-flat) and the code rows `appendToSaved` writes
+  * for a 50-row batch, and it compares the saved directory's layout
+  * (param dirs, the code dir — `assign` on IVF-flat and GANN — and its
+  * `cluster=` or `tree=` partitions) literally; on the float copy it
+  * also pins the saved vector type. It also pins the search output
+  * schema, and that a loaded model's code rows keep the built model's
+  * column order. Any change to fitting, encoding, ranking or persistence
+  * moves a digest; a refactor of the index code must leave every one of
+  * them in place. */
 class QuantizedParitySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -51,13 +56,16 @@ class QuantizedParitySpec extends AnyFunSuite {
   private lazy val floatBase = floats(base, "embedding").cache()
   private lazy val floatQueries = floats(queries, "qv")
 
-  /** What the spec exercises of one built model. */
+  /** What the spec exercises of one built model: `second` is its
+    * second pinned search, absent when `hasSecond` is false; `load`
+    * reads a saved copy's code rows back. */
   private final class Ops(val codes: DataFrame,
-      val search: Option[DataFrame] => DataFrame, rerank: => DataFrame,
+      val search: Option[DataFrame] => DataFrame, second: => DataFrame,
       val save: String => Unit, val append: (String, DataFrame) => Unit,
-      val codesDir: String = "codes", val reranks: Boolean = true,
+      val load: String => DataFrame,
+      val codesDir: String = "codes", hasSecond: Boolean = true,
       val appended: DataFrame = batch) {
-    def rerankOut: Option[DataFrame] = if (reranks) Some(rerank) else None
+    def secondOut: Option[DataFrame] = if (hasSecond) Some(second) else None
   }
 
   private val kinds: Seq[(String, String => Ops)] = Seq(
@@ -66,7 +74,8 @@ class QuantizedParitySpec extends AnyFunSuite {
       new Ops(m.codes, a => m.search(queries, "qid", "qv", K, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, shortlist = Shortlist,
           vectors = base, vecCol = "embedding"),
-        BqIndex.save(m, _), BqIndex.appendToSaved(m, _, _, "embedding"))
+        BqIndex.save(m, _), BqIndex.appendToSaved(m, _, _, "embedding"),
+        BqIndex.load(spark, _, "vec_id").codes)
     },
     "ivfbq" -> { metric =>
       val m = IvfBq.build(base, "vec_id", "embedding", kCoarse = 4,
@@ -75,14 +84,16 @@ class QuantizedParitySpec extends AnyFunSuite {
         a => m.search(queries, "qid", "qv", K, NProbe, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, nprobe = NProbe,
           shortlist = Shortlist, vectors = base, vecCol = "embedding"),
-        IvfBq.save(m, _), IvfBq.appendToSaved(m, _, _, "embedding"))
+        IvfBq.save(m, _), IvfBq.appendToSaved(m, _, _, "embedding"),
+        IvfBq.load(spark, _, "vec_id").codes)
     },
     "sq" -> { metric =>
       val m = SqIndex.build(base, "vec_id", "embedding", metric = metric)
       new Ops(m.codes, a => m.search(queries, "qid", "qv", K, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, shortlist = Shortlist,
           vectors = base, vecCol = "embedding"),
-        SqIndex.save(m, _), SqIndex.appendToSaved(m, _, _, "embedding"))
+        SqIndex.save(m, _), SqIndex.appendToSaved(m, _, _, "embedding"),
+        SqIndex.load(spark, _, "vec_id").codes)
     },
     "ivfsq" -> { metric =>
       val m = IvfSq.build(base, "vec_id", "embedding", kCoarse = 4,
@@ -91,7 +102,8 @@ class QuantizedParitySpec extends AnyFunSuite {
         a => m.search(queries, "qid", "qv", K, NProbe, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, nprobe = NProbe,
           shortlist = Shortlist, vectors = base, vecCol = "embedding"),
-        IvfSq.save(m, _), IvfSq.appendToSaved(m, _, _, "embedding"))
+        IvfSq.save(m, _), IvfSq.appendToSaved(m, _, _, "embedding"),
+        IvfSq.load(spark, _, "vec_id").codes)
     },
     "pq" -> { metric =>
       val m = PqIndex.build(base, "vec_id", "embedding", m = 4, ksub = 16,
@@ -99,7 +111,8 @@ class QuantizedParitySpec extends AnyFunSuite {
       new Ops(m.codes, a => m.search(queries, "qid", "qv", K, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, shortlist = Shortlist,
           vectors = base, vecCol = "embedding"),
-        PqIndex.save(m, _), PqIndex.appendToSaved(m, _, _, "embedding"))
+        PqIndex.save(m, _), PqIndex.appendToSaved(m, _, _, "embedding"),
+        PqIndex.load(spark, _, "vec_id").codes)
     },
     "ivfpq" -> { metric =>
       val m = IvfPq.build(base, "vec_id", "embedding", kCoarse = 4, m = 4,
@@ -108,10 +121,20 @@ class QuantizedParitySpec extends AnyFunSuite {
         a => m.search(queries, "qid", "qv", K, NProbe, allowedIds = a),
         m.searchRerank(queries, "qid", "qv", K, nprobe = NProbe,
           shortlist = Shortlist, vectors = base, vecCol = "embedding"),
-        IvfPq.save(m, _), IvfPq.appendToSaved(m, _, _, "embedding"))
+        IvfPq.save(m, _), IvfPq.appendToSaved(m, _, _, "embedding"),
+        IvfPq.load(spark, _, "vec_id").codes)
     },
     "ivf" -> (ivf(base, queries, batch, _)),
-    "ivf-float" -> (ivf(floatBase, floatQueries, floats(batch, "embedding"), _)))
+    "ivf-float" -> (ivf(floatBase, floatQueries, floats(batch, "embedding"), _)),
+    "gann" -> { metric =>
+      val m = GannIndex.build(base, "vec_id", "embedding", leafSize = 64,
+        spill = 0.15, nTrees = 3, metric = metric)
+      new Ops(m.assign, a => m.search(queries, "qid", "qv", K, allowedIds = a),
+        m.search(queries, "qid", "qv", K, beam = 4),
+        GannIndex.save(m, _), GannIndex.appendToSaved(m, _, _),
+        GannIndex.load(spark, _, "vec_id", "embedding").assign,
+        codesDir = "assign")
+    })
 
   private def ivf(in: DataFrame, qs: DataFrame, more: DataFrame,
       metric: String): Ops = {
@@ -120,7 +143,8 @@ class QuantizedParitySpec extends AnyFunSuite {
       a => m.search(qs, "qid", "qv", K, NProbe, allowedIds = a),
       sys.error("IVF-flat has no searchRerank"),
       IvfIndex.save(m, _), IvfIndex.appendToSaved(m, _, _),
-      codesDir = "assign", reranks = false, appended = more)
+      IvfIndex.load(spark, _, "vec_id", "embedding").assign,
+      codesDir = "assign", hasSecond = false, appended = more)
   }
 
   /** The saved vector type of the float input: l2 keeps the input's
@@ -128,8 +152,8 @@ class QuantizedParitySpec extends AnyFunSuite {
   private val storedType = Map(
     "ivf-float/l2" -> "array<float>", "ivf-float/cosine" -> "array<double>")
 
-  /** (codes, search, filtered search, rerank, appended codes) digests —
-    * no rerank digest for IVF-flat — and the saved layout, per
+  /** (codes, search, filtered search, second search, appended codes)
+    * digests — no second search for IVF-flat — and the saved layout, per
     * kind/metric. */
   private val expected: Map[String, (Seq[String], String)] = Map(
     "bq/l2" -> (Seq("7dbccb99ac1816c9", "50906d68735e074d", "909bf9f01aaadf16",
@@ -179,7 +203,20 @@ class QuantizedParitySpec extends AnyFunSuite {
       "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
     "ivf-float/cosine" -> (Seq("9b8f79962007434c", "0ca2058f2bf3a57b",
       "38352fd21f8d39d2", "d9a8f9a1dd73266d"),
-      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"))
+      "assign,centroids,meta|cluster=0,cluster=1,cluster=2,cluster=3"),
+    "gann/l2" -> (Seq("5efa41b4cc219fd5", "c6e70f961ed42711", "7177fd0754585fc8",
+      "c96959047a8389eb", "612dd600dcc7f0f0"),
+      "assign,meta,nodes|tree=0,tree=1,tree=2"),
+    "gann/cosine" -> (Seq("e595a92536d5b3c1", "c625b5f55dd53dbe", "a5521934e1546891",
+      "9a98c79832fd4675", "7db75148f5b1a475"),
+      "assign,meta,nodes|tree=0,tree=1,tree=2"))
+
+  /** Every kind's search output: qid as the query frame has it, the id
+    * cast back to its type, `dist` and a non-null `rnk`. */
+  private val SearchSchema = StructType(Seq(
+    StructField("qid", LongType, nullable = false),
+    StructField("vec_id", LongType), StructField("dist", DoubleType),
+    StructField("rnk", IntegerType, nullable = false)))
 
   private def render(v: Any): String = v match {
     case null => "null"
@@ -214,13 +251,17 @@ class QuantizedParitySpec extends AnyFunSuite {
       val dir = java.nio.file.Files
         .createTempDirectory(s"graft_parity_$kind").toString
       ops.save(dir)
+      val loadedColumns = ops.load(dir).columns.toSeq
       ops.append(dir, ops.appended)
       val saved = spark.read.parquet(s"$dir/${ops.codesDir}")
       val appended = saved.filter(col("vec_id") >= 600)
-      val got = (Seq(digest(ops.codes), digest(ops.search(None)),
-        digest(ops.search(Some(allowed)))) ++ ops.rerankOut.map(digest) :+
+      val out = ops.search(None)
+      val got = (Seq(digest(ops.codes), digest(out),
+        digest(ops.search(Some(allowed)))) ++ ops.secondOut.map(digest) :+
         digest(appended), layout(dir, ops.codesDir))
       assert(got === expected(s"$kind/$metric"))
+      assert(out.schema === SearchSchema)
+      assert(loadedColumns === ops.codes.columns.toSeq)
       storedType.get(s"$kind/$metric").foreach(t =>
         assert(saved.schema("embedding").dataType.simpleString === t))
     }
